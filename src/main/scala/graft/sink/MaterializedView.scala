@@ -90,9 +90,11 @@ object MaterializedView {
     val target = Paths.get(mvPath)
     val delta = deltaAgg.select(
       keyCols.map(col) ++ sumCols.map(c => col(c).cast(PartialType).as(c)): _*)
+    // the stored view has the delta's schema: reading it with that schema
+    // skips the parquet schema-inference job
     val merged =
       if (Files.exists(target))
-        spark.read.parquet(mvPath).unionByName(delta)
+        spark.read.schema(delta.schema).parquet(mvPath).unionByName(delta)
           .groupBy(keyCols.map(col): _*)
           .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
           .select(keyCols.map(col) ++ sumCols.map(c =>

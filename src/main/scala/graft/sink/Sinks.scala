@@ -1,8 +1,11 @@
 package graft.sink
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StringType}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.{DecimalType, StringType, StructType}
 
 /** Sinks (SURVEY.md §2.1 S4/S5/S7/S8), Spark-first.
   *
@@ -238,7 +241,17 @@ object Sinks {
     *    partition columns.
     *  - REPORTING: recomputed FROM RAW (never from the in-flight batch) and
     *    day-overwritten, so it converges to a pure function of RAW no
-    *    matter how many times a batch replays. */
+    *    matter how many times a batch replays. The affected days are the
+    *    `event_date=D/ingest_batch=<batchKey>` dirs the RAW write just
+    *    committed (a driver listing, no distinct job), and only those day
+    *    dirs are read back, with the batch's own data schema and the
+    *    partition columns inferred from the paths (no schema-inference
+    *    job).
+    *
+    * Per-batch cost: the RAW write (one job) plus the REPORTING refresh
+    * (its query's jobs), and driver work that does not grow with the
+    * table — the output file cap's footer sample re-reads only footers
+    * that are new since the last batch ([[observedRowWidth]]). */
   def warehouseBatch(batch: DataFrame, batchId: Long, rawPath: String,
       reportingPath: String, reporting: DataFrame => DataFrame,
       incremental: Boolean = true, lineage: String = "",
@@ -282,22 +295,23 @@ object Sinks {
       .option("maxRecordsPerFile",
         derivedMaxRecordsPerFile(spark, rawPath).toString)
       .partitionBy("event_date", "ingest_batch").parquet(rawPath)
+    // read-backs carry the batch's own data schema (no inference job);
+    // the partition columns are still inferred from the paths
+    val dataSchema = StructType(stamped.schema.filterNot(f =>
+      f.name == "event_date" || f.name == "ingest_batch"))
+    def readRaw(dirs: Seq[String]): DataFrame =
+      spark.read.schema(dataSchema).option("basePath", rawPath)
+        .parquet(dirs: _*).drop("event_date", "ingest_batch")
     if (incremental) {
-      val days = stamped.select("event_date").distinct()
-        .collect().map(_.getDate(0))
-      if (days.nonEmpty) {
-        val affected = spark.read.parquet(rawPath)
-          .filter(col("event_date").isin(days.toIndexedSeq: _*))
-          .drop("event_date", "ingest_batch")
-        reporting(affected)
+      val days = committedDays(rawPath, batchKey)
+      if (days.nonEmpty)
+        reporting(readRaw(days))
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("event_date")
           .parquet(reportingPath)
-      }
     } else {
-      val raw = spark.read.parquet(rawPath).drop("event_date", "ingest_batch")
-      val full = reporting(raw)
+      val full = reporting(readRaw(Seq(rawPath)))
       // keep the on-disk layout identical to incremental mode for
       // day-keyed aggregates, so toggling modes never mixes layouts
       val w = full.write.mode(SaveMode.Overwrite)
@@ -306,6 +320,33 @@ object Sinks {
       else w.parquet(reportingPath)
     }
   }
+
+  /** The `event_date=D` dirs of `rawPath` that hold an
+    * `ingest_batch=<batchKey>` partition: the days the batch's RAW write
+    * committed, taken from a driver listing instead of a distinct job
+    * over the batch. A torn earlier attempt of the same key can only add
+    * days whose RAW it changed, so refreshing them is still exact. The
+    * null-date partition (NULL `ts`) is skipped: the incremental refresh
+    * publishes real days only. */
+  private def committedDays(rawPath: String, batchKey: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val part = batchPartition(batchKey)
+    val days = java.nio.file.Files.list(java.nio.file.Paths.get(rawPath))
+    try days.iterator().asScala
+      .filter { d =>
+        val n = d.getFileName.toString
+        n.startsWith("event_date=") &&
+          n != s"event_date=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}" &&
+          java.nio.file.Files.isDirectory(d.resolve(part))
+      }
+      .map(_.toString).toSeq.sorted
+    finally days.close()
+  }
+
+  /** Directory name of a batch's `ingest_batch` partition, escaped the
+    * way Spark's writer escapes partition values. */
+  private def batchPartition(batchKey: String): String =
+    s"ingest_batch=${ExternalCatalogUtils.escapePathName(batchKey)}"
 
   /** Size-targeted shard writer — the corpus-export discipline: training
     * pipelines want shards near a target size (too many tiny files choke
@@ -351,8 +392,13 @@ object Sinks {
     * Idempotence inherits from the layout: the report overwrites its own
     * `ingest_batch=` partition, a replayed rejected batch replaces its own
     * rejected partitions, and a replayed good batch re-enters
-    * [[warehouseBatch]]'s replay contract. The report probe is bounded by
-    * the CONSTRAINT count (one row each), never data volume.
+    * [[warehouseBatch]]'s replay contract. The report is collected once —
+    * bounded by the CONSTRAINT count (one row each), never data volume —
+    * and both its write and the gate decision read those driver-side
+    * rows, so the gate costs the suite's own jobs plus one small write.
+    * A published batch therefore runs about nine jobs at test scale:
+    * suite, report write, RAW write and the REPORTING refresh (the
+    * `WarehouseSpec` job budget pins the count).
     *
     * LAYER ORDER is load-bearing: the per-row dead-letter split
     * (`quarantinePath`/`rules`) runs FIRST, so the constraint suite judges
@@ -390,17 +436,20 @@ object Sinks {
           .partitionBy("event_date", "ingest_batch").parquet(quarantinePath)
         ok
       }
-    val report = checks(valid).cache()
-    val allPassed =
-      try {
-        report.withColumn("ingest_batch", lit(batchKey))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(checksPath)
-        // fail closed: NULL passed (a constraint that never evaluated)
-        // blocks publication — !NULL is NULL and would slip a bare filter
-        report.filter(!coalesce(col("passed"), lit(false))).isEmpty
-      } finally report.unpersist()
+    import scala.jdk.CollectionConverters._
+    // the report is collected ONCE (one row per constraint); the write
+    // and the gate decision both read the driver-side rows
+    val report = checks(valid)
+    val rows = report.collect()
+    batch.sparkSession.createDataFrame(rows.toSeq.asJava, report.schema)
+      .coalesce(1).withColumn("ingest_batch", lit(batchKey))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch").parquet(checksPath)
+    // fail closed: NULL passed (a constraint that never evaluated)
+    // blocks publication
+    val passed = report.schema.fieldIndex("passed")
+    val allPassed = rows.forall(r => !r.isNullAt(passed) && r.getBoolean(passed))
     if (allPassed) {
       warehouseBatch(valid, batchId, rawPath, reportingPath, reporting,
         incremental, lineage)
@@ -430,7 +479,7 @@ object Sinks {
         val it = days.iterator()
         while (it.hasNext) {
           val day = it.next()
-          val part = day.resolve(s"ingest_batch=$batchKey")
+          val part = day.resolve(batchPartition(batchKey))
           if (java.nio.file.Files.isDirectory(part)) {
             graft.Fs.deleteRecursively(part)
             // prune a day dir this was the last batch of — an empty
@@ -794,41 +843,59 @@ object Sinks {
     * from the parquet FOOTERS — driver-side metadata reads only, no job
     * (the `ColumnBridge.parquetScanRowCount` discipline, but sampled so
     * the probe stays bounded however many files the table accumulates).
-    * None when the path has no non-empty parquet files yet, or on any
-    * footer-read failure (callers fall back to "no cap"). Feeds
-    * [[graft.Tuning.maxRecordsPerFile]] so output file sizing derives
-    * from METERED input bytes, not a local constant (r17 verdict #7). */
+    * Each sampled footer's row count is remembered by (path, size, mtime,
+    * file key), so a table that grows by a batch re-reads only the footers
+    * that entered or changed in its sample; at most one sample's entries
+    * are kept per table path. None when the path has no non-empty parquet
+    * files yet, or on any footer-read failure (callers fall back to "no
+    * cap"). Feeds [[graft.Tuning.maxRecordsPerFile]] so output file sizing
+    * derives from METERED input bytes, not a local constant (r17 verdict
+    * #7). */
   def observedRowWidth(spark: org.apache.spark.sql.SparkSession,
       path: String, sampleFiles: Int = 64): Option[(Long, Long)] = {
+    import java.nio.file.Files
+    import java.nio.file.attribute.BasicFileAttributes
     import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isDirectory(dir)) return None
+    if (!Files.isDirectory(dir)) return None
     val files = {
-      val walk = java.nio.file.Files.walk(dir)
+      val walk = Files.walk(dir)
       try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") &&
-          java.nio.file.Files.isRegularFile(p) &&
-          java.nio.file.Files.size(p) > 0)
-        .toSeq.sortBy(_.toString).take(sampleFiles)
+        .filter(_.toString.endsWith(".parquet"))
+        .map(p => p -> Files.readAttributes(p, classOf[BasicFileAttributes]))
+        .filter { case (_, a) => a.isRegularFile && a.size > 0 }
+        .toSeq.sortBy(_._1.toString).take(sampleFiles)
       finally walk.close()
     }
     if (files.isEmpty) None
     else try {
-      val conf = spark.sessionState.newHadoopConf()
-      var bytes = 0L; var rows = 0L
-      files.foreach { f =>
-        bytes += java.nio.file.Files.size(f)
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toUri), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val it = r.getFooter.getBlocks.iterator()
-          while (it.hasNext) rows += it.next().getRowCount
-        } finally r.close()
+      val table = dir.toAbsolutePath.normalize.toString
+      val known = footerRows.getOrDefault(table, Map.empty)
+      lazy val conf = spark.sessionState.newHadoopConf()
+      val sample = files.map { case (f, a) =>
+        val stamp = (a.size, a.lastModifiedTime, a.fileKey)
+        val rows = known.get(f.toString).collect {
+          case (s, n) if s == stamp => n
+        }.getOrElse {
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+          finally r.close()
+        }
+        f.toString -> (stamp, rows)
       }
+      footerRows.put(table, sample.toMap)
+      val bytes = files.map(_._2.size).sum
+      val rows = sample.map(_._2._2).sum
       if (rows <= 0) None else Some((bytes, rows))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
+
+  /** Footer row counts behind [[observedRowWidth]]: table path → sampled
+    * file path → ((size, mtime, file key), rows). */
+  private val footerRows = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, ((Long, java.nio.file.attribute.FileTime, AnyRef), Long)]]
 
   /** [[graft.Tuning.maxRecordsPerFile]] over [[observedRowWidth]] of an
     * existing parquet path: the per-write file-size cap the warehouse

@@ -14,6 +14,10 @@ import graft.sink.Sinks
 class WarehouseSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Spark jobs one [[Sinks.warehouseBatchChecked]] call may launch on a
+    * table that already holds earlier batches. */
+  private val WarehouseBatchJobBudget = 9
+
   private def ts(s: String) = Timestamp.valueOf(s)
 
   // the partitioned read-back surfaces event_date LAST — select by name
@@ -203,7 +207,7 @@ class WarehouseSpec extends SparkSpec {
         (read.get(), readBytes.get())
       }
       // 12 RAW rows on disk by batch 4, but batch 4 still reads only its
-      // own day (3 rows + stream/day-list re-reads) — a full-history
+      // own day (3 rows + the stream's re-reads) — a full-history
       // refresh would make the series grow by ≥3 rows per batch
       assert(spark.read.parquet(raw).count() == 12)
       assert(perBatch.last._1 < perBatch.head._1 + 3,
@@ -248,6 +252,141 @@ class WarehouseSpec extends SparkSpec {
     assert(reportingMap(rep) == Map(
       java.sql.Date.valueOf("2024-01-01") -> 12.5,
       java.sql.Date.valueOf("2024-01-02") -> 5.0))
+  }
+
+  test("warehouseBatchChecked job budget; REPORTING refreshes exactly the batch's days") {
+    import graft.ops.Checks
+    val raw = Files.createTempDirectory("graft-jb-raw").toString
+    val rep = Files.createTempDirectory("graft-jb-rep").toString
+    val chk = Files.createTempDirectory("graft-jb-chk").toString
+    val rej = Files.createTempDirectory("graft-jb-rej").toString
+    def run(b: org.apache.spark.sql.DataFrame, id: Long) =
+      Sinks.warehouseBatchChecked(b, id, raw, rep,
+        EventQueries.dailyRevenue, Checks.dataChecks, chk, rej)
+    def ev(id: Long, day: Int, kind: String, v: Double) =
+      PropEvent(id, ts(f"2024-01-$day%02d 10:00:00"), id, kind, v, "{}")
+    // earlier batches: RAW and REPORTING already hold days 1..5
+    run(Seq(ev(1, 1, "purchase", 1.0), ev(2, 2, "purchase", 2.0)).toDF(), 0L)
+    run(Seq(ev(3, 3, "purchase", 3.0), ev(4, 4, "purchase", 4.0),
+      ev(5, 5, "purchase", 5.0)).toDF(), 1L)
+    def files(): Map[String, Set[String]] =
+      new java.io.File(rep).listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> d.list().toSet).toMap
+    val before = files()
+    // a batch spanning three days: two already published, one new
+    val batch = Seq(ev(10, 2, "purchase", 20.0), ev(11, 4, "view", 9.0),
+      ev(12, 6, "purchase", 6.5), ev(13, 6, "purchase", 0.25)).toDF()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.ColumnBridge.waitForListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      run(batch, 2L)
+      org.apache.spark.sql.graft.ColumnBridge.waitForListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    // gate: the suite's jobs + one local report write; RAW write; the
+    // REPORTING refresh. No schema inference, no distinct over the batch,
+    // no second probe of the report.
+    assert(jobs.get <= WarehouseBatchJobBudget,
+      s"${jobs.get} jobs for one checked batch (budget $WarehouseBatchJobBudget)")
+    val after = files()
+    val touched = Seq(2, 4, 6).map(d => f"event_date=2024-01-$d%02d").toSet
+    assert(after.keySet == before.keySet + "event_date=2024-01-06")
+    after.foreach { case (day, names) =>
+      if (touched(day)) assert(before.get(day) != Some(names),
+        s"$day was not refreshed")
+      else assert(before(day) == names, s"$day was rewritten")
+    }
+    val fromRaw = EventQueries.dailyRevenue(spark.read.parquet(raw)
+        .drop("event_date", "ingest_batch"))
+      .select("event_date", "total_revenue")
+      .as[(java.sql.Date, Double)].collect().toMap
+    assert(reportingMap(rep) == fromRaw)
+    assert(fromRaw(java.sql.Date.valueOf("2024-01-02")) == 22.0)
+    assert(fromRaw(java.sql.Date.valueOf("2024-01-06")) == 6.75)
+  }
+
+  test("an all-quarantined batch publishes no REPORTING and does not throw") {
+    import graft.ops.Checks
+    import graft.ingest.Cleaning
+    val raw = Files.createTempDirectory("graft-aq-raw").toString
+    val rep = Files.createTempDirectory("graft-aq-rep").toString
+    val chk = Files.createTempDirectory("graft-aq-chk").toString
+    val rej = Files.createTempDirectory("graft-aq-rej").toString
+    val qua = Files.createTempDirectory("graft-aq-qua").toString
+    val batch = Seq(
+      PropEvent(1, ts("2024-01-01 10:00:00"), 1, "purchase", -3.0, "{}"),
+      PropEvent(2, ts("2024-01-02 10:00:00"), 2, "error", 1.0, "{}")).toDF()
+    Sinks.warehouseBatchChecked(batch, 0L, raw, rep,
+      EventQueries.dailyRevenue, Checks.dataChecks, chk, rej,
+      quarantinePath = qua, rules = Cleaning.standardEventRules)
+    assert(spark.read.parquet(qua).count() == 2)
+    def partitions(p: String) = new java.io.File(p).listFiles()
+      .count(_.getName.startsWith("event_date"))
+    assert(partitions(raw) == 0, "empty valid half wrote RAW partitions")
+    assert(partitions(rep) == 0, "empty valid half wrote REPORTING")
+    assert(partitions(rej) == 0, "empty valid half was rejected")
+  }
+
+  test("observedRowWidth's footer cache equals a cold computation") {
+    import scala.jdk.CollectionConverters._
+    val raw = Files.createTempDirectory("graft-rw-raw").toString
+    val rep = Files.createTempDirectory("graft-rw-rep").toString
+    val sampleFiles = 4
+    // the definition, computed from scratch: first sampleFiles non-empty
+    // parquet files by path, their bytes and footer rows
+    def cold(): Option[(Long, Long)] = {
+      val walk = Files.walk(java.nio.file.Paths.get(raw))
+      val files = try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".parquet") &&
+          Files.isRegularFile(p) && Files.size(p) > 0)
+        .toSeq.sortBy(_.toString).take(sampleFiles)
+      finally walk.close()
+      val conf = spark.sessionState.newHadoopConf()
+      val rows = files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally r.close()
+      }.sum
+      if (files.isEmpty) None else Some((files.map(Files.size(_)).sum, rows))
+    }
+    def width() = Sinks.observedRowWidth(spark, raw, sampleFiles)
+    def batch(id: Long, n: Int) = (0 until n).map(k => PropEvent(id * 100 + k,
+      ts(f"2024-01-${id + 1}%02d 10:00:00"), k, "purchase", 1.0 + k, "{}"))
+      .toDF().coalesce(1)
+    (0L until 6L).foreach { id =>
+      Sinks.warehouseBatch(batch(id, 2), id, raw, rep, EventQueries.dailyRevenue)
+      assert(width() == cold(), s"after batch $id")
+    }
+    val parquetFiles = Files.walk(java.nio.file.Paths.get(raw)).iterator()
+      .asScala.count(_.toString.endsWith(".parquet"))
+    assert(parquetFiles > sampleFiles)
+    // a replayed batch replaces sampled files with different ones
+    assert(width() == cold())
+    Sinks.warehouseBatch(batch(0, 7), 0L, raw, rep, EventQueries.dailyRevenue)
+    assert(width() == cold(), "after replaying batch 0")
+    // a sampled file replaced IN PLACE (same path, new size and mtime)
+    val walk = Files.walk(java.nio.file.Paths.get(raw))
+    val sorted = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
+    finally walk.close()
+    val (first, replayed) = (sorted(1), sorted.head)
+    assert(Files.size(first) != Files.size(replayed))
+    val before = width()
+    // the checksum sidecar travels with the data, as a real rewrite's does
+    def crc(p: java.nio.file.Path) = p.resolveSibling(s".${p.getFileName}.crc")
+    Seq(replayed -> first, crc(replayed) -> crc(first)).foreach { case (a, b) =>
+      Files.copy(a, b, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    assert(width() == cold(), "after an in-place replacement")
+    assert(width() != before)
   }
 
   test("dead-letter layer: quarantined rows split out, replay idempotent") {
