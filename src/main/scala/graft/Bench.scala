@@ -3,25 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // STATIC conf (read once at first session): the compiled-codegen-class
-      // cache defaults to 100 entries, and a 135-query suite × several
-      // WholeStageCodegen stages each churns through that — both interleaved
-      // passes then pay Janino recompilation instead of running hot (the r7
-      // q_sequence_packing "regression": 1.07 s suite-context vs 0.46 s
-      // steady-state; the plan never changed). Sized to hold the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      // long-lived multi-query driver: cap the on-heap status stores
-      // (the r14 heap-aging residual; see Tuning.statusStoreRetention)
-      .config(Tuning.statusStoreRetention)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT/codegen + parquet reader paths, so the first
     // measured query doesn't absorb JVM startup cost.
@@ -48,7 +31,7 @@ object Bench {
     // single-section experiments need the same capacity evidence);
     // fields and behavior identical to the r15 in-line version
     def loadavg(): String = HostProbe.loadavg()
-    val probeThreads = cpus.toInt
+    val probeThreads = cpus
     def cpuProbe(): HostProbe.Probe = HostProbe.run(probeThreads)
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     val loadStart = loadavg()

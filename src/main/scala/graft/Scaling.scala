@@ -91,19 +91,8 @@ object Scaling {
     require(Runtime.getRuntime.maxMemory > (24L << 30),
       "graft.Scaling needs a large heap: rerun with SPARK_DRIVER_MEM=32g " +
         s"(max heap is ${Runtime.getRuntime.maxMemory >> 20} MiB)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      // long-lived multi-query driver: cap the on-heap status stores
-      // (the r14 heap-aging residual; see Tuning.statusStoreRetention)
-      .config(Tuning.statusStoreRetention)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val dirs = Scales.map(c => c -> s"$work/x$c").toMap
@@ -210,7 +199,7 @@ object Scaling {
         th().queryExecution.toRdd.count()
         (System.nanoTime() - t0) / 1e9
       }
-      val nThreads = cpus.toInt
+      val nThreads = cpus
       val p0 = HostProbe.run(nThreads)
       val pass1 = cells.map { case (k, th) => k -> onceTimed(th) }.toMap
       val pMid = HostProbe.run(nThreads)

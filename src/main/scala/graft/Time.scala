@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: steady-state wall time of one or more queries (min of
   * `SPARK_GRAFT_REPS`, default 3, after one warmup) — the per-query
   * microscope Bench's full-suite pass is too coarse for.
@@ -12,26 +10,15 @@ object Time {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // long-lived multi-query driver: cap the on-heap status stores
-      // (the r14 heap-aging residual; see Tuning.statusStoreRetention)
-      .config(Tuning.statusStoreRetention)
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
-    val gcBetween = sys.env.get("SPARK_GRAFT_GC").contains("1")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       def once(): Double = {
-        if (gcBetween) { System.gc(); Thread.sleep(200) }
+        System.gc(); Thread.sleep(100) // untimed isolation, as Bench.once
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
         (System.nanoTime() - t0) / 1e9

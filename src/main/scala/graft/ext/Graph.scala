@@ -17,13 +17,6 @@ import org.apache.spark.sql.graft.ColumnBridge
   * loop. */
 object Graph {
 
-  /** Measurement-only in-loop plan capture (env `GRAFT_GRAPH_ROUND_PLANS`
-    * = target dir): the per-round `localCheckpoint` SEVERS lineage (r13
-    * rule), so the committed post-loop plan dumps cannot show whether the
-    * pre-partitioned edge list is re-exchanged inside the loop — this
-    * writes the EXECUTED plan of each round's update frame (captured
-    * right after the eager checkpoint ran it) so the claim is provable
-    * from a committed artifact (r17 verdict #3). Off by default. */
   /** `localCheckpoint` that PRESERVES the frame's hash partitioning into
     * the checkpointed `LogicalRDD` (r18, measured): with AQE enabled the
     * executed plan is an `AdaptiveSparkPlanExec` wrapper and
@@ -47,23 +40,15 @@ object Graph {
     try df.localCheckpoint() finally spark.conf.set(key, prev)
   }
 
-  /** Rows per PINNED loop partition (~128 MB of (long, long) rows — the
-    * guide §2.2 100 MB–1 GB band). A pinned checkpoint opts out of AQE
-    * coalescing (that is the point — see [[checkpointPinned]]), so its
-    * partition count must be derived from the COUNTED input instead of
-    * the session conf: the conf value is the cluster-scale knob, and
-    * pinning a 2 k-row test graph to 32 partitions makes every one of
-    * the loop's ~40 stages pay a 32-task scheduling floor (measured:
-    * q_pagerank_exact 4.3 → 9.4 s at sf0.1). Scale-adaptive count =
-    * clamp(rows / this, 1, conf shuffle partitions) — 1 at test SF,
-    * the conf knob at 100 TB. */
-  val LoopRowsPerPartition = 8L * 1000 * 1000
-
-  private def loopParts(rows: Long, confParts: Int): Int =
-    math.max(1L, math.min(confParts.toLong,
-      (rows + LoopRowsPerPartition - 1) / LoopRowsPerPartition)).toInt
-
   private val roundPlanDir = sys.env.get("GRAFT_GRAPH_ROUND_PLANS")
+
+  /** Measurement-only in-loop plan capture (env `GRAFT_GRAPH_ROUND_PLANS`
+    * = target dir): the per-round `localCheckpoint` SEVERS lineage (r13
+    * rule), so the committed post-loop plan dumps cannot show whether the
+    * pre-partitioned edge list is re-exchanged inside the loop — this
+    * writes the EXECUTED plan of each round's update frame (captured
+    * right after the eager checkpoint ran it) so the claim is provable
+    * from a committed artifact (r17 verdict #3). Off by default. */
   private def dumpRoundPlan(algo: String, round: Int,
       df: DataFrame): Unit =
     roundPlanDir.foreach { dir =>

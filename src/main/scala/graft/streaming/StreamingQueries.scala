@@ -34,21 +34,6 @@ object StreamingQueries {
   private val sentinelCache =
     new scala.collection.concurrent.TrieMap[String, java.nio.file.Path]
 
-  /** Measurement-only phase timer (env `GRAFT_STREAM_PHASES=1`): prints
-    * per-entry harness-phase walls (setup / start / drain / stop) to
-    * stderr so the streaming coordination floor can be attributed to a
-    * phase instead of guessed at (guide §1 — measure first). Off by
-    * default; zero cost on the normal path. */
-  private val phaseLog = sys.env.get("GRAFT_STREAM_PHASES").contains("1")
-  @inline private def phase[T](entry: String, name: String)(f: => T): T =
-    if (!phaseLog) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally System.err.println(
-        f"[sphase] $entry%-28s $name%-10s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    }
-
   /** Runs `transform` over a file-streamed view of `<sfDir>/events.parquet`
     * and materializes the result (memory sink) as a batch frame. The file
     * source wants a directory, so the single parquet file is symlinked into
@@ -91,8 +76,7 @@ object StreamingQueries {
     graft.ingest.Sources.pinTimestampSemantics(spark)
     val srcDir = Files.createTempDirectory(s"graft-src-$name")
     Files.createSymbolicLink(srcDir.resolve(s"$table.parquet"), path)
-    val schema = phase(name, "schema") {
-      spark.read.parquet(path.toString).schema }
+    val schema = spark.read.parquet(path.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val ck = Files.createTempDirectory(s"graft-ck-$name").toString
@@ -103,20 +87,20 @@ object StreamingQueries {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     val q =
-      try phase(name, "start") {
+      try {
         val writer = transform(stream).writeStream
           .outputMode(mode)
           .format("memory").queryName(name)
           .option("checkpointLocation", ck)
         trigger.fold(writer)(writer.trigger).start()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try { phase(name, "drain")(q.processAllAvailable()); onDrained(q) }
+    try { q.processAllAvailable(); onDrained(q) }
     finally {
       // the memory sink holds the rows; the per-run source/checkpoint
       // dirs are dead — reap them (the q_minhash_incremental discipline).
       // stop() can rethrow a terminal stream error, so the deletes live
       // in their own finally and are individually best-effort.
-      try phase(name, "stop")(q.stop()) finally {
+      try q.stop() finally {
         graft.Fs.deleteQuietly(srcDir)
         graft.Fs.deleteQuietly(ck)
       }
@@ -160,7 +144,7 @@ object StreamingQueries {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     val q =
-      try phase(name, "start") {
+      try {
         transform(graft.ingest.Sources.normalizeEvents(stream)).writeStream
           .outputMode("append")
           .format("memory").queryName(name)
@@ -168,7 +152,7 @@ object StreamingQueries {
           .start()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     try {
-      phase(name, "drain1")(q.processAllAvailable())
+      q.processAllAvailable()
       // 2100-01-01T00:00:00Z in the raw file's ns-long encoding. TWO
       // sentinel rows, one per funnel side ('view' then 'purchase' 10 days
       // later): transforms pre-filter on event_type, and a filtered-out
@@ -212,12 +196,11 @@ object StreamingQueries {
         }
         part
       })
-      phase(name, "sentinel")(
-        Files.copy(cached, srcDir.resolve("zz-sentinel.parquet")))
-      phase(name, "drain2")(q.processAllAvailable())
+      Files.copy(cached, srcDir.resolve("zz-sentinel.parquet"))
+      q.processAllAvailable()
       onDrained(q)
     } finally {
-      try phase(name, "stop")(q.stop()) finally {
+      try q.stop() finally {
         graft.Fs.deleteQuietly(srcDir)
         graft.Fs.deleteQuietly(ck)
       }
