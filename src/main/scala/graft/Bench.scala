@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -11,7 +13,7 @@ object Bench {
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
     try SparkEntry.queries.get("q_validate_count")
       .foreach(f => f(spark, sfDir).count())
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // ---- host-state instrumentation (the r14 verdict's #1) ----------
     // The r14 lesson: this host suffers external contention waves that
@@ -65,7 +67,7 @@ object Bench {
           try q.processAllAvailable() finally q.stop()
           (System.nanoTime() - t0) / 1e9
         }.min
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         // -1.0 is the "probe broken" sentinel; log it so a permanently
         // failing probe is visible in the bench output, never silent
         System.err.println(s"[bench] harness-floor probe failed: $e")
@@ -78,21 +80,7 @@ object Bench {
     // running between two listener-bus drains. Bytes are plan-determined
     // (contention-immune, unlike wall time) — metered on the STEADY-STATE
     // second pass so one-time training/index I/O never charges the query.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong
-    val execCpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            inputBytes.addAndGet(m.inputMetrics.bytesRead)
-            execCpuNs.addAndGet(m.executorCpuTime)
-          }
-        }
-      })
+    val meter = Meter(spark)
     val shuffleMb = collection.mutable.Map[String, Double]()
     val inputMb = collection.mutable.Map[String, Double]()
     // Per-query ACHIEVED PARALLELISM (r15 verdict #1): Σ executorCpuTime
@@ -109,49 +97,32 @@ object Bench {
     // scheduling gaps between stages depress it; compare entries to their
     // own history, not to 32.
     val cpuPar = collection.mutable.Map[String, Double]()
-    // materialize the FULL physical plan (projections, sorts, limits):
-    // a plain count() would let Catalyst prune the very work being timed.
     // A failed run is reported as -1, never as a near-zero success.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // untimed cross-query isolation (the graft.Scaling r14 lesson):
-      // dead localCheckpoint/broadcast blocks from earlier entries linger
-      // until a GC runs ContextCleaner, and a huge heap may never GC —
-      // later memory-hungry aggregates then measure their neighbors'
-      // garbage, not their plan (4× observed at the 30× scale point)
-      System.gc(); Thread.sleep(100)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count(); (System.nanoTime() - t0) / 1e9 }
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try Meter.timeIsolated(fn(spark, sfDir))
+      // Throwable, not NonFatal: a deep Catalyst plan can throw
+      // StackOverflowError, and one entry must not abort the run
       catch { case t: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
         -1.0
       }
+    // a failed query records -1 sentinels in every per-query map, not
+    // the truncated run's bytes
+    def failed(name: String): Double = {
+      shuffleMb(name) = -1.0; inputMb(name) = -1.0; cpuPar(name) = -1.0
+      -1.0
     }
-    // `once` plus byte attribution: drain the listener bus on both sides
-    // of the run so concurrent-event bleed between queries is bounded to
-    // in-flight stragglers. The drain can time out (LiveListenerBus
-    // throws after 10s behind) — that degrades this query's metric, never
-    // the benchmark run. A failed query records -1 sentinels, not the
-    // truncated run's bytes.
-    def drain(): Unit =
-      try org.apache.spark.sql.graft.ColumnBridge
-        .waitForListeners(spark.sparkContext)
-      catch { case _: Throwable => () }
+    // `once` plus byte attribution
     def onceMetered(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      drain()
-      val s0 = shuffleBytes.get(); val i0 = inputBytes.get()
-      val c0 = execCpuNs.get()
-      val t = once(name, fn)
-      drain()
-      if (t < 0) {
-        shuffleMb(name) = -1.0; inputMb(name) = -1.0; cpuPar(name) = -1.0
-      }
+      val (t, u) = meter.run(once(name, fn))
+      if (t < 0) failed(name)
       else {
-        shuffleMb(name) = (shuffleBytes.get() - s0) / 1e6
-        inputMb(name) = (inputBytes.get() - i0) / 1e6
-        cpuPar(name) = if (t > 0) (execCpuNs.get() - c0) / 1e9 / t else -1.0
+        shuffleMb(name) = u.shuffleMb
+        inputMb(name) = u.inputMb
+        cpuPar(name) = if (t > 0) u.cpuNs / 1e9 / t else -1.0
+        t
       }
-      t
     }
     // Two INTERLEAVED passes over the whole suite, per-query min: pass 1
     // absorbs JIT/codegen warmup (first touch of each operator family in
@@ -170,9 +141,7 @@ object Bench {
     val loadMid = loadavg()
     val probeMid = cpuProbe()
     val pass2 = names.map { n =>
-      n -> (if (pass1(n) < 0) {
-        shuffleMb(n) = -1.0; inputMb(n) = -1.0; -1.0
-      } else onceMetered(n, queries(n)))
+      n -> (if (pass1(n) < 0) failed(n) else onceMetered(n, queries(n)))
     }.toMap
     // Auto-rerun (r14 verdict #1c): when the STEADY pass reads >2× the
     // COLD pass, pass 2 was very likely taken inside a contention wave —
@@ -249,7 +218,7 @@ object Bench {
     val line = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"total_comparable":${failures == 0},"calibration":${r3(calibration)},"cal_adjusted_total":$calAdjTotal,"harness_floor_sec":$harnessFloor,"sf":"$sfDir","host":$host,"flagged_rerun":$flaggedJson,"queries":$qs,"pass1":${passMap(pass1)},"pass2":${passMap(pass2)},"rerun":${passMap(pass3)},"cal_adjusted":$calAdj,"shuffle_mb":${mbMap(shuffleMb)},"input_mb":${mbMap(inputMb)},"cpu_par":${parMap(cpuPar)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_results.json"),
       (line + "\n").getBytes("UTF-8"))
-    catch { case t: Throwable =>
+    catch { case NonFatal(t) =>
       System.err.println(s"[bench] could not write bench_results.json: $t") }
     println(line)
     // The LAST stdout line is a COMPACT headline — totals only, NO per-query
@@ -289,7 +258,7 @@ object Bench {
     val headline = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"total_comparable":${failures == 0},"calibration":${r3(calibration)},"cal_adjusted_total":$calAdjTotal,"harness_floor_sec":$harnessFloor,"sf":"$sfDir","host":$host,"flagged_rerun_n":${flagged.size},"n_queries":${results.size},"slowest":$slowest,"slowest_cpu_par":$slowestPar,"queries_file":"bench_results.json"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_headline.json"),
       (headline + "\n").getBytes("UTF-8"))
-    catch { case t: Throwable =>
+    catch { case NonFatal(t) =>
       System.err.println(s"[bench] could not write bench_headline.json: $t") }
     println(headline)
     spark.stop()

@@ -13,6 +13,8 @@ object Explain {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      // Throwable, not NonFatal: a deep Catalyst plan can throw
+      // StackOverflowError, and one entry must not abort the run
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Latched N-way pure-CPU host probe, shared by [[Bench]] and
   * [[Scaling]] (r16: the Scaling single-section experiments measured
   * wall swings of 2–3× between byte-identical runs — route-crossover
@@ -22,14 +24,14 @@ object HostProbe {
   def loadavg(): String =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim
-    catch { case _: Throwable => "n/a" }
+    catch { case NonFatal(_) => "n/a" }
 
   private def procStat(): Array[Long] =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
       try src.getLines().next().split("\\s+").drop(1).map(_.toLong)
       finally src.close()
-    } catch { case _: Throwable => Array.empty[Long] }
+    } catch { case NonFatal(_) => Array.empty[Long] }
 
   /** 150M dependent-LCG steps/thread ≈ 0.2–0.3 s calm — long enough
     * that thread-start skew amortizes, short enough to bracket a run
@@ -38,7 +40,7 @@ object HostProbe {
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
     val cpuTimeOk =
       try mx.isThreadCpuTimeSupported && mx.isThreadCpuTimeEnabled
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
     val sink = new java.util.concurrent.atomic.AtomicLong
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     val gate = new java.util.concurrent.CountDownLatch(1)

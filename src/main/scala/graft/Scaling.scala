@@ -98,58 +98,38 @@ object Scaling {
     val dirs = Scales.map(c => c -> s"$work/x$c").toMap
     Scales.foreach(c => generate(spark, sf01, dirs(c), copies = c))
 
-    // shuffle meter (the Bench listener, minus per-query input MB):
-    // BYTES are serialized+compressed, RECORDS are logical rows — a
-    // bytes ratio above the records ratio is a compression-density
-    // artifact (bigger key spaces compress worse), not extra plan work
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shuffleRecords.addAndGet(m.shuffleReadMetrics.recordsRead)
-          }
-        }
-      })
-    def drain(): Unit =
-      try org.apache.spark.sql.graft.ColumnBridge
-        .waitForListeners(spark.sparkContext)
-      catch { case _: Throwable => () }
+    // shuffle meter (Bench's, read for shuffle only): BYTES are
+    // serialized+compressed, RECORDS are logical rows — a bytes ratio
+    // above the records ratio is a compression-density artifact (bigger
+    // key spaces compress worse), not extra plan work
+    val meter = Meter(spark)
 
     val queries = SparkEntry.queries
     // interleaved two-pass min per (query, scale), shuffle metered on the
     // steady-state pass (the Bench discipline)
     case class M(sec: Double, shuffleMb: Double, records: Long)
+    // the steady-state pass: `b` metered, the wall the min with `a`
+    def steady(a: Double, b: => Double): M = {
+      val (t, u) = meter.run(b)
+      M(math.min(a, t), u.shuffleMb, u.shuffleReadRecords)
+    }
     def measure(name: String, dir: String): M = {
       def once(): Double = {
-        // cross-query isolation (r14, MEASURED): without this, garbage
-        // from earlier queries (superseded checkpoints, broadcasts,
-        // shuffle deps) waits for a GC that a big heap may never run,
-        // and ContextCleaner never releases it. The GC runs OUTSIDE the
-        // timed region: it removes harness-ordering interference, it
-        // does not subsidize the query. (The JIT-level aging residual is
-        // handled by ScaleQueries' measurement ORDER — see its scaladoc.)
-        System.gc(); Thread.sleep(200)
+        // cross-query isolation (r14, MEASURED; Meter.isolate): it runs
+        // OUTSIDE the timed region, so it removes harness-ordering
+        // interference and does not subsidize the query. (The JIT-level
+        // aging residual is handled by ScaleQueries' measurement ORDER —
+        // see its scaladoc.)
+        Meter.isolate()
         val rt = Runtime.getRuntime
         System.err.println(f"[scalmem] $name%-26s $dir%-24s " +
           f"storage=${org.apache.spark.sql.graft.ColumnBridge
             .storageMemoryUsedBytes / 1e6}%9.1fMB " +
           f"live=${(rt.totalMemory - rt.freeMemory) / 1e6}%9.1fMB " +
           f"rdds=${spark.sparkContext.getPersistentRDDs.size}%4d")
-        val t0 = System.nanoTime()
-        queries(name)(spark, dir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
+        Meter.wallOf(queries(name)(spark, dir))
       }
-      val a = once()
-      drain(); val s0 = shuffleBytes.get(); val r0 = shuffleRecords.get()
-      val b = once()
-      drain()
-      M(math.min(a, b), (shuffleBytes.get() - s0) / 1e6,
-        shuffleRecords.get() - r0)
+      steady(once(), once())
     }
     val results = ScaleQueries
       .filter(n => filter.forall(_.findFirstIn(n).isDefined))
@@ -164,18 +144,7 @@ object Scaling {
     // Generic metered runner for ad-hoc frames (the measure() shape
     // without the SparkEntry indirection).
     def meterDf(tag: String)(df: => DataFrame): M = {
-      def once(): Double = {
-        System.gc(); Thread.sleep(200)
-        val t0 = System.nanoTime()
-        df.queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val a = once()
-      drain(); val s0 = shuffleBytes.get(); val r0 = shuffleRecords.get()
-      val b = once()
-      drain()
-      val m = M(math.min(a, b), (shuffleBytes.get() - s0) / 1e6,
-        shuffleRecords.get() - r0)
+      val m = steady(Meter.timeIsolated(df), Meter.timeIsolated(df))
       System.err.println(
         f"[scaling] $tag%-40s ${m.sec}%6.2fs ${m.shuffleMb}%8.1fMB ${m.records}%12d rec")
       m
@@ -193,22 +162,12 @@ object Scaling {
     // discipline extended to Scaling).
     def measureCells[K](cells: Seq[(K, () => DataFrame)],
         show: K => String): (Map[K, M], String) = {
-      def onceTimed(th: () => DataFrame): Double = {
-        System.gc(); Thread.sleep(200)
-        val t0 = System.nanoTime()
-        th().queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
       val nThreads = cpus
       val p0 = HostProbe.run(nThreads)
-      val pass1 = cells.map { case (k, th) => k -> onceTimed(th) }.toMap
+      val pass1 = cells.map { case (k, th) => k -> Meter.timeIsolated(th()) }.toMap
       val pMid = HostProbe.run(nThreads)
       val out = cells.map { case (k, th) =>
-        drain(); val s0 = shuffleBytes.get(); val r0 = shuffleRecords.get()
-        val t = onceTimed(th)
-        drain()
-        val m = M(math.min(pass1(k), t),
-          (shuffleBytes.get() - s0) / 1e6, shuffleRecords.get() - r0)
+        val m = steady(pass1(k), Meter.timeIsolated(th()))
         System.err.println(f"[scaling] ${show(k)}%-40s ${m.sec}%6.2fs " +
           f"${m.shuffleMb}%8.1fMB (cold ${pass1(k)}%.2fs)")
         k -> m
@@ -782,10 +741,8 @@ object Scaling {
         ((System.nanoTime() - t0) / 1e9, n)
       }
       val (a, _) = once()
-      drain(); val s0 = shuffleBytes.get()
-      val (b, n) = once()
-      drain()
-      (math.min(a, b), (shuffleBytes.get() - s0) / 1e6, n)
+      val ((b, n), u) = meter.run(once())
+      (math.min(a, b), u.shuffleMb, n)
     }
     val uncapped = Int.MaxValue
     val (pt, psh, ppairs) = measureOp("prefix")(

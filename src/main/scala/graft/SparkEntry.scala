@@ -1341,12 +1341,14 @@ object SparkEntry {
     // the Spark 4 transformWithState twin of q_funnel_conversions — same
     // machine on the modern arbitrary-state API, sharing the recursive-CTE
     // oracle verbatim: the hash gate is the fMGWS ≡ TWS equivalence proof.
-    // TWS executes only on the RocksDB state store; the confs stay set on
-    // the session (execution is lazy — the driver materializes after this
-    // function returns), which is also the production-recommended store.
-    "q_funnel_conversions_tws" -> ((s, dir) => {
-      import s.implicits._
+    // TWS executes only on the RocksDB state store, so the entry builds on
+    // a new session carrying it (execution is lazy and reads the frame's
+    // own session conf): the caller's session, and every stateful entry
+    // evaluated after this one, keep their own store.
+    "q_funnel_conversions_tws" -> ((caller, dir) => {
+      val s = caller.newSession()
       Tuning.rocksDbStateStore.foreach { case (k, v) => s.conf.set(k, v) }
+      import s.implicits._
       StreamingQueries.toConversionInput(Sources.events(s, dir))
         .transform(df => graft.streaming.FunnelStateTws.conversions(s,
           df.as[graft.streaming.FunnelState.In]).toDF())

@@ -17,12 +17,7 @@ object Time {
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      def once(): Double = {
-        System.gc(); Thread.sleep(100) // untimed isolation, as Bench.once
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = Meter.timeIsolated(fn(spark, sfDir))
       once() // warmup (training/artifact load charges here, not the timing)
       val best = (1 to reps).map(_ => once()).min
       println(f"[time] $n%-32s $best%8.3f s (min of $reps)")

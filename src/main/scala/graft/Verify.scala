@@ -52,6 +52,8 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
+      // Throwable, not NonFatal: a deep Catalyst plan can throw
+      // StackOverflowError; one entry must not abort the oracle_sql.json dump
       catch { case e: Throwable =>
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

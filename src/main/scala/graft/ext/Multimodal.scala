@@ -1,5 +1,7 @@
 package graft.ext
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -89,7 +91,7 @@ object Multimodal {
             r.reset(); r.setInput(iis)
             Option(r.read(0))
           } finally iis.close()
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       }
 
     /** Per-thread REUSED ImageWriters (r16, with the bench's new

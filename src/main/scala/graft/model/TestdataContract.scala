@@ -1,5 +1,7 @@
 package graft.model
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
@@ -96,7 +98,7 @@ object TestdataContract {
         try Right(
           if (name == "events") graft.ingest.Sources.events(spark, sfDir).schema
           else graft.ingest.Sources.table(spark, sfDir, name).schema)
-        catch { case t: Throwable =>
+        catch { case NonFatal(t) =>
           Left(s"$name: UNREADABLE (${t.getClass.getSimpleName}: ${t.getMessage})") }
       got match {
         case Left(err) => Some(err)

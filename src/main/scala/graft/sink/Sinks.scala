@@ -258,31 +258,8 @@ object Sinks {
       quarantinePath: String = null,
       rules: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
     val spark = batch.sparkSession
-    // replay of (lineage, batchId) replaces exactly its own partitions;
-    // distinct lineages (distinct checkpoints on a shared rawPath) never
-    // collide — see streamToWarehouse's salt derivation
-    val batchKey =
-      if (lineage.isEmpty) batchId.toString else s"$lineage-$batchId"
-    // DEAD-LETTER layer: rule-failing rows land under quarantinePath with
-    // the SAME (event_date, ingest_batch) dynamic-overwrite layout, so
-    // the replay-idempotence argument covers the quarantine verbatim
-    // (rules are deterministic → a replayed batch re-derives the same
-    // split and replaces exactly its own partitions). RAW and reporting
-    // see only the VALID half — the dashboard never averages a rule
-    // violation, and the dead letter is replayable for forensics.
-    val valid =
-      if (rules.isEmpty || quarantinePath == null) batch
-      else {
-        val (ok, bad) = graft.ingest.Cleaning.splitQuarantine(batch, rules)
-        bad.withColumn("event_date", to_date(col("ts")))
-          .withColumn("ingest_batch", lit(batchKey))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("event_date", "ingest_batch").parquet(quarantinePath)
-        ok
-      }
-    val stamped = valid.withColumn("event_date", to_date(col("ts")))
-      .withColumn("ingest_batch", lit(batchKey))
+    val batchKey = batchKeyOf(batchId, lineage)
+    val valid = quarantineSplit(batch, batchKey, quarantinePath, rules)
     // output file sizing from METERED input bytes (r17 verdict #7): the
     // per-file record cap derives from the raw table's own observed
     // on-disk row width (footer rows ÷ bytes, bounded sample), so at
@@ -290,14 +267,11 @@ object Sinks {
     // per (task, day); 0 before the first batch lands = Spark's "no
     // cap", and small local batches never reach the cap — the bench's
     // behavior is unchanged at test SF.
-    stamped.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile",
-        derivedMaxRecordsPerFile(spark, rawPath).toString)
-      .partitionBy("event_date", "ingest_batch").parquet(rawPath)
+    writeBatchPartitions(valid, batchKey, rawPath,
+      derivedMaxRecordsPerFile(spark, rawPath))
     // read-backs carry the batch's own data schema (no inference job);
     // the partition columns are still inferred from the paths
-    val dataSchema = StructType(stamped.schema.filterNot(f =>
+    val dataSchema = StructType(valid.schema.filterNot(f =>
       f.name == "event_date" || f.name == "ingest_batch"))
     def readRaw(dirs: Seq[String]): DataFrame =
       spark.read.schema(dataSchema).option("basePath", rawPath)
@@ -320,6 +294,45 @@ object Sinks {
       else w.parquet(reportingPath)
     }
   }
+
+  /** The `ingest_batch` value of one micro-batch: replay of (lineage,
+    * batchId) replaces exactly its own partitions, and distinct lineages
+    * (distinct checkpoints on a shared rawPath) never collide — see
+    * [[streamToWarehouse]]'s salt derivation. */
+  private def batchKeyOf(batchId: Long, lineage: String): String =
+    if (lineage.isEmpty) batchId.toString else s"$lineage-$batchId"
+
+  /** Writes `rows` under `path` in the batch layout every warehouse layer
+    * shares (RAW, quarantine, rejected): stamped with `event_date` (from
+    * `ts`) and `ingest_batch = batchKey`, partitioned by both, by DYNAMIC
+    * overwrite, so a replayed batch replaces exactly its own (day, batch)
+    * directories. `maxRecordsPerFile` 0 is Spark's "no cap". */
+  private def writeBatchPartitions(rows: DataFrame, batchKey: String,
+      path: String, maxRecordsPerFile: Long): Unit =
+    rows.withColumn("event_date", to_date(col("ts")))
+      .withColumn("ingest_batch", lit(batchKey))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("maxRecordsPerFile", maxRecordsPerFile.toString)
+      .partitionBy("event_date", "ingest_batch").parquet(path)
+
+  /** DEAD-LETTER layer: rule-failing rows of `batch` land under
+    * `quarantinePath` in the batch layout ([[writeBatchPartitions]]), so
+    * the replay-idempotence argument covers the quarantine verbatim
+    * (rules are deterministic → a replayed batch re-derives the same
+    * split and replaces exactly its own partitions). Returns the VALID
+    * half, the only rows RAW and reporting see — the dashboard never
+    * averages a rule violation, and the dead letter is replayable for
+    * forensics. No rules or no path: `batch` unchanged. */
+  private def quarantineSplit(batch: DataFrame, batchKey: String,
+      quarantinePath: String,
+      rules: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
+    if (rules.isEmpty || quarantinePath == null) batch
+    else {
+      val (ok, bad) = graft.ingest.Cleaning.splitQuarantine(batch, rules)
+      writeBatchPartitions(bad, batchKey, quarantinePath, 0L)
+      ok
+    }
 
   /** The `event_date=D` dirs of `rawPath` that hold an
     * `ingest_batch=<batchKey>` partition: the days the batch's RAW write
@@ -421,21 +434,10 @@ object Sinks {
       rejectedPath: String, incremental: Boolean = true,
       lineage: String = "", quarantinePath: String = null,
       rules: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
-    val batchKey =
-      if (lineage.isEmpty) batchId.toString else s"$lineage-$batchId"
+    val batchKey = batchKeyOf(batchId, lineage)
     // per-row dead-letter FIRST (see layer-order note above); the valid
     // half proceeds to the batch-level gate with rules already consumed
-    val valid =
-      if (rules.isEmpty || quarantinePath == null) batch
-      else {
-        val (ok, bad) = graft.ingest.Cleaning.splitQuarantine(batch, rules)
-        bad.withColumn("event_date", to_date(col("ts")))
-          .withColumn("ingest_batch", lit(batchKey))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("event_date", "ingest_batch").parquet(quarantinePath)
-        ok
-      }
+    val valid = quarantineSplit(batch, batchKey, quarantinePath, rules)
     import scala.jdk.CollectionConverters._
     // the report is collected ONCE (one row per constraint); the write
     // and the gate decision both read the driver-side rows
@@ -459,12 +461,7 @@ object Sinks {
       // batch. Same idempotence discipline as the dynamic overwrite: the
       // batchKey owns its partitions in EVERY layer it ever touched.
       dropBatchPartitions(rejectedPath, batchKey)
-    } else
-      valid.withColumn("event_date", to_date(col("ts")))
-        .withColumn("ingest_batch", lit(batchKey))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_date", "ingest_batch").parquet(rejectedPath)
+    } else writeBatchPartitions(valid, batchKey, rejectedPath, 0L)
   }
 
   /** Deletes the `ingest_batch=<batchKey>` partition dir under every

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -120,7 +122,7 @@ object ColumnBridge {
               } finally r.close()
             }
             Some(rows)
-          } catch { case _: Throwable => None }
+          } catch { case NonFatal(_) => None }
         case _ => None
       }
       case _ => None

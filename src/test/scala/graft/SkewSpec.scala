@@ -65,62 +65,51 @@ class SkewSpec extends SparkSpec {
     val docs = (0 until hotCount)
       .map(i => (i.toLong, s"u${i}a u${i}b h1 h2 h3 h4 h5"))
       .toDF("doc_id", "text")
-    val taskReads =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          taskReads.add((e.stageId,
-            e.taskMetrics.shuffleReadMetrics.recordsRead))
-    }
-    def measure(action: => Unit): Seq[Long] = {
-      taskReads.clear()
-      action
-      org.apache.spark.sql.graft.ColumnBridge
-        .waitForListeners(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      taskReads.asScala.map(_._2).toSeq
+    val meter = Meter(spark)
+    // the largest shuffle-read record count of any one task of `action`
+    def maxTaskRead(action: => Unit): Long = {
+      val (_, u) = meter.run(action)
+      assert(u.tasks > 0, "no task ran")
+      u.peakTaskShuffleRecords
     }
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.sparkContext.addSparkListener(listener)
     try {
       // the production span pass: every doc must see its hot window flagged
-      val spanReads = measure {
+      val spanReads = maxTaskRead {
         val out = Dedup.dupNgramSpans(docs, width = 5)
           .filter(col("n_dup_windows") >= 1).count()
         assert(out == hotCount, s"hot window not flagged everywhere: $out")
       }
-      assert(spanReads.nonEmpty && spanReads.max < hotCount,
-        s"dupNgramSpans: a task ingested ${spanReads.max} shuffled rows — " +
+      assert(spanReads < hotCount,
+        s"dupNgramSpans: a task ingested $spanReads shuffled rows — " +
           s"the hot key (${hotCount} occurrences) was co-located")
       // the DF-capped jaccard pass: hot shingle df=2000 > cap → discarded,
       // and discarding it must not require co-locating it first
-      val jacReads = measure {
+      val jacReads = maxTaskRead {
         Dedup.ngramJaccardPairsAtLeast(docs, minJaccard = 0.5,
           maxShingleDf = 1000).count()
       }
-      assert(jacReads.nonEmpty && jacReads.max < hotCount,
-        s"jaccardPairsCore: a task ingested ${jacReads.max} shuffled rows")
+      assert(jacReads < hotCount,
+        s"jaccardPairsCore: a task ingested $jacReads shuffled rows")
       // the documented failure mode, demonstrated: a window-function df
       // (partitionBy the shingle hash) must co-locate every occurrence of
       // the boilerplate hash in ONE task's sort
-      val winReads = measure {
+      val winReads = maxTaskRead {
         docs.select(col("doc_id"),
             explode(TextExpressions.shingleHashes(col("text"), 5)).as("h"))
           .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
           .filter(col("df") >= 2).count()
       }
-      assert(winReads.max >= hotCount,
+      assert(winReads >= hotCount,
         s"expected the window form to co-locate the hot key " +
-          s"(max task read ${winReads.max} < $hotCount) — if this starts " +
+          s"(max task read $winReads < $hotCount) — if this starts " +
           "failing, Spark learned to skew-split windows and the round-6 " +
           "shape rule should be revisited")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      meter.close()
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }

@@ -76,4 +76,39 @@ class SparkEntrySpec extends SparkSpec with BeforeAndAfterAll {
     assert(sqlA.contains(firstPattern(merges(dirA))),
       "dirA mirror is missing dirA's first merge pattern")
   }
+
+  /** The registered entries without a DuckDB mirror, each checked by its
+    * own spec instead of the hash gate. */
+  private val NoOracle = Map(
+    "q_compression_quality" -> "DEFLATE ratios are JVM-deterministic but not portable SQL",
+    "q_dau_approx" -> "HyperLogLog++ estimate",
+    "q_dup_clusters_lsh" -> "LSH banding recall is hash-dependent",
+    "q_embedding_neardups" -> "sign-LSH buckets are hash-dependent",
+    "q_ivf_knn" -> "probed cells depend on k-means training",
+    "q_knn_int8" -> "int8 quantization rounding is engine-specific",
+    "q_lsh_knn" -> "sign-LSH candidates are hash-dependent",
+    "q_minhash_incremental" -> "minhash-estimated jaccard is hash-dependent",
+    "q_minhash_neardups" -> "minhash banding recall is hash-dependent",
+    "q_pq_knn" -> "codebook reconstruction error is training-dependent",
+    "q_price_quantiles_sketch" -> "approx_percentile sketch estimate",
+    "q_profile_docs_approx" -> "HyperLogLog distinct counts",
+    "q_rolling_dau_sketch" -> "HyperLogLog sketch union estimate",
+    "q_simhash_neardups" -> "simhash bands are hash-dependent",
+    "q_stream_dau_bounded" -> "watermark eviction makes re-emission batch-order-dependent")
+
+  test("every registered entry has a DuckDB mirror or a stated reason it has none") {
+    val registered = SparkEntry.queries.keySet
+    val mirrored = SparkEntry.oracleSql.keySet
+    assert(mirrored.subsetOf(registered),
+      s"mirrors without an entry: ${(mirrored -- registered).toSeq.sorted}")
+    assert(registered -- mirrored == NoOracle.keySet)
+  }
+
+  test("q_funnel_conversions_tws leaves the caller's state-store conf untouched") {
+    val caller = spark.newSession()
+    val before = Tuning.rocksDbStateStore.keys.map(k => k -> caller.conf.getOption(k)).toMap
+    assert(!before.values.flatten.exists(_.contains("RocksDB")))
+    SparkEntry.queries("q_funnel_conversions_tws")(caller, dirA).collect()
+    assert(Tuning.rocksDbStateStore.keys.map(k => k -> caller.conf.getOption(k)).toMap == before)
+  }
 }

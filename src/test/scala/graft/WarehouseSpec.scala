@@ -182,16 +182,7 @@ class WarehouseSpec extends SparkSpec {
     // over batch — the bytes series is the guard that survives refactors
     // which keep row counts flat but re-scan history (e.g. a filter that
     // no longer prunes partitions still reads every file's bytes)
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val readBytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) {
-          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-          readBytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val meter = Meter(spark)
     val q = Sinks.streamToWarehouse(mem.toDF(), raw, rep, ck,
       EventQueries.dailyRevenue)
     try {
@@ -200,11 +191,8 @@ class WarehouseSpec extends SparkSpec {
           PropEvent(day * 10L, ts(f"2024-01-$day%02d 10:00:00"), 1, "purchase", 1.0, "{}"),
           PropEvent(day * 10L + 1, ts(f"2024-01-$day%02d 11:00:00"), 2, "purchase", 2.0, "{}"),
           PropEvent(day * 10L + 2, ts(f"2024-01-$day%02d 12:00:00"), 3, "view", 9.0, "{}"))
-        read.set(0L)
-        readBytes.set(0L)
-        q.processAllAvailable()
-        org.apache.spark.sql.graft.ColumnBridge.waitForListeners(spark.sparkContext)
-        (read.get(), readBytes.get())
+        val (_, u) = meter.run(q.processAllAvailable())
+        (u.inputRecords, u.inputBytes)
       }
       // 12 RAW rows on disk by batch 4, but batch 4 still reads only its
       // own day (3 rows + the stream's re-reads) — a full-history
@@ -219,7 +207,7 @@ class WarehouseSpec extends SparkSpec {
       assert(reportingMap(rep).values.sum == 4 * 3.0)
     } finally {
       q.stop()
-      spark.sparkContext.removeSparkListener(listener)
+      meter.close()
     }
   }
 
@@ -276,24 +264,13 @@ class WarehouseSpec extends SparkSpec {
     // a batch spanning three days: two already published, one new
     val batch = Seq(ev(10, 2, "purchase", 20.0), ev(11, 4, "view", 9.0),
       ev(12, 6, "purchase", 6.5), ev(13, 6, "purchase", 0.25)).toDF()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.ColumnBridge.waitForListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      run(batch, 2L)
-      org.apache.spark.sql.graft.ColumnBridge.waitForListeners(sc)
-    } finally sc.removeSparkListener(listener)
+    val meter = Meter(spark)
+    val jobs = try meter.run(run(batch, 2L))._2.jobs finally meter.close()
     // gate: the suite's jobs + one local report write; RAW write; the
     // REPORTING refresh. No schema inference, no distinct over the batch,
     // no second probe of the report.
-    assert(jobs.get <= WarehouseBatchJobBudget,
-      s"${jobs.get} jobs for one checked batch (budget $WarehouseBatchJobBudget)")
+    assert(jobs <= WarehouseBatchJobBudget,
+      s"$jobs jobs for one checked batch (budget $WarehouseBatchJobBudget)")
     val after = files()
     val touched = Seq(2, 4, 6).map(d => f"event_date=2024-01-$d%02d").toSet
     assert(after.keySet == before.keySet + "event_date=2024-01-06")
@@ -708,21 +685,9 @@ class WarehouseSpec extends SparkSpec {
     val dayPath = Files.createTempDirectory("graft-z").toString + "/day"
     Sinks.writeZOrdered(ev, zPath, partitions = 16, "user_id", "day")
     Sinks.writeRangeLayout(ev, dayPath, 16, "day")
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    def recordsFor(path: String, pred: org.apache.spark.sql.Column): Long = {
-      read.set(0L)
-      spark.read.parquet(path).filter(pred).count()
-      org.apache.spark.sql.graft.ColumnBridge
-        .waitForListeners(spark.sparkContext)
-      read.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val meter = Meter(spark)
+    def recordsFor(path: String, pred: org.apache.spark.sql.Column): Long =
+      meter.run(spark.read.parquet(path).filter(pred).count())._2.inputRecords
     try {
       val someUser = ev.select("user_id").head().getLong(0)
       val someDay = ev.select("day").head().getLong(0)
@@ -736,7 +701,7 @@ class WarehouseSpec extends SparkSpec {
       // failure mode z-order exists to fix (every file spans all users)
       assert(dayUser > total * 9 / 10,
         s"day-sorted layout unexpectedly skipped for user: $dayUser/$total")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally meter.close()
   }
 
   test("writeRangeLayout produces disjoint, internally sorted file ranges") {
