@@ -141,14 +141,6 @@ object Scaling {
       }
 
     // ---- single-section experiments (r15 verdict #3/#6) -------------
-    // Generic metered runner for ad-hoc frames (the measure() shape
-    // without the SparkEntry indirection).
-    def meterDf(tag: String)(df: => DataFrame): M = {
-      val m = steady(Meter.timeIsolated(df), Meter.timeIsolated(df))
-      System.err.println(
-        f"[scaling] $tag%-40s ${m.sec}%6.2fs ${m.shuffleMb}%8.1fMB ${m.records}%12d rec")
-      m
-    }
     // Interleaved two-pass measurement over a SECTION's whole cell list
     // with bracketing host probes (r16): two dim768 runs on byte-
     // identical plans measured wall swings of 2–3× and even flipped the

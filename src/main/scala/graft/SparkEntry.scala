@@ -1342,12 +1342,11 @@ object SparkEntry {
     // machine on the modern arbitrary-state API, sharing the recursive-CTE
     // oracle verbatim: the hash gate is the fMGWS ≡ TWS equivalence proof.
     // TWS executes only on the RocksDB state store, so the entry builds on
-    // a new session carrying it (execution is lazy and reads the frame's
-    // own session conf): the caller's session, and every stateful entry
-    // evaluated after this one, keep their own store.
+    // a per-query session carrying it (execution is lazy and reads the
+    // frame's own session conf): the caller's session, and every stateful
+    // entry evaluated after this one, keep their own store.
     "q_funnel_conversions_tws" -> ((caller, dir) => {
-      val s = caller.newSession()
-      Tuning.rocksDbStateStore.foreach { case (k, v) => s.conf.set(k, v) }
+      val s = GraftSession.derive(caller, Tuning.rocksDbStateStore)
       import s.implicits._
       StreamingQueries.toConversionInput(Sources.events(s, dir))
         .transform(df => graft.streaming.FunnelStateTws.conversions(s,

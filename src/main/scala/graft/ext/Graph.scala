@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.GraftSession
+
 /** General graph analytics over edge DataFrames — the Pregel-shaped
   * iterate-join-aggregate discipline the dedup clustering family
   * ([[Dedup.connectedComponents]], [[Dedup.connectedComponentsStar]])
@@ -25,39 +27,22 @@ object Graph {
     * (the committed `plans/r18/inloop_before/` round plans show the edge
     * list re-shuffled EVERY round despite r17's `repartition(src)`).
     * Compiling just the checkpointed statement with AQE off keeps the
-    * `hashpartitioning(key, N)` (probe-verified: the in-loop
-    * ShuffledHashJoin and the groupBy-on-the-same-key then run with NO
-    * exchange over the checkpoint, AQE still on for the consumers).
+    * `hashpartitioning(key, N)` (GraphSpec pins it: a same-key
+    * shuffle-hash join then exchanges only its other side). The statement
+    * compiles in a per-query session with AQE off
+    * ([[graft.GraftSession.derive]]), and the checkpoint is rebound to
+    * the caller's session, so consumers keep AQE and the caller's conf is
+    * never written.
     * Use ONLY for loop INVARIANTS whose own plan gains nothing from AQE
     * (a bare repartition / one aggregate over an already-pinned frame) —
     * per-round updates keep AQE (skew splits on the message shuffle
     * matter at 100 TB). */
-  private def checkpointPinned(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try df.localCheckpoint() finally spark.conf.set(key, prev)
+  private[graft] def checkpointPinned(df: DataFrame): DataFrame = {
+    val noAqe = GraftSession.derive(df.sparkSession,
+      Map("spark.sql.adaptive.enabled" -> "false"))
+    GraftSession.rebind(GraftSession.rebind(df, noAqe).localCheckpoint(),
+      df.sparkSession)
   }
-
-  private val roundPlanDir = sys.env.get("GRAFT_GRAPH_ROUND_PLANS")
-
-  /** Measurement-only in-loop plan capture (env `GRAFT_GRAPH_ROUND_PLANS`
-    * = target dir): the per-round `localCheckpoint` SEVERS lineage (r13
-    * rule), so the committed post-loop plan dumps cannot show whether the
-    * pre-partitioned edge list is re-exchanged inside the loop — this
-    * writes the EXECUTED plan of each round's update frame (captured
-    * right after the eager checkpoint ran it) so the claim is provable
-    * from a committed artifact (r17 verdict #3). Off by default. */
-  private def dumpRoundPlan(algo: String, round: Int,
-      df: DataFrame): Unit =
-    roundPlanDir.foreach { dir =>
-      val p = java.nio.file.Paths.get(dir, s"${algo}_round$round.txt")
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .getBytes("UTF-8"))
-    }
 
   /** Bounded-iteration PageRank (Page et al. 1999 / the classic power
     * iteration) over a DIRECTED edge list `(src, dst)`; symmetrize the
@@ -215,7 +200,6 @@ object Graph {
             expr(s"($dampNum * (inflow + dm div $n)) div $dampDen"))
             .as("r"))
       ranks = next.localCheckpoint()
-      dumpRoundPlan("pagerank", round, next)
       // superseded round's blocks release deterministically (pageRank's
       // storage-region discipline; round 0 no-ops)
       ColumnBridge.releaseLocalCheckpoint(prev)
@@ -298,7 +282,6 @@ object Graph {
               s"if(is_seed is not null, dm div ${k}L, 0L))) div $dampDen"))
             .as("r"))
       ranks = next.localCheckpoint()
-      dumpRoundPlan("ppr", round, next)
       ColumnBridge.releaseLocalCheckpoint(prev)
     }
     ranks.select(col("node"), col("r").as("rank_fp"))

@@ -12,34 +12,18 @@ import org.apache.spark.sql.types._
   * is the property that matters at 100 TB (never materialize-then-filter).
   */
 object Sources {
-  /** Pins the session's parquet timestamp semantics so every historical
-    * testdata encoding lands as µs TimestampType (LTZ):
-    *  - TIMESTAMP(NANOS) → LongType via `nanosAsLong` (Spark 4 cannot read
-    *    nanos natively); [[normalizeEvents]] finishes the ns→µs conversion.
-    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false) → TimestampType directly,
-    *    by DISABLING NTZ inference. With inference on (the Spark 3.4+
-    *    default) these columns arrive as TIMESTAMP_NTZ, which rejects
-    *    `unix_micros` and `withWatermark` outright. Under the project's
-    *    UTC session timezone the LTZ reading is value-identical, and doing
-    *    it at the scan (not via a cast projection) keeps parquet filter
-    *    pushdown on timestamp columns intact. */
-  def pinTimestampSemantics(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-  }
-
   /** One parquet file per table (TESTDATA.md). NTZ-encoded timestamp
-    * columns (`l_shipdate`, `o_orderdate`, …) read as plain TIMESTAMP via
-    * [[pinTimestampSemantics]]; [[normalizeTimestamps]] is the belt-and-
-    * braces cast for frames read before the conf was pinned. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    pinTimestampSemantics(spark)
+    * columns (`l_shipdate`, `o_orderdate`, …) read as plain TIMESTAMP
+    * under the timestamp pins [[graft.GraftSession.builder]] sets; the
+    * read writes no conf. [[normalizeTimestamps]] is the input-safety cast
+    * for sessions built elsewhere, without the pins. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeTimestamps(spark.read.parquet(s"$sfDir/$name.parquet"))
-  }
 
   /** Casts any TIMESTAMP_NTZ column to TIMESTAMP (value-identical under the
-    * UTC session timezone). Returns the frame UNTOUCHED when no NTZ column
-    * exists — the common path adds no projection over the scan. */
+    * UTC session timezone): what an unpinned session reads µs/isAdjustedToUTC=0
+    * columns as. Returns the frame UNTOUCHED when no NTZ column exists —
+    * the pinned path adds no projection over the scan. */
   def normalizeTimestamps(raw: DataFrame): DataFrame = {
     val ntz = raw.schema.fields.collect {
       case f if f.dataType == TimestampNTZType => f.name
@@ -51,19 +35,19 @@ object Sources {
 
   /** The events table has carried `ts` as parquet TIMESTAMP(NANOS) (rounds
     * 1-8) and TIMESTAMP(MICROS, isAdjustedToUTC=0) (round 9+ regen) — the
-    * driver may flip again. [[pinTimestampSemantics]] + [[normalizeEvents]]
-    * accept all encodings and yield the same µs TimestampType column. */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    pinTimestampSemantics(spark)
+    * encoding may flip again. The session's timestamp pins
+    * ([[graft.GraftSession.builder]]) + [[normalizeEvents]] accept all
+    * encodings and yield the same µs TimestampType column; on a session
+    * without the pins [[normalizeEvents]] alone does. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEvents(table(spark, sfDir, "events"))
-  }
 
   /** `ts` → µs TimestampType from any historical encoding:
     *  - ns-long (nanosAsLong read of TIMESTAMP(NANOS)): integral `div`
     *    1000 — a double detour would lose precision above 2^53 — then
     *    `timestamp_micros`; the same ns→µs truncation DuckDB applies
     *    natively, so oracle parity is exact.
-    *  - TIMESTAMP_NTZ (a pre-pin read of µs/isAdjustedToUTC=0): cast to
+    *  - TIMESTAMP_NTZ (an unpinned read of µs/isAdjustedToUTC=0): cast to
     *    TimestampType, value-identical under the UTC session timezone.
     *  - TimestampType: no-op. */
   def normalizeEvents(raw: DataFrame): DataFrame =
@@ -81,11 +65,6 @@ object Sources {
     * [[Cleaning.castChain]]. Spark reads `.csv.gz` transparently. */
   def rawCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").csv(path)
-
-  /** CSV scan with the canonical schema applied at the source (the
-    * Spark-first alternative: pushdown-friendly, no string detour). */
-  def csvWithSchema(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
 
   /** JSON-Lines scan with an explicit schema — the standard LLM-corpus
     * interchange format (one JSON object per line; `.jsonl.gz` reads

@@ -2,8 +2,6 @@ package graft.model
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The canonical 9-column clickstream event of the reference system
@@ -52,20 +50,4 @@ object Event {
   /** Full event-type domain of the driver testdata. */
   val testdataTypes: Seq[String] =
     Seq("view", "click", "purchase", "signup", "error")
-
-  /** Maps the driver testdata `events` table
-    * (`event_id, ts, user_id, event_type, value, props`) onto the canonical
-    * column names used by the reference-parity queries. `user_id` doubles as
-    * `user_session` (FIXTURES.md §2). Kept lazy/narrow so parquet column
-    * pruning still reaches the scan. */
-  def fromTestdata(raw: DataFrame): DataFrame =
-    raw.select(
-      col("event_id"),
-      col("ts").as("event_time"),
-      to_date(col("ts")).as("event_date"),
-      col("event_type"),
-      col("user_id").cast(StringType).as("user_id"),
-      col("user_id").cast(StringType).as("user_session"),
-      col("value").as("price"),
-      col("props"))
 }

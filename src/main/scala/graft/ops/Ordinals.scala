@@ -29,21 +29,16 @@ import org.apache.spark.sql.functions._
   * boundary would otherwise be numbered by physical placement.
   */
 object Ordinals {
-  /** Distributed global RUNNING SUM of `weight` in `sortCols` order —
-    * the [[globalRowNumbers]] shape applied to an arbitrary 0/1-or-long
-    * weight (range partition → per-partition cumsum → broadcast
-    * per-partition totals as offsets). The inclusive cumsum at each row
-    * is exact whenever no weight-BEARING row ties with a row that reads
-    * the sum (ties among weight-0 readers, or among the weighted rows
-    * themselves, cannot change any reader's value — the rank-sweep
-    * consumers pin reader-vs-point order with a kind column). */
-  def globalRunningSum(df: DataFrame, sortCols: Seq[Column],
-      weight: Column, outName: String, partitions: Int = 0): DataFrame =
-    globalRunningSums(df, sortCols, Seq(weight -> outName), partitions)
-
-  /** [[globalRunningSum]] for SEVERAL weights sharing one sort order —
-    * one range exchange and one per-partition sort total, however many
-    * sums ride it (the rank-sweep consumer reads two). */
+  /** Distributed global RUNNING SUMS of `weights` (each named by its
+    * output column) in `sortCols` order — the [[globalRowNumbers]] shape
+    * applied to arbitrary 0/1-or-long weights (range partition →
+    * per-partition cumsum → broadcast per-partition totals as offsets).
+    * One range exchange and one per-partition sort total, however many
+    * sums ride it (the rank-sweep consumer reads two). The inclusive
+    * cumsum at each row is exact whenever no weight-BEARING row ties with
+    * a row that reads the sum (ties among weight-0 readers, or among the
+    * weighted rows themselves, cannot change any reader's value — the
+    * rank-sweep consumers pin reader-vs-point order with a kind column). */
   def globalRunningSums(df: DataFrame, sortCols: Seq[Column],
       weights: Seq[(Column, String)], partitions: Int = 0): DataFrame = {
     val n = if (partitions > 0) partitions

@@ -157,8 +157,9 @@ object Sinks {
     * REPORTING output date-partitioned, so toggling `incremental` never
     * mixes layouts under `reportingPath`; note the partitioned read-back
     * surfaces `event_date` as the LAST column — select by name, not
-    * position. The per-batch driver `collect()` is the distinct day
-    * list only — bounded by the batch's event-time span, never by volume.
+    * position. The days an incremental batch refreshes come from listing
+    * the RAW partitions it committed (no Spark job) — bounded by the
+    * batch's event-time span, never by volume.
     *
     * `trigger = None` runs micro-batches as fast as they arrive (the
     * processAllAvailable test shape); production passes

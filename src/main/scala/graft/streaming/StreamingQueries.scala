@@ -35,11 +35,9 @@ object StreamingQueries {
     new scala.collection.concurrent.TrieMap[String, java.nio.file.Path]
 
   /** Runs `transform` over a file-streamed view of `<sfDir>/events.parquet`
-    * and materializes the result (memory sink) as a batch frame. The file
-    * source wants a directory, so the single parquet file is symlinked into
-    * a fresh temp dir; the checkpoint dir is likewise per-call temp (WAL +
-    * state parity with `reference:extractor.py:25-41`'s resumable cursor,
-    * ST4).
+    * and materializes the result (memory sink) as a batch frame; events
+    * callers get the nanos normalization composed in. See
+    * [[runTableStream]] for the harness.
     *
     * `trigger` (ST5): `None` = ASAP micro-batches drained by
     * `processAllAvailable` (the verify/test harness shape); pass
@@ -57,45 +55,70 @@ object StreamingQueries {
     runTableStream(spark, sfDir, "events", name, mode, trigger, onDrained)(
       df => transform(graft.ingest.Sources.normalizeEvents(df)))
 
+  /** State partitions of every harness stream: stateful operators allocate
+    * one state store per shuffle partition per side, and at local scale
+    * the per-store fixed cost dominates. Baked into each run's fresh
+    * checkpoint, so no cross-run conflict. */
+  private val StreamShufflePartitions = 4
+
   /** [[runStream]] generalized to any driver table (the text-pipeline
-    * streams run over `documents`); events callers get the nanos
-    * normalization composed in by [[runStream]]. */
-  /** `onDrained` runs after the stream fully drains and BEFORE stop() —
+    * streams run over `documents`), with no normalization.
+    *
+    * The stream runs on a per-query session ([[graft.GraftSession.derive]]
+    * of `spark` with [[StreamShufflePartitions]] shuffle partitions):
+    * `spark`'s conf is never written, so a batch query sharing `spark`
+    * meanwhile keeps its own partition count, and the memory sink's temp
+    * view `name` lands in the per-query session, not in `spark`'s catalog.
+    * The file source wants a directory, so the single parquet file is
+    * symlinked into a fresh temp dir; the checkpoint dir is likewise
+    * per-call temp (WAL + state parity with
+    * `reference:extractor.py:25-41`'s resumable cursor, ST4).
+    *
+    * `onDrained` runs after the stream fully drains and BEFORE stop() —
     * the hook the streaming PlanPin spec uses to capture the last
-    * micro-batch's executed plan (gone once the query stops). */
+    * micro-batch's executed plan (gone once the query stops). The
+    * returned frame is bound to `spark`: batch finishers on it plan under
+    * the caller's conf. */
   def runTableStream(spark: SparkSession, sfDir: String, table: String,
       name: String, mode: String,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
       onDrained: org.apache.spark.sql.streaming.StreamingQuery => Unit =
         _ => ())(
+      transform: DataFrame => DataFrame): DataFrame =
+    harness(spark, sfDir, table, name, mode, trigger, onDrained,
+      between = None)(transform)
+
+  /** The one stream harness body: start, drain, optionally `between` (given
+    * the source dir and the raw file's frame) and drain again, `onDrained`,
+    * stop, clean up. */
+  private def harness(spark: SparkSession, sfDir: String, table: String,
+      name: String, mode: String,
+      trigger: Option[org.apache.spark.sql.streaming.Trigger],
+      onDrained: org.apache.spark.sql.streaming.StreamingQuery => Unit,
+      between: Option[(java.nio.file.Path, DataFrame) => Unit])(
       transform: DataFrame => DataFrame): DataFrame = {
     // absolute target: a relative sfDir would be stored verbatim in the
     // symlink and resolve against the /tmp source dir — a dangling link
     val path = java.nio.file.Paths.get(s"$sfDir/$table.parquet")
       .toAbsolutePath
-    graft.ingest.Sources.pinTimestampSemantics(spark)
+    val session = graft.GraftSession.derive(spark,
+      Map("spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString))
     val srcDir = Files.createTempDirectory(s"graft-src-$name")
     Files.createSymbolicLink(srcDir.resolve(s"$table.parquet"), path)
-    val schema = spark.read.parquet(path.toString).schema
-    val stream = spark.readStream.schema(schema)
+    val raw = session.read.parquet(path.toString)
+    val stream = session.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val ck = Files.createTempDirectory(s"graft-ck-$name").toString
-    // stateful operators allocate one state store per shuffle partition per
-    // side; at local scale the per-store fixed cost dominates — run the
-    // micro-batches with a small state partition count (baked into the
-    // fresh per-run checkpoint, so no cross-run conflict)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try {
-        val writer = transform(stream).writeStream
-          .outputMode(mode)
-          .format("memory").queryName(name)
-          .option("checkpointLocation", ck)
-        trigger.fold(writer)(writer.trigger).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try { q.processAllAvailable(); onDrained(q) }
-    finally {
+    val writer = transform(stream).writeStream
+      .outputMode(mode)
+      .format("memory").queryName(name)
+      .option("checkpointLocation", ck)
+    val q = trigger.fold(writer)(writer.trigger).start()
+    try {
+      q.processAllAvailable()
+      between.foreach { step => step(srcDir, raw); q.processAllAvailable() }
+      onDrained(q)
+    } finally {
       // the memory sink holds the rows; the per-run source/checkpoint
       // dirs are dead — reap them (the q_minhash_incremental discipline).
       // stop() can rethrow a terminal stream error, so the deletes live
@@ -105,7 +128,7 @@ object StreamingQueries {
         graft.Fs.deleteQuietly(ck)
       }
     }
-    spark.table(name)
+    graft.GraftSession.rebind(session.table(name), spark)
   }
 
   def runCompleteMode(spark: SparkSession, sfDir: String, name: String)(
@@ -123,89 +146,62 @@ object StreamingQueries {
     * watermark cannot pass its end) and stays withheld in state —
     * transforms additionally filter `user_id = -1` defensively.
     *
-    * Two-phase by construction (processAllAvailable between files): if the
+    * Two-phase by construction (the harness drains between files): if the
     * sentinel instead raced into the FIRST batch, the watermark would jump
     * to 2100 and every real row in later batches would be dropped as late
     * — ordering the phases is what makes the finalization sound. */
   def runAppendFinalized(spark: SparkSession, sfDir: String, name: String,
       onDrained: org.apache.spark.sql.streaming.StreamingQuery => Unit =
         _ => ())(
-      transform: DataFrame => DataFrame): DataFrame = {
-    // absolute target: see runTableStream's symlink note
-    val path = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-      .toAbsolutePath
-    graft.ingest.Sources.pinTimestampSemantics(spark)
-    val srcDir = Files.createTempDirectory(s"graft-src-$name")
-    Files.createSymbolicLink(srcDir.resolve("events.parquet"), path)
-    val raw = spark.read.parquet(path.toString)
-    val stream = spark.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    val ck = Files.createTempDirectory(s"graft-ck-$name").toString
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q =
-      try {
-        transform(graft.ingest.Sources.normalizeEvents(stream)).writeStream
-          .outputMode("append")
-          .format("memory").queryName(name)
-          .option("checkpointLocation", ck)
-          .start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      q.processAllAvailable()
-      // 2100-01-01T00:00:00Z in the raw file's ns-long encoding. TWO
-      // sentinel rows, one per funnel side ('view' then 'purchase' 10 days
-      // later): transforms pre-filter on event_type, and a filtered-out
-      // sentinel advances nothing — a stream-stream join derives one
-      // watermark node per side and the query's global watermark is their
-      // MIN, so BOTH sides need a surviving sentinel. The two are 10 days
-      // apart (never interval-joinable) and single-typed, so neither can
-      // match or merge with anything; their own groups/windows sit forever
-      // above the watermark and are never emitted.
-      val sentinelNs = 4102444800000000000L
-      // the sentinel file is per-sfDir-constant: build it ONCE per JVM
-      // (a Spark write job), then copy the cached bytes per run
-      val cached = sentinelCache.getOrElseUpdate(path.toString, {
-        val sentDir = Files.createTempDirectory(s"graft-sentcache")
-        val base = raw.limit(1)
-        // The sentinel file must carry `ts` in the SAME encoding as the
-        // raw file it joins in the stream (the reader applies one fixed
-        // schema): ns-long for the TIMESTAMP(NANOS) era, µs TimestampType
-        // for the µs-parquet era — derive from the raw schema, not an
-        // assumption.
-        def sentinelTs(ns: Long): Column =
-          raw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType => lit(ns)
-            case _ => expr(s"timestamp_micros(${ns / 1000L}L)")
-          }
-        base.withColumn("ts", sentinelTs(sentinelNs))
-          .withColumn("user_id", lit(-1L))
-          .withColumn("event_type", lit("view"))
-          .unionByName(base
-            .withColumn("ts",
-              sentinelTs(sentinelNs + 864000L * 1000000000L))
-            .withColumn("user_id", lit(-1L))
-            .withColumn("event_type", lit("purchase")))
-          .coalesce(1).write.mode("overwrite").parquet(s"$sentDir/out")
-        val part = {
-          import scala.jdk.CollectionConverters._
-          val ls = Files.list(java.nio.file.Paths.get(s"$sentDir/out"))
-          try ls.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          finally ls.close()
+      transform: DataFrame => DataFrame): DataFrame =
+    harness(spark, sfDir, "events", name, "append", None, onDrained,
+      between = Some(plantSentinel(sfDir) _))(
+      df => transform(graft.ingest.Sources.normalizeEvents(df)))
+
+  /** Copies the sentinel file for `sfDir`'s events (read as `raw`) into
+    * the stream's source dir `srcDir`: 2100-01-01T00:00:00Z in the raw
+    * file's encoding. TWO sentinel rows, one per funnel side ('view' then
+    * 'purchase' 10 days later): transforms pre-filter on event_type, and a
+    * filtered-out sentinel advances nothing — a stream-stream join derives
+    * one watermark node per side and the query's global watermark is their
+    * MIN, so BOTH sides need a surviving sentinel. The two are 10 days
+    * apart (never interval-joinable) and single-typed, so neither can
+    * match or merge with anything; their own groups/windows sit forever
+    * above the watermark and are never emitted. */
+  private def plantSentinel(sfDir: String)(srcDir: java.nio.file.Path,
+      raw: DataFrame): Unit = {
+    val sentinelNs = 4102444800000000000L
+    // the sentinel file is per-sfDir-constant: build it ONCE per JVM
+    // (a Spark write job), then copy the cached bytes per run
+    val cached = sentinelCache.getOrElseUpdate(sfDir, {
+      val sentDir = Files.createTempDirectory(s"graft-sentcache")
+      val base = raw.limit(1)
+      // The sentinel file must carry `ts` in the SAME encoding as the
+      // raw file it joins in the stream (the reader applies one fixed
+      // schema): ns-long for the TIMESTAMP(NANOS) era, µs TimestampType
+      // for the µs-parquet era — derive from the raw schema, not an
+      // assumption.
+      def sentinelTs(ns: Long): Column =
+        raw.schema("ts").dataType match {
+          case org.apache.spark.sql.types.LongType => lit(ns)
+          case _ => expr(s"timestamp_micros(${ns / 1000L}L)")
         }
-        part
-      })
-      Files.copy(cached, srcDir.resolve("zz-sentinel.parquet"))
-      q.processAllAvailable()
-      onDrained(q)
-    } finally {
-      try q.stop() finally {
-        graft.Fs.deleteQuietly(srcDir)
-        graft.Fs.deleteQuietly(ck)
-      }
-    }
-    spark.table(name)
+      base.withColumn("ts", sentinelTs(sentinelNs))
+        .withColumn("user_id", lit(-1L))
+        .withColumn("event_type", lit("view"))
+        .unionByName(base
+          .withColumn("ts",
+            sentinelTs(sentinelNs + 864000L * 1000000000L))
+          .withColumn("user_id", lit(-1L))
+          .withColumn("event_type", lit("purchase")))
+        .coalesce(1).write.mode("overwrite").parquet(s"$sentDir/out")
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(java.nio.file.Paths.get(s"$sentDir/out"))
+      try ls.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      finally ls.close()
+    })
+    Files.copy(cached, srcDir.resolve("zz-sentinel.parquet"))
   }
 
   /** Append-mode twin of [[graft.ops.WindowedQueries.sessionize]]: the

@@ -2,8 +2,9 @@ package org.apache.spark.sql.graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 made Column ↔ catalyst Expression conversions `private[sql]`
@@ -16,34 +17,49 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *  - `ExpressionUtils.column/expression` (`private[sql]`, classic module);
   *  - `SparkContext.listenerBus` (`private[spark]`);
   *  - `classic.StreamingQueryManager.stateStoreCoordinator` (`private[sql]`,
-  *    lazily registers the coordinator RPC endpoint batch TWS needs).
+  *    lazily registers the coordinator RPC endpoint batch TWS needs);
+  *  - `classic.SparkSession.cloneSession` (`private[sql]`, the per-query
+  *    session of [[graft.GraftSession.derive]]);
+  *  - `classic.Dataset.ofRows` (`private[sql]`, binds a built plan to a
+  *    session: [[graft.GraftSession.rebind]]).
   * [[assertPinnedSparkVersion]] runs at object init (and is asserted in
   * ColumnBridgeSpec), so a version bump fails loudly HERE with a pointer to
   * this list instead of as a MethodNotFound deep inside a query. */
 object ColumnBridge {
-  /** The Spark minor line the three internals above were verified against. */
+  /** The Spark minor line the internals above were verified against. */
   val PinnedSparkLine = "4.1."
 
   def assertPinnedSparkVersion(): Unit =
     require(org.apache.spark.SPARK_VERSION.startsWith(PinnedSparkLine),
       s"ColumnBridge is pinned to Spark $PinnedSparkLine* but this is " +
         s"${org.apache.spark.SPARK_VERSION}: re-verify ExpressionUtils." +
-        "column/expression, SparkContext.listenerBus and classic." +
-        "StreamingQueryManager.stateStoreCoordinator, then bump " +
-        "PinnedSparkLine")
+        "column/expression, SparkContext.listenerBus, classic." +
+        "StreamingQueryManager.stateStoreCoordinator, classic.SparkSession." +
+        "cloneSession and classic.Dataset.ofRows, then bump PinnedSparkLine")
 
   assertPinnedSparkVersion()
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Unified-memory-manager gauges (driver = executor under local[*]) —
-    * the Scaling harness prints them per measurement so lingering-block
+  /** Unified-memory-manager storage gauge (one JVM under local[*]) —
+    * the Scaling harness prints it per measurement so lingering-block
     * regressions are visible as numbers, not 4× wall-time mysteries.
-    * `private[spark]` internals, but simple stable gauges. */
+    * A `private[spark]` internal, but a simple stable gauge. */
   def storageMemoryUsedBytes: Long =
     org.apache.spark.SparkEnv.get.memoryManager.storageMemoryUsed
-  def executionMemoryUsedBytes: Long =
-    org.apache.spark.SparkEnv.get.memoryManager.executionMemoryUsed
+
+  /** A new session holding a COPY of `spark`'s session state: its current
+    * runtime conf, temp views and functions. SparkContext, shared state
+    * and cache stay shared; conf set on the copy never reaches `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `plan` as a DataFrame of `spark`: analyzed, planned and executed
+    * under `spark`'s conf — how Catalyst extensions build a Dataset over
+    * a plan they control. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Releases the storage blocks of a dataset that IS a bare local
     * checkpoint (analyzed plan = exactly one LogicalRDD). Iterative

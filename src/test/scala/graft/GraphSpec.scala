@@ -107,6 +107,27 @@ class GraphSpec extends SparkSpec {
     assert(mass <= 1.0 + 1e-12 && mass > 1.0 - 1e-9, s"mass $mass")
   }
 
+  test("checkpointPinned keeps the hash partitioning: a same-key " +
+    "shuffle-hash join exchanges only its other side") {
+    // the loop-invariant discipline of the PageRank/PPR loops: an edge
+    // list pinned on hash(src, shuffle partitions), joined per round to a
+    // shuffle_hash-hinted rank frame on src. A plain localCheckpoint
+    // under AQE records UnknownPartitioning and exchanges BOTH sides.
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val edges = (1 to 40).map(i => (s"n${i % 7}", s"n${i * 3 % 11}"))
+      .toDF("src", "dst")
+    val pinned = Graph.checkpointPinned(
+      edges.repartition(parts, col("src")))
+    val ranks = (0 until 11).map(i => (s"n$i", i.toLong)).toDF("node", "r")
+    val joined = pinned
+      .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
+    val plan = joined.queryExecution.executedPlan.toString
+    val exchanged = "Exchange hashpartitioning\\((\\w+)#".r
+      .findAllMatchIn(plan).map(_.group(1)).toList
+    assert(exchanged == List("node"), plan)
+    assert(joined.count() == 40)
+  }
+
   test("iterative loops release superseded localCheckpoint blocks: " +
     "persistent-RDD count stays bounded by the shared frames, not the " +
     "round count") {

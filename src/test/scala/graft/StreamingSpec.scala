@@ -65,14 +65,24 @@ class StreamingSpec extends SparkSpec {
     // Tuning.rocksDbStateStore is the 100 TB state configuration; prove the
     // provider actually loads and produces identical results on a stateful
     // (dedup + agg) query — the conf is read at query start, so setting it
-    // on the shared session scoped to this test is enough
+    // on the shared session scoped to this test is enough: the harness's
+    // per-query session starts from the caller's CURRENT conf
     Tuning.rocksDbStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val dir = sf("sf0.001")
+      var stateMetrics = Set.empty[String]
       val streamed = StreamingQueries.countDailyActiveUsers(
-        StreamingQueries.runStream(spark, dir, "t_rocks", "append")(
-          StreamingQueries.dedupDailyUsers))
+        StreamingQueries.runStream(spark, dir, "t_rocks", "append",
+          onDrained = q => {
+            import scala.jdk.CollectionConverters._
+            stateMetrics = q.lastProgress.stateOperators
+              .flatMap(_.customMetrics.keySet.asScala).toSet
+          })(StreamingQueries.dedupDailyUsers))
         .as[(java.sql.Date, String, Long)].collect().toSeq
+      // the store that ran reports its own custom metrics: RocksDB's are
+      // rocksdb*, the default HDFS-backed store's are loadedMapCache*
+      assert(stateMetrics.exists(_.startsWith("rocksdb")),
+        s"state operator metrics $stateMetrics are not RocksDB's")
       val batch = EventQueries.dailyActiveUsers(
         ingest.Sources.events(spark, dir))
         .as[(java.sql.Date, String, Long)].collect().toSeq
