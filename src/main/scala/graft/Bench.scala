@@ -172,7 +172,7 @@ object Bench {
     // calibration = the MEDIAN 32-way probe wall (three probes bracket
     // the run; median rejects one probe landing inside a wave edge)
     val calibration = probes.map(_.wallSec).sorted.apply(1)
-    // SORTED keys: bench_results.json is the full per-query record (all
+    // SORTED keys: the results file is the full per-query record (all
     // entries, not just the slowest 10), and key-sorted rendering makes
     // round-over-round diffs line up query-by-query (a hash-ordered map
     // reshuffles every run and defeats `diff`).
@@ -182,8 +182,10 @@ object Bench {
     val total = results.values.filter(_ >= 0).sum
     // totals LEAD the line and the per-query map trails it, so a
     // tail-truncated capture still keeps every headline metric; the full
-    // line is also written to bench_results.json as the lossless record
-    // (the r5 artifact lost its leading fields to truncation).
+    // line is also written to the results file as the lossless record
+    // (the r5 artifact lost its leading fields to truncation), one file
+    // per core count so an 8-core run never overwrites the 32-core one.
+    val resultsFile = s"bench_results_c$cpus.json"
     def mbMap(m: collection.Map[String, Double]) =
       m.toSeq.sortBy(_._1).map { case (k, v) =>
         s"\"" + k + "\":" + math.round(v * 10) / 10.0 }.mkString("{", ",", "}")
@@ -216,17 +218,17 @@ object Bench {
       m.toSeq.sortBy(_._1).map { case (k, v) =>
         s"\"" + k + "\":" + math.round(v * 100) / 100.0 }.mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"total_comparable":${failures == 0},"calibration":${r3(calibration)},"cal_adjusted_total":$calAdjTotal,"harness_floor_sec":$harnessFloor,"sf":"$sfDir","host":$host,"flagged_rerun":$flaggedJson,"queries":$qs,"pass1":${passMap(pass1)},"pass2":${passMap(pass2)},"rerun":${passMap(pass3)},"cal_adjusted":$calAdj,"shuffle_mb":${mbMap(shuffleMb)},"input_mb":${mbMap(inputMb)},"cpu_par":${parMap(cpuPar)}}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_results.json"),
+    try java.nio.file.Files.write(java.nio.file.Paths.get(resultsFile),
       (line + "\n").getBytes("UTF-8"))
     catch { case NonFatal(t) =>
-      System.err.println(s"[bench] could not write bench_results.json: $t") }
+      System.err.println(s"[bench] could not write $resultsFile: $t") }
     println(line)
     // The LAST stdout line is a COMPACT headline — totals only, NO per-query
     // map. The r8 record proved a 145-entry map (~6 KB) overflows a
     // tail-bounded capture, which then sees only the line's END and cannot
     // parse it ("parsed": null). The 10 slowest entries ride along (bounded
     // size) as the perf signal; the lossless per-query record is the line
-    // above + bench_results.json.
+    // above + the results file.
     // The subset key is "slowest" (NOT "queries") so a stale parser that
     // expects the full per-query map fails loudly instead of silently
     // computing totals from 10 of 145 entries. The headline also lands in
@@ -253,9 +255,9 @@ object Bench {
       s"\"" + k + "\":" + math.round(cpuPar.getOrElse(k, -1.0) * 100) / 100.0
     }.mkString("{", ",", "}")
     // the headline stays tail-capture-small: flagged entries ride as a
-    // COUNT here (the full list is in bench_results.json — a pathological
+    // COUNT here (the full list is in the results file — a pathological
     // run could flag dozens and blow the bounded-size guarantee)
-    val headline = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"total_comparable":${failures == 0},"calibration":${r3(calibration)},"cal_adjusted_total":$calAdjTotal,"harness_floor_sec":$harnessFloor,"sf":"$sfDir","host":$host,"flagged_rerun_n":${flagged.size},"n_queries":${results.size},"slowest":$slowest,"slowest_cpu_par":$slowestPar,"queries_file":"bench_results.json"}"""
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"total_comparable":${failures == 0},"calibration":${r3(calibration)},"cal_adjusted_total":$calAdjTotal,"harness_floor_sec":$harnessFloor,"sf":"$sfDir","host":$host,"flagged_rerun_n":${flagged.size},"n_queries":${results.size},"slowest":$slowest,"slowest_cpu_par":$slowestPar,"queries_file":"$resultsFile"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_headline.json"),
       (headline + "\n").getBytes("UTF-8"))
     catch { case NonFatal(t) =>

@@ -159,7 +159,7 @@ object SparkEntry {
   /** The BM25 idf table shared by `q_bm25_search`, `q_bm25_maxscore` and
     * `q_prf_expansion`. */
   private def bm25Terms(dir: String,
-      d: DataFrame): Seq[(Long, String, Long)] =
+      d: => DataFrame): Seq[(Long, String, Long)] =
     bm25Idf.serve(dir) {
       val idf = Retrieval.trainBm25Idf(d,
         Retrieval.Bm25Queries.flatMap(_._2).distinct).toMap
@@ -321,10 +321,13 @@ object SparkEntry {
     // Fagin-TA termination bound — |Q|-proportional work is bounded by
     // |Q|·terms·B, never |Q|·N. Shares q_bm25_search's oracle VERBATIM:
     // the hash gate IS the pruning-losslessness certificate (the
-    // q_zorder_prune discipline).
+    // q_zorder_prune discipline). The corpus side is the persisted impact
+    // index, so a warm call reads `documents` on neither an idf nor an
+    // index hit.
     "q_bm25_maxscore" -> ((s, dir) => {
-      val d = Sources.table(s, dir, "documents")
-      Retrieval.bm25SearchPruned(d, bm25Terms(dir, d))
+      lazy val d = Sources.table(s, dir, "documents")
+      Retrieval.bm25SearchPruned(Retrieval.bm25Index(s, dir)(d),
+        bm25Terms(dir, d))
     }),
     // reciprocal-rank-fusion hybrid search: the query DOCS' BM25 ranking
     // fused with their exact embedding-cosine ranking (vec_id ≡ doc_id),

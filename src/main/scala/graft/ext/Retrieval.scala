@@ -1,7 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+
+import graft.sink.ArtifactStore
 
 /** Query-scoring retrieval stack over the `documents` corpus: Okapi BM25
   * ranking and reciprocal-rank-fusion (RRF) hybrid search that fuses the
@@ -92,11 +96,20 @@ object Retrieval {
     * doc) but bounds the broadcast on adversarial inputs. */
   val Bm25MaxQueryTerms = 1024
 
-  /** Driver-side idf training for a bounded term set: one bounded
-    * aggregate + a ≤ |terms|-row collect (the bounded-scalar rule).
+  /** The one idf formula of the BM25 stack, driver-only:
     * idf = ln(1 + (N − df + 0.5) / (df + 0.5)) — the Lucene/ATIRE
-    * non-negative variant — quantized to micro-units. Terms absent from
-    * the corpus keep their (maximal) idf; they simply match no postings. */
+    * non-negative variant — quantized to micro-units. [[trainBm25Idf]],
+    * [[trainHybridQueryTerms]] and the impact index's `terms` table all
+    * call it, so their idf values agree bit for bit. */
+  def idfMicro(nDocs: Long, df: Long): Long = {
+    val idf = math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
+    math.floor(idf * Bm25ScoreScale + 0.5).toLong
+  }
+
+  /** Driver-side idf training for a bounded term set: one bounded
+    * aggregate + a ≤ |terms|-row collect (the bounded-scalar rule), then
+    * [[idfMicro]]. Terms absent from the corpus keep their (maximal) idf;
+    * they simply match no postings. */
   def trainBm25Idf(documents: DataFrame,
       terms: Seq[String]): Array[(String, Long)] = {
     val docs = documents.filter(col("text").isNotNull)
@@ -107,11 +120,8 @@ object Retrieval {
       .filter(col("tok").isin(terms: _*))
       .groupBy("tok").agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    terms.sorted.map { t =>
-      val df = dfMap.getOrElse(t, 0L)
-      val idf = math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
-      t -> math.floor(idf * Bm25ScoreScale + 0.5).toLong
-    }.toArray
+    terms.sorted.map(t => t -> idfMicro(nDocs, dfMap.getOrElse(t, 0L)))
+      .toArray
   }
 
   /** Hybrid-search train step: the distinct tokens of each query
@@ -137,10 +147,7 @@ object Retrieval {
       .groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
         rows.sortBy { case (_, tok, df) => (df, tok) }
           .take(Bm25MaxQueryTerms)
-          .map { case (_, tok, df) =>
-            val idf = math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
-            (qid, tok, math.floor(idf * Bm25ScoreScale + 0.5).toLong)
-          }
+          .map { case (_, tok, df) => (qid, tok, idfMicro(nDocs, df)) }
       }.sortBy(r => (r._1, r._2)).toArray
   }
 
@@ -179,8 +186,8 @@ object Retrieval {
 
   /** The per-(term, doc) BM25 contribution in micro-unit longs — ONE
     * shared Column tree so [[bm25Scores]] (the exact route) and
-    * [[bm25SearchPruned]] (the max-score route) are bit-identical by
-    * construction, not by parallel maintenance. Identical IEEE op
+    * [[bm25IndexTables]] (the max-score route's index) are bit-identical
+    * by construction, not by parallel maintenance. Identical IEEE op
     * sequence in the mirrors: `((idf/1e6) * (tf*(k1+1))) / (tf +
     * k1*((1-b) + b*(dl/avgdl)))`, floor-trick quantized. */
   private def contribMicro(tf: Column, idfMicro: Column, dl: Column,
@@ -220,6 +227,76 @@ object Retrieval {
     * consumers). */
   final case class PrunedDiag(rounds: Int, finalB: Int, byBound: Boolean)
 
+  /** Query-independent BM25 impact index of one corpus: `postings` rows
+    * `(tok, rank, doc_id, c_micro)` over the FULL vocabulary, `rank`
+    * numbering each term's postings from 1 in (c_micro desc, doc_id asc)
+    * order, and `terms` on the driver, tok → (df, idf_micro). A
+    * contribution depends only on tf, the term's idf, dl and avgdl, so
+    * one index serves every query set over the same corpus; the
+    * vocabulary (not the corpus) is driver-resident. */
+  final case class Bm25Index(postings: DataFrame,
+      terms: Map[String, (Long, Long)])
+
+  /** Artifact name of the persisted index (a layout change is a new
+    * version, never a stale read). */
+  private val Bm25IndexName = "bm25-impact-v1"
+
+  /** The index's two tables: the unexecuted postings plan (one tf
+    * aggregate, the shared [[contribMicro]] Column, one per-term rank
+    * window) and the driver-built term rows. Costs one (N, Σ dl) stats
+    * collect and one ≤ |vocab|-row df collect; idf comes from
+    * [[idfMicro]] over the same N and df as [[trainBm25Idf]]. */
+  private def bm25IndexTables(
+      documents: DataFrame): (DataFrame, Seq[(String, Long, Long)]) = {
+    val spark = documents.sparkSession
+    import spark.implicits._
+    val docs = documents.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long").as("doc_id"),
+        TextOps.tokens(col("text")).as("toks"))
+    val stats = docs.agg(count(lit(1)),
+      coalesce(sum(size(col("toks")).cast("long")), lit(0L))).head()
+    val (nDocs, totalDl) = (stats.getLong(0), stats.getLong(1))
+    // the exact route's avgdl: one correctly-rounded double division
+    val avgdl = if (nDocs > 0) totalDl.toDouble / nDocs.toDouble else 0.0
+    val tf = docs
+      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+        explode(col("toks")).as("tok"))
+      .groupBy("tok", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+    val terms = tf.groupBy("tok").agg(count(lit(1)).as("df")).collect()
+      .map { r =>
+        val df = r.getLong(1)
+        (r.getString(0), df, idfMicro(nDocs, df))
+      }.sortBy(_._1).toSeq
+    val postings = tf.join(terms.toDF("tok", "df", "idf_micro"), Seq("tok"))
+      .select(col("tok"), col("doc_id"),
+        contribMicro(col("tf"), col("idf_micro"), col("dl"), lit(avgdl))
+          .as("c_micro"))
+      .select(col("tok"), row_number().over(Window.partitionBy("tok")
+          .orderBy(col("c_micro").desc, col("doc_id").asc)).as("rank"),
+        col("doc_id"), col("c_micro"))
+    (postings, terms)
+  }
+
+  /** The index of `documents`, built in memory for this call: the
+    * postings are eagerly localCheckpointed and never released here — the
+    * returned plan reads them, and the blocks free via ContextCleaner once
+    * the result frame is garbage (the graph-loop outputs' precedent). */
+  def bm25Index(documents: DataFrame): Bm25Index = {
+    val (postings, terms) = bm25IndexTables(documents)
+    Bm25Index(postings.localCheckpoint(),
+      terms.map { case (t, df, idf) => t -> (df, idf) }.toMap)
+  }
+
+  /** The persisted index of the dataset at `datasetDir`, built from
+    * `documents` (by-name: read only on a store miss) once per dataset
+    * identity and served from [[ArtifactStore.impactIndex]]. */
+  def bm25Index(spark: SparkSession, datasetDir: String)(
+      documents: => DataFrame): Bm25Index = {
+    val (postings, terms) = ArtifactStore.impactIndex(spark, datasetDir,
+      Bm25IndexName)(bm25IndexTables(documents))
+    Bm25Index(postings, terms)
+  }
+
   /** `q_bm25_maxscore`: EXACT top-k BM25 via impact-ordered posting
     * prefixes with a Fagin-style threshold-algorithm termination bound —
     * the max-score/WAND family's dense-regime escape hatch the r15
@@ -231,25 +308,27 @@ object Retrieval {
     * `MAXSCORE` implementation).
     *
     * Algorithm (top-k-only pruning — score-exact for the returned k):
-    *  1. One corpus pass builds the per-(term, doc) micro-long
-    *     contribution frame over the queries' DISTINCT term vocabulary —
+    *  1. The [[Bm25Index]] holds the per-(term, doc) micro-long
+    *     contributions of the whole vocabulary with their impact rank —
     *     query-INDEPENDENT, unlike the exact route's per-(query, doc,
-    *     term) aggregate: the |Q| fan-out never touches corpus-sized
-    *     data. Eagerly localCheckpointed: the certification loop and the
-    *     returned plan re-read it without re-tokenizing.
-    *  2. Impact-ordered prefixes: the top-B docs per term by
-    *     (contribution desc, doc_id asc) — a bounded [[TopK]] heap
-    *     aggregate (map-side partials), output |terms|·B rows.
+    *     term) aggregate, so it is built once per corpus (persisted by
+    *     the entry, in memory for the `DataFrame` overload) and the |Q|
+    *     fan-out never touches corpus-sized data. The query's idf must
+    *     be the index's (`require`d bit for bit).
+    *  2. Impact-ordered prefixes are a predicate, `tok ∈ T ∧ rank ≤ B`,
+    *     over the index. A term is exhausted when its driver-held
+    *     `df < B`; the bound of an unexhausted term is its `rank = B`
+    *     row.
     *  3. Candidates per query = the union of its terms' prefixes; each
     *     candidate is scored EXACTLY (its contributions on ALL the
-    *     query's terms, fetched by a broadcast equi-join of the
-    *     query-load-bounded candidate×term frame against the
-    *     contribution frame — map-side, the corpus side never
+    *     query's terms, fetched by an equi-join of the query-load-bounded
+    *     candidate×term frame against the postings — a broadcast in a
+    *     small round, see the loop — so the corpus side never
     *     re-shuffles).
     *  4. Termination certificate per query: a non-candidate doc's
     *     contribution on term t is ≤ bound_B(t) (the B-th prefix entry's
-    *     contribution; 0 when the term's postings are exhausted, i.e.
-    *     max rank < B), so its total score is ≤ τ(q) = Σ_t bound_B(t).
+    *     contribution; 0 when the term's postings are exhausted), so its
+    *     total score is ≤ τ(q) = Σ_t bound_B(t).
     *     If the k-th best candidate score is STRICTLY above τ(q), no
     *     non-candidate can enter the top-k even via the doc_id tiebreak;
     *     if every term is exhausted the candidates ARE the exact
@@ -259,23 +338,27 @@ object Retrieval {
     *     hash gate certifies pruning losslessness, the q_zorder_prune
     *     pattern.
     *  5. Queries whose certificate fails grow B and re-check (driver
-    *     loop over a ≤ |queries|-row collect — the bounded-scalar rule):
+    *     loop over a ≤ |terms| + |queries|-row collect — the
+    *     bounded-scalar rule):
     *     ×2 after the first failed round, ×4 thereafter (plateau corpora
     *     reach the exhaustion clamp in ~log₄ rounds with Σ Bᵢ ≤ 4/3 of
     *     the final round vs pure doubling's log₂ rounds and 2×; the
     *     spread regime keeps its round-one exit). Exhaustion guarantees
     *     termination at B ≥ max df.
     *
-    * Scale: corpus-sized work is ONE tokenize + tf aggregate and one
-    * bounded-heap prefix aggregate, both |Q|-independent; everything
+    * Scale: the corpus-sized work is the index build — one tokenize +
+    * tf aggregate and one per-term rank window, |Q|-independent and paid
+    * once per corpus identity when persisted. A round reads the query
+    * terms' postings by predicate (prefixes as `rank ≤ B`); everything
     * |Q|-proportional is bounded by |Q|·terms·B rows. The exact route's
     * dense-regime |Q|·N score matrix never materializes. MEASURED at
-    * scale (SCALING.md §Retrieval, r17): on the skewed-idf probe mix
-    * the route exists for (one rare df-200 term + three common ones per
-    * query, 150k docs, |Q| = 1000) the certificate fires in ROUND ONE
-    * pre-exhaustion and the route wins 24.4× wall / 32.5× shuffle over
-    * the exact plan (5.5 s / 240 MB vs 134.5 s / 7.8 GB); the
-    * spread-free all-common worst case stays the documented
+    * scale (SCALING.md §Retrieval, r17, before the index existed: a
+    * per-call contribution pass and per-round prefix heaps): on the
+    * skewed-idf probe mix the route exists for (one rare df-200 term +
+    * three common ones per query, 150k docs, |Q| = 1000) the certificate
+    * fires in ROUND ONE pre-exhaustion and the route wins 24.4× wall /
+    * 32.5× shuffle over the exact plan (5.5 s / 240 MB vs 134.5 s /
+    * 7.8 GB); the spread-free all-common worst case stays the documented
     * honest-neutral regime (tie-plateau ⇒ information-theoretically
     * score-everything). */
   def bm25SearchPruned(documents: DataFrame,
@@ -283,58 +366,67 @@ object Retrieval {
       initialB: Int = MaxScorePrefixB): DataFrame =
     bm25SearchPrunedDiag(documents, queryTerms, k, initialB)._1
 
+  /** [[bm25SearchPruned]] over an already-built index. */
+  def bm25SearchPruned(index: Bm25Index,
+      queryTerms: Seq[(Long, String, Long)]): DataFrame =
+    bm25SearchPrunedDiag(index, queryTerms, Bm25TopK, MaxScorePrefixB)._1
+
   /** [[bm25SearchPruned]] plus its certification diagnostics — complete
     * when this returns (the loop's jobs all run inside; only the final
-    * top-k plan is still lazy). */
+    * top-k plan is still lazy). Builds the index in memory. */
   def bm25SearchPrunedDiag(documents: DataFrame,
       queryTerms: Seq[(Long, String, Long)], k: Int = Bm25TopK,
-      initialB: Int = MaxScorePrefixB): (DataFrame, PrunedDiag) = {
-    val spark = documents.sparkSession
-    import spark.implicits._
+      initialB: Int = MaxScorePrefixB): (DataFrame, PrunedDiag) =
+    bm25SearchPrunedDiag(bm25Index(documents), queryTerms, k, initialB)
+
+  /** The certificate loop over `index` (see [[bm25SearchPruned]]). */
+  def bm25SearchPrunedDiag(index: Bm25Index,
+      queryTerms: Seq[(Long, String, Long)], k: Int,
+      initialB: Int): (DataFrame, PrunedDiag) = {
+    val spark = index.postings.sparkSession
     // one contribution row per (term, doc): safe because idf is a
-    // function of the term alone (trainBm25Idf) — guard the invariant
-    val termIdf = queryTerms.map(t => (t._2, t._3)).distinct
-    require(termIdf.map(_._1).distinct.size == termIdf.size,
-      "a term carries two different idf values across queries")
+    // function of the term alone — the query's must be the index's
+    queryTerms.foreach { case (_, t, idf) =>
+      index.terms.get(t).foreach { case (_, indexIdf) =>
+        require(idf == indexIdf, s"term '$t' carries idf_micro $idf, " +
+          s"but the index was built with $indexIdf")
+      }
+    }
     val qTermsOf: Map[Long, Seq[String]] =
       queryTerms.groupBy(_._1).map { case (q, ts) => q -> ts.map(_._2) }
-    val terms = termIdf.toDF("tok", "idf_micro")
-    val docs = documents.filter(col("text").isNotNull)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-    val dl = docs.select(col("doc_id"),
-      size(col("toks")).cast("long").as("dl"))
-    val stats = docs.agg(count(lit(1)).as("nd"),
-        coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("tot"))
-      .select(when(col("nd") > 0,
-        col("tot").cast("double") / col("nd").cast("double")).as("avgdl"))
-    // the returned plan reads this checkpoint too, so it is NEVER
-    // released here — the blocks free via ContextCleaner once the
-    // result frame is garbage (the graph-loop outputs' precedent)
-    val contrib = docs
-      .select(col("doc_id"), explode(col("toks")).as("tok"))
-      .join(broadcast(terms), Seq("tok"))
-      .groupBy("doc_id", "tok", "idf_micro").agg(count(lit(1)).as("tf"))
-      .join(dl, Seq("doc_id")).crossJoin(broadcast(stats))
-      .select(col("tok"), col("doc_id"),
-        contribMicro(col("tf"), col("idf_micro"), col("dl"), col("avgdl"))
-          .as("c_micro"))
-      .localCheckpoint()
-    val qt = broadcast(queryTerms.map(t => (t._1, t._2))
-      .toDF("query_id", "tok"))
-    // the doubling's termination backstop (ADVICE r16: an unbounded
+    val vocab = queryTerms.map(_._2).distinct
+    val dfOf = vocab.map(t => t -> index.terms.get(t).fold(0L)(_._1)).toMap
+    // the escalation's termination backstop (ADVICE r16: an unbounded
     // `b *= 2` overflows Int once a term's df passes ~2^30 in the
     // tie-plateau regime): exhaustion is guaranteed at B > max df, so
-    // clamp the doubling there — one ≤ |terms|-row aggregate over the
-    // checkpointed contribution frame (the bounded-scalar rule). A df
-    // at/above Int.MaxValue cannot exhaust through an Int-k prefix heap
-    // at all: fail loudly instead of looping forever.
-    val maxDf = contrib.groupBy("tok").agg(count(lit(1)).as("df"))
-      .agg(coalesce(max(col("df")), lit(0L))).collect()(0).getLong(0)
+    // clamp the escalation there. A df at/above Int.MaxValue cannot
+    // exhaust through an Int prefix depth at all: fail loudly instead
+    // of looping forever.
+    val maxDf = dfOf.values.foldLeft(0L)(math.max)
     require(maxDf < Int.MaxValue,
       s"bm25SearchPruned: max term df $maxDf exceeds the Int prefix-depth " +
         "ceiling — the TA certificate cannot be driven to exhaustion; " +
         "use bm25Search for this corpus/term mix")
     val bCeil = (maxDf + 1L).toInt
+    val postings = index.postings.filter(col("tok").isin(vocab: _*))
+    // the query-term table as two literal maps: the prefix → (query, doc)
+    // and candidate → (query, doc, term) fan-outs are projections, not
+    // joins against a broadcast local table (each of which costs a
+    // collect job per round)
+    val queriesOfTerm = typedLit(queryTerms.groupBy(_._2)
+      .map { case (t, qs) => t -> qs.map(_._1).distinct })
+    val termsOfQuery = typedLit(qTermsOf)
+    // sizes against the session's broadcast threshold, at Spark's
+    // per-row estimate (8 bytes + the columns' default sizes), from row
+    // counts the driver knows exactly
+    val broadcastBytes =
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    def fits(bytes: Long) = broadcastBytes >= 0 && bytes <= broadcastBytes
+    val candRowBytes = // (query_id, doc_id, tok)
+      8L + 2 * LongType.defaultSize + StringType.defaultSize
+    val postingsFit = // the query terms' (tok, rank, doc_id, c_micro) rows
+      fits(dfOf.values.sum * (8L + StringType.defaultSize +
+        IntegerType.defaultSize + 2 * LongType.defaultSize))
     var b = math.max(initialB, k)
     // ESCALATING prefix schedule (r17): ×2 after the first failed
     // round, ×4 thereafter. Any schedule is EXACT (the certificate is
@@ -348,77 +440,66 @@ object Retrieval {
     // exactly 2× an intermediate B: it overshoots one round by ≤ 4×
     // (vs doubling's 2×), bounded and linear in the final round.
     var bMult = 2L
-    var prev: DataFrame = null
     var result: DataFrame = null
     var diag: PrunedDiag = null
     var rounds = 0
     while (result == null) {
       rounds += 1
-      // prefix rows are reused by the certificate collect AND the
-      // candidate/result plan: checkpoint the small frame (|terms|·B),
-      // releasing the previous round's (eager-next rule)
-      val topB = TopK.topKPerGroup(contrib, "tok", "c_micro", "doc_id", b)
-        .localCheckpoint()
-      if (prev != null)
-        org.apache.spark.sql.graft.ColumnBridge.releaseLocalCheckpoint(prev)
-      prev = topB
-      // per-term bound: exhausted (max rank < B) → 0; else the B-th
-      // entry's contribution. ≤ |terms| rows to the driver.
-      // topKPerGroup re-emits the score as DOUBLE (exact for micro
-      // longs < 2^53) — cast back for the driver read
-      val boundsDf = topB.groupBy("tok")
-        .agg(max(col("rank")).as("mr"),
-          max(when(col("rank") === b, col("c_micro"))).cast("long")
-            .as("at_b"))
-        .select(lit("t").as("kind"), col("tok").as("key"),
-          col("mr").cast("long").as("v1"), col("at_b").as("v2"))
-      val cand = topB.join(qt, Seq("tok"))
-        .select(col("query_id"), col("doc_id")).distinct()
+      val exhausted = vocab.filter(t => dfOf(t) < b).toSet
       // exact candidate scores: the (|Q|·terms·B)-bounded candidate×term
-      // frame joins INTO the contribution frame — docs missing a term
-      // simply contribute nothing (inner join). NOT force-broadcast:
-      // while B stays small AQE broadcasts it at runtime anyway, and in
-      // the adversarial exhaustion limit (all-equal scores force B → max
-      // df) the frame approaches the exact route's (query, doc, term)
-      // mass — a forced broadcast would OOM exactly when the equi-join
-      // shape is the right degradation.
-      val scores = contrib
-        .join(cand.join(qt, Seq("query_id")), Seq("tok", "doc_id"))
+      // frame joins INTO the postings — docs missing a term simply
+      // contribute nothing (inner join). A SMALL round — the query
+      // terms' postings and the frame's row bound
+      // Σ_q |T_q| · Σ_{t∈T_q} min(df_t, B) both fit the broadcast
+      // threshold — runs in one task per job, two jobs a round: the
+      // prefix dedupe feeding the broadcast, then the postings scan,
+      // sums, top-k and certificate. Otherwise every step stays
+      // distributed and the planner picks the join (AQE broadcasts the
+      // frame at run time while it is small): in the adversarial
+      // exhaustion limit (all-equal scores force B → max df) the frame
+      // approaches the exact route's (query, doc, term) mass, where a
+      // forced broadcast would OOM exactly when the equi-join shape is
+      // the right degradation.
+      val rowBound = qTermsOf.values.map { ts =>
+        ts.size.toLong * ts.map(t => math.min(dfOf(t), b.toLong)).sum
+      }.sum
+      val small = postingsFit && fits(rowBound * candRowBytes)
+      def local(df: DataFrame) = if (small) df.coalesce(1) else df
+      val candTerms = local(postings.filter(col("rank") <= b)
+          .select(explode(element_at(queriesOfTerm, col("tok")))
+            .as("query_id"), col("doc_id")))
+        .distinct()
+        .select(col("query_id"), col("doc_id"),
+          explode(element_at(termsOfQuery, col("query_id"))).as("tok"))
+      val scores = local(postings)
+        .join(if (small) broadcast(candTerms) else candTerms,
+          Seq("tok", "doc_id"))
         .groupBy("query_id", "doc_id")
         .agg(sum(col("c_micro")).cast("long").as("score_micro"))
       val topk =
         TopK.topKPerGroup(scores, "query_id", "score_micro", "doc_id", k)
-      // ONE driver action per round (r17): the per-term bounds and the
-      // per-query k-th scores ride a single union collect — the bounds
-      // job only re-read the topB checkpoint, so as a separate action
-      // it was pure job-coordination latency (~one scheduling floor per
-      // round; under the former pure-doubling schedule the plateau loop
-      // ran ~8 coordination-bound rounds at the gate corpus — cpu_par
-      // 0.36, BENCH r17 pre-fix; the ×2-then-×4 escalation below cut
-      // that to ~log₄ rounds). Both
-      // halves stay ≤ |terms| + |queries| rows (the bounded-scalar
-      // rule); query_id rides the string key column and round-trips
-      // exactly (a decimal-rendered long).
-      val certRows = boundsDf.unionAll(
-        topk.filter(col("rank") === k)
+      // ONE driver action per round (r17): the unexhausted terms'
+      // `rank = B` rows (their bounds) and the per-query k-th scores
+      // ride a single union collect of ≤ |terms| + |queries| rows (the
+      // bounded-scalar rule); query_id rides the string key column and
+      // round-trips exactly (a decimal-rendered long).
+      val certRows = postings.filter(col("rank") === b)
+        .select(lit("t").as("kind"), col("tok").as("key"),
+          col("c_micro").as("v"))
+        .unionAll(topk.filter(col("rank") === k)
           .select(lit("q").as("kind"),
             col("query_id").cast("string").as("key"),
-            col("score_micro").cast("long").as("v1"),
-            lit(null).cast("long").as("v2")))
+            col("score_micro").cast("long").as("v")))
         .collect()
-      val bounds = certRows.iterator.filter(_.getString(0) == "t").map {
-        r =>
-          val exhausted = r.getLong(2) < b
-          r.getString(1) ->
-            (if (exhausted) 0L else r.getLong(3), exhausted)
-      }.toMap
+      val bound = certRows.iterator.filter(_.getString(0) == "t")
+        .map(r => r.getString(1) -> r.getLong(2)).toMap
       val kth = certRows.iterator.filter(_.getString(0) == "q")
         .map(r => r.getString(1).toLong -> r.getLong(2)).toMap
       var anyByBound = false
       val unterminated = qTermsOf.keys.filter { q =>
         val ts = qTermsOf(q)
-        val allExhausted = ts.forall(t => bounds.get(t).forall(_._2))
-        val tau = ts.map(t => bounds.get(t).map(_._1).getOrElse(0L)).sum
+        val allExhausted = ts.forall(exhausted)
+        val tau = ts.map(t => bound.getOrElse(t, 0L)).sum
         val byBound = kth.get(q).exists(_ > tau)
         if (byBound && !allExhausted) anyByBound = true
         !(allExhausted || byBound)

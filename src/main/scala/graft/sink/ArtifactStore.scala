@@ -2,7 +2,9 @@ package graft.sink
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Durable store for TRAINED ARTIFACTS (IVF centroids, PQ codebooks,
@@ -23,7 +25,16 @@ import org.apache.spark.sql.types._
   *
   * At 100 TB these artifacts stay kilobytes-to-megabytes (vocab-capped,
   * cell/codebook-bounded) — the whole point is that serving a corpus-sized
-  * query never re-runs the driver-coordinated iterative fit.
+  * query never re-runs the driver-coordinated iterative fit. Every read
+  * passes the artifact's declared schema and sorts on the driver, so a hit
+  * costs exactly one job: the collect.
+  *
+  * The exception is the BM25 impact index ([[impactIndex]]): a
+  * CORPUS-SIZED derived table (one postings row per distinct (term, doc)
+  * pair), not a KB-sized artifact. It shares the keying, the atomic move
+  * and the superseded-fingerprint GC, but is written by Spark in parallel,
+  * read back as a frame (never collected), and only its per-term table is
+  * held on the driver.
   */
 object ArtifactStore {
   /** Artifact root: override with -Dgraft.artifacts.dir=… or
@@ -96,16 +107,13 @@ object ArtifactStore {
   private def exists(path: String): Boolean =
     Files.exists(Paths.get(path))
 
-  /** Write `rows` as a single-file parquet artifact, atomically: tmp dir →
-    * ATOMIC_MOVE into place; a racing winner is left untouched. */
-  private def writeAtomic(spark: SparkSession, path: String,
-      schema: StructType, rows: Seq[Row]): Unit = {
+  /** Run `write` into a tmp dir, then ATOMIC_MOVE it into place; a racing
+    * winner is left untouched. */
+  private def writeAtomic(path: String)(write: String => Unit): Unit = {
     val target = Paths.get(path)
     Files.createDirectories(target.getParent)
     val tmp = Paths.get(path + ".tmp-" + java.util.UUID.randomUUID())
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    write(tmp.toString)
     try {
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
       pruneSuperseded(path)
@@ -116,6 +124,20 @@ object ArtifactStore {
         graft.Fs.deleteRecursively(tmp)
     }
   }
+
+  /** `rows` as a single-file parquet table at `path`. */
+  private def writeRows(spark: SparkSession, path: String,
+      schema: StructType, rows: Seq[Row]): Unit = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  /** A stored artifact's rows, read with its declared schema (no
+    * schema-inference job): one job, the collect. */
+  private def readRows(spark: SparkSession, path: String,
+      schema: StructType): Array[Row] =
+    spark.read.schema(schema).parquet(path).collect()
 
   // ---- IVF centroids: rows (i, vec array<float>) ----
 
@@ -131,12 +153,12 @@ object ArtifactStore {
       train: => Array[Array[Float]]): Array[Array[Float]] = {
     val path = dirFor(datasetDir, name)
     if (exists(path)) {
-      spark.read.parquet(path).orderBy("i").collect()
+      readRows(spark, path, CentroidSchema).sortBy(_.getInt(0))
         .map(_.getSeq[Float](1).toArray)
     } else {
       val cs = train
-      writeAtomic(spark, path, CentroidSchema,
-        cs.zipWithIndex.map { case (v, i) => Row(i, v.toIndexedSeq) }.toSeq)
+      writeAtomic(path)(writeRows(spark, _, CentroidSchema,
+        cs.zipWithIndex.map { case (v, i) => Row(i, v.toIndexedSeq) }.toSeq))
       cs
     }
   }
@@ -153,15 +175,16 @@ object ArtifactStore {
       train: => Array[Array[Array[Float]]]): Array[Array[Array[Float]]] = {
     val path = dirFor(datasetDir, name)
     if (exists(path)) {
-      spark.read.parquet(path).orderBy("j", "c").collect()
+      readRows(spark, path, CodebookSchema)
+        .sortBy(r => (r.getInt(0), r.getInt(1)))
         .map(r => (r.getInt(0), r.getSeq[Float](2).toArray))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map(_._2.map(_._2)).toArray
     } else {
       val cb = train
-      writeAtomic(spark, path, CodebookSchema, (for {
+      writeAtomic(path)(writeRows(spark, _, CodebookSchema, (for {
         j <- cb.indices; c <- cb(j).indices
-      } yield Row(j, c, cb(j)(c).toIndexedSeq)).toSeq)
+      } yield Row(j, c, cb(j)(c).toIndexedSeq)).toSeq))
       cb
     }
   }
@@ -178,12 +201,12 @@ object ArtifactStore {
       train: => (Array[String], Array[Long])): (Array[String], Array[Long]) = {
     val path = dirFor(datasetDir, name)
     if (exists(path)) {
-      val rows = spark.read.parquet(path).orderBy("rank").collect()
+      val rows = readRows(spark, path, VocabSchema).sortBy(_.getInt(0))
       (rows.map(_.getString(1)), rows.map(_.getLong(2)))
     } else {
       val (toks, cnts) = train
-      writeAtomic(spark, path, VocabSchema,
-        toks.indices.map(i => Row(i, toks(i), cnts(i))).toSeq)
+      writeAtomic(path)(writeRows(spark, _, VocabSchema,
+        toks.indices.map(i => Row(i, toks(i), cnts(i))).toSeq))
       (toks, cnts)
     }
   }
@@ -199,13 +222,56 @@ object ArtifactStore {
       train: => Seq[(String, String)]): Seq[(String, String)] = {
     val path = dirFor(datasetDir, name)
     if (exists(path)) {
-      spark.read.parquet(path).orderBy("i").collect()
+      readRows(spark, path, MergeSchema).sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
     } else {
       val ms = train
-      writeAtomic(spark, path, MergeSchema,
-        ms.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) })
+      writeAtomic(path)(writeRows(spark, _, MergeSchema,
+        ms.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }))
       ms
     }
+  }
+
+  // ---- BM25 impact index: postings (tok, rank, doc_id, c_micro), a
+  //      corpus-sized parallel write, plus terms (tok, df, idf_micro) ----
+
+  private val PostingsSchema = StructType(Seq(
+    StructField("tok", StringType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("doc_id", LongType, nullable = false),
+    StructField("c_micro", LongType, nullable = false)))
+
+  private val TermsSchema = StructType(Seq(
+    StructField("tok", StringType, nullable = false),
+    StructField("df", LongType, nullable = false),
+    StructField("idf_micro", LongType, nullable = false)))
+
+  /** L1 over the stored `terms` tables, keyed by store path (the path
+    * carries the dataset fingerprint, so a rewritten corpus is a new key):
+    * tok → (df, idf_micro). */
+  private val termsMemo = TrieMap.empty[String, Map[String, (Long, Long)]]
+
+  /** The impact index for `(datasetDir, name)`: the postings as a frame
+    * read with their declared schema (no job until a query runs on it) and
+    * the term table from the driver memo. On a store miss `build` (by-name)
+    * returns the unexecuted postings plan and the term rows; the postings
+    * are written by Spark in parallel, in the plan's per-term rank order. */
+  def impactIndex(spark: SparkSession, datasetDir: String, name: String)(
+      build: => (DataFrame, Seq[(String, Long, Long)]))
+      : (DataFrame, Map[String, (Long, Long)]) = {
+    val path = dirFor(datasetDir, name)
+    if (!exists(path)) {
+      val (postings, terms) = build
+      writeAtomic(path) { tmp =>
+        postings.write.parquet(s"$tmp/postings")
+        writeRows(spark, s"$tmp/terms", TermsSchema,
+          terms.map { case (t, df, idf) => Row(t, df, idf) })
+      }
+      termsMemo(path) = terms.map { case (t, df, idf) => t -> (df, idf) }.toMap
+    }
+    val terms = termsMemo.getOrElseUpdate(path,
+      readRows(spark, s"$path/terms", TermsSchema)
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    (spark.read.schema(PostingsSchema).parquet(s"$path/postings"), terms)
   }
 }

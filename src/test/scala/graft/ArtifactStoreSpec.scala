@@ -13,19 +13,8 @@ import graft.sink.ArtifactStore
   * any kind ran on the hit path — strictly stronger than asserting the
   * absence of ML stages on a listener. */
 class ArtifactStoreSpec extends SparkSpec {
-  private def withTempRoot[A](body: => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-artifacts-spec")
-    val prev = sys.props.get("graft.artifacts.dir")
-    sys.props("graft.artifacts.dir") = tmp.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.artifacts.dir") = v
-      case None => sys.props -= "graft.artifacts.dir"
-    }
-  }
-
   test("ivf centroids: train-once, then zero-training loads serve equally") {
-    withTempRoot {
+    withArtifactRoot {
       val emb = graft.ingest.Sources.table(spark, sf("sf0.001"), "embeddings")
       var trained = 0
       val t1 = ArtifactStore.ivfCentroids(spark, sf("sf0.001"), "ivf-c16-s42") {
@@ -51,7 +40,7 @@ class ArtifactStoreSpec extends SparkSpec {
   }
 
   test("pq codebooks / unigram vocab / bpe merges round-trip exactly") {
-    withTempRoot {
+    withArtifactRoot {
       val dir = sf("sf0.001")
       val docs = graft.ingest.Sources.table(spark, dir, "documents")
       val emb = graft.ingest.Sources.table(spark, dir, "embeddings")
@@ -79,8 +68,44 @@ class ArtifactStoreSpec extends SparkSpec {
     }
   }
 
+  test("a store hit on a fresh session runs exactly its collect's job " +
+      "(declared schemas: no schema-inference job)") {
+    withArtifactRoot {
+      val dir = sf("sf0.001")
+      ArtifactStore.ivfCentroids(spark, dir, "ivf")(
+        Array(Array(3f, 4f), Array(1f, 2f)))
+      ArtifactStore.pqCodebooks(spark, dir, "pq")(
+        Array(Array(Array(1f), Array(2f)), Array(Array(3f), Array(4f))))
+      ArtifactStore.unigramVocab(spark, dir, "vocab")(
+        (Array("b", "a"), Array(2L, 1L)))
+      ArtifactStore.bpeMerges(spark, dir, "bpe")(Seq(("b", "a"), ("a", "b")))
+      val fresh = spark.newSession()
+      val meter = Meter(fresh)
+      try {
+        val hits = Seq[(String, () => Any)](
+          "ivfCentroids" -> (() => ArtifactStore.ivfCentroids(fresh, dir,
+            "ivf")(fail("hit")).map(_.toSeq).toSeq),
+          "pqCodebooks" -> (() => ArtifactStore.pqCodebooks(fresh, dir,
+            "pq")(fail("hit")).map(_.map(_.toSeq).toSeq).toSeq),
+          "unigramVocab" -> (() => ArtifactStore.unigramVocab(fresh, dir,
+            "vocab")(fail("hit")) match { case (t, c) => (t.toSeq, c.toSeq) }),
+          "bpeMerges" -> (() => ArtifactStore.bpeMerges(fresh, dir, "bpe")(
+            fail("hit"))))
+        val served = hits.map { case (name, read) =>
+          val (v, usage) = meter.run(read())
+          assert(usage.jobs == 1, s"$name hit ran ${usage.jobs} jobs")
+          v
+        }
+        // the driver-side sort keeps the stored order
+        assert(served == Seq(Seq(Seq(3f, 4f), Seq(1f, 2f)),
+          Seq(Seq(Seq(1f), Seq(2f)), Seq(Seq(3f), Seq(4f))),
+          (Seq("b", "a"), Seq(2L, 1L)), Seq(("b", "a"), ("a", "b"))))
+      } finally meter.close()
+    }
+  }
+
   test("regenerated dataset content invalidates the artifact (no stale serve)") {
-    withTempRoot {
+    withArtifactRoot {
       val data = java.nio.file.Files.createTempDirectory("graft-as-data")
       java.nio.file.Files.writeString(data.resolve("documents.parquet"), "v1")
       var trains = 0
@@ -97,7 +122,7 @@ class ArtifactStoreSpec extends SparkSpec {
   }
 
   test("a fresh fingerprint GCs the superseded artifact dirs") {
-    withTempRoot {
+    withArtifactRoot {
       val data = java.nio.file.Files.createTempDirectory("graft-as-gc")
       java.nio.file.Files.writeString(data.resolve("d.parquet"), "v1")
       ArtifactStore.bpeMerges(spark, data.toString, "bpe")(Seq(("a", "b")))
@@ -120,7 +145,7 @@ class ArtifactStoreSpec extends SparkSpec {
   }
 
   test("artifacts are keyed by dataset AND name — no cross-contamination") {
-    withTempRoot {
+    withArtifactRoot {
       val a = ArtifactStore.bpeMerges(spark, "/data/corpusA", "bpe")(
         Seq(("a", "a")))
       val b = ArtifactStore.bpeMerges(spark, "/data/corpusB", "bpe")(

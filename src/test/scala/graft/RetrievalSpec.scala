@@ -211,6 +211,102 @@ class RetrievalSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
   }
 
+  test("bm25SearchPruned: past the broadcast threshold every round stays " +
+      "distributed (no broadcast) and exact") {
+    val noBroadcast = GraftSession.derive(spark,
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    val d = graft.ingest.Sources.table(noBroadcast, sf("sf0.001"),
+      "documents")
+    val qt = bm25Qt(docsDf)
+    val prunedDf = Retrieval.bm25SearchPruned(d, qt)
+    assert(prunedDf.collect().toSeq ==
+      Retrieval.bm25Search(docsDf, qt).collect().toSeq)
+    val plan = prunedDf.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"), s"no broadcast:\n$plan")
+  }
+
+  /** `qs` with `d`'s trained idf, the `(query_id, tok, idf_micro)` rows. */
+  private def qtFor(d: org.apache.spark.sql.DataFrame,
+      qs: Seq[(Long, Seq[String])]): Seq[(Long, String, Long)] = {
+    val idf = Retrieval.trainBm25Idf(d, qs.flatMap(_._2).distinct).toMap
+    qs.flatMap { case (qid, ts) => ts.map(t => (qid, t, idf(t))) }
+  }
+
+  test("bm25 impact index: two query sets served from one persisted " +
+      "index, each ≡ bm25Search row-for-row") {
+    withArtifactRoot {
+      val dir = sf("sf0.001")
+      val d = docsDf
+      var builds = 0
+      Retrieval.bm25Index(spark, dir) { builds += 1; d }
+      val other = Seq(7L -> Seq("table", "join", "dup"),
+        8L -> Seq("vector"), 9L -> Seq("window", "key", "scan", "ghostterm"))
+      for (qs <- Seq(Retrieval.Bm25Queries, other)) {
+        val qt = qtFor(d, qs)
+        val index = Retrieval.bm25Index(spark, dir)(
+          fail("a persisted index must not rebuild"))
+        val got = Retrieval.bm25SearchPruned(index, qt).collect().toSeq
+        assert(got == Retrieval.bm25Search(d, qt).collect().toSeq)
+        assert(got.map(_.getLong(0)).distinct.size == qs.size)
+      }
+      assert(builds == 1)
+    }
+  }
+
+  test("bm25 impact index: rewriting documents at the same path builds " +
+      "a new index whose results ≡ the exact route on the new data") {
+    withArtifactRoot {
+      val data = java.nio.file.Files.createTempDirectory("graft-bm25-index")
+      val vocab = Vector("spark", "dup", "hash", "table", "join", "scan")
+      def write(seed: Int): Unit = {
+        val r = new scala.util.Random(seed)
+        (0 until 200).map(i => (i.toLong, Seq.fill(3 + r.nextInt(10))(
+            vocab(r.nextInt(vocab.size))).mkString(" ")))
+          .toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$data/documents.parquet")
+      }
+      val qs = Seq(1L -> Seq("spark", "dup"), 2L -> Seq("hash", "table"))
+      var builds = 0
+      def serve(): (Seq[org.apache.spark.sql.Row],
+          Seq[org.apache.spark.sql.Row]) = {
+        val d = graft.ingest.Sources.table(spark, data.toString, "documents")
+        val index = Retrieval.bm25Index(spark, data.toString) {
+          builds += 1; d }
+        val qt = qtFor(d, qs)
+        (Retrieval.bm25SearchPruned(index, qt).collect().toSeq,
+          Retrieval.bm25Search(d, qt).collect().toSeq)
+      }
+      try {
+        write(1)
+        val (pruned1, exact1) = serve()
+        assert(serve()._1 == pruned1 && builds == 1)
+        write(2)
+        val (pruned2, exact2) = serve()
+        assert(builds == 2, "a rewritten corpus must build a new index")
+        assert(pruned1 == exact1 && pruned2 == exact2)
+        assert(pruned1 != pruned2, "the two corpora must rank differently")
+      } finally Fs.deleteQuietly(data)
+    }
+  }
+
+  test("q_bm25_maxscore warm call: no job outside the certificate rounds, " +
+      "at most 2 per round") {
+    withArtifactRoot {
+      val dir = sf("sf0.001")
+      val entry = SparkEntry.queries("q_bm25_maxscore")
+      entry(spark, dir).collect() // trains the idf, builds the index
+      val meter = Meter(spark)
+      val (warm, usage) = try meter.run(entry(spark, dir))
+        finally meter.close()
+      val (exact, diag) = Retrieval.bm25SearchPrunedDiag(
+        Retrieval.bm25Index(spark, dir)(fail("the index must be warm")),
+        bm25Qt(docsDf), Retrieval.Bm25TopK, Retrieval.MaxScorePrefixB)
+      assert(warm.collect().toSeq == exact.collect().toSeq)
+      assert(usage.jobs <= 2L * diag.rounds,
+        s"${usage.jobs} jobs for ${diag.rounds} certificate rounds")
+    }
+  }
+
   test("hybridSearch: fusion is consistent with its two component " +
       "lists (RRF arithmetic, membership, rank order)") {
     val d = docsDf
