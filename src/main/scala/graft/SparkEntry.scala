@@ -326,8 +326,9 @@ object SparkEntry {
     // index hit.
     "q_bm25_maxscore" -> ((s, dir) => {
       lazy val d = Sources.table(s, dir, "documents")
-      Retrieval.bm25SearchPruned(Retrieval.bm25Index(s, dir)(d),
-        bm25Terms(dir, d))
+      val qt = bm25Terms(dir, d)
+      Retrieval.bm25SearchPruned(
+        Retrieval.bm25Index(s, dir, qt.map(_._2).distinct)(d), qt)
     }),
     // reciprocal-rank-fusion hybrid search: the query DOCS' BM25 ranking
     // fused with their exact embedding-cosine ranking (vec_id ≡ doc_id),

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.sink.ArtifactStore
 
@@ -228,28 +227,30 @@ object Retrieval {
   final case class PrunedDiag(rounds: Int, finalB: Int, byBound: Boolean)
 
   /** Query-independent BM25 impact index of one corpus: `postings` rows
-    * `(tok, rank, doc_id, c_micro)` over the FULL vocabulary, `rank`
-    * numbering each term's postings from 1 in (c_micro desc, doc_id asc)
-    * order, and `terms` on the driver, tok → (df, idf_micro). A
-    * contribution depends only on tf, the term's idf, dl and avgdl, so
-    * one index serves every query set over the same corpus; the
-    * vocabulary (not the corpus) is driver-resident. */
+    * `(tok, rank, doc_id, c_micro)`, `rank` numbering each term's
+    * postings from 1 in (c_micro desc, doc_id asc) order, and `terms`,
+    * tok → (df, idf_micro), on the driver for exactly the vocabulary the
+    * index was opened for (`None`: the term is absent from the corpus).
+    * A contribution depends only on tf, the term's idf, dl and avgdl, so
+    * one persisted index serves every query set over the same corpus;
+    * the driver holds ≤ |query terms| term rows, never the vocabulary. */
   final case class Bm25Index(postings: DataFrame,
-      terms: Map[String, (Long, Long)])
+      terms: Map[String, Option[(Long, Long)]])
 
   /** Artifact name of the persisted index (a layout change is a new
     * version, never a stale read). */
   private val Bm25IndexName = "bm25-impact-v1"
 
-  /** The index's two tables: the unexecuted postings plan (one tf
-    * aggregate, the shared [[contribMicro]] Column, one per-term rank
-    * window) and the driver-built term rows. Costs one (N, Σ dl) stats
-    * collect and one ≤ |vocab|-row df collect; idf comes from
-    * [[idfMicro]] over the same N and df as [[trainBm25Idf]]. */
-  private def bm25IndexTables(
-      documents: DataFrame): (DataFrame, Seq[(String, Long, Long)]) = {
-    val spark = documents.sparkSession
-    import spark.implicits._
+  /** The index's unexecuted frame, `(tok, rank, doc_id, c_micro, df,
+    * idf_micro)` per (term, doc), over `vocab` or (None) the full
+    * vocabulary: one tf aggregate, then two windows over the same per-term
+    * partitioning — df, then the rank by the shared [[contribMicro]]
+    * Column. idf is [[idfMicro]] over the same N and df as
+    * [[trainBm25Idf]], run in the task, so no vocabulary-sized table ever
+    * reaches the driver. Costs one (N, Σ dl) stats collect. A vocabulary
+    * filter before the aggregate changes no df or rank. */
+  private def bm25IndexFrame(documents: DataFrame,
+      vocab: Option[Seq[String]]): DataFrame = {
     val docs = documents.filter(col("text").isNotNull)
       .select(col("doc_id").cast("long").as("doc_id"),
         TextOps.tokens(col("text")).as("toks"))
@@ -258,42 +259,50 @@ object Retrieval {
     val (nDocs, totalDl) = (stats.getLong(0), stats.getLong(1))
     // the exact route's avgdl: one correctly-rounded double division
     val avgdl = if (nDocs > 0) totalDl.toDouble / nDocs.toDouble else 0.0
-    val tf = docs
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("tok"))
+    val idf = udf((df: Long) => idfMicro(nDocs, df))
+    val toks = docs.select(col("doc_id"),
+      size(col("toks")).cast("long").as("dl"), explode(col("toks")).as("tok"))
+    val byTok = Window.partitionBy("tok")
+    vocab.fold(toks)(v => toks.filter(col("tok").isin(v: _*)))
       .groupBy("tok", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-    val terms = tf.groupBy("tok").agg(count(lit(1)).as("df")).collect()
-      .map { r =>
-        val df = r.getLong(1)
-        (r.getString(0), df, idfMicro(nDocs, df))
-      }.sortBy(_._1).toSeq
-    val postings = tf.join(terms.toDF("tok", "df", "idf_micro"), Seq("tok"))
-      .select(col("tok"), col("doc_id"),
-        contribMicro(col("tf"), col("idf_micro"), col("dl"), lit(avgdl))
-          .as("c_micro"))
-      .select(col("tok"), row_number().over(Window.partitionBy("tok")
+      .withColumn("df", count(lit(1)).over(byTok))
+      .withColumn("idf_micro", idf(col("df")))
+      .withColumn("c_micro",
+        contribMicro(col("tf"), col("idf_micro"), col("dl"), lit(avgdl)))
+      .select(col("tok"), row_number().over(byTok
           .orderBy(col("c_micro").desc, col("doc_id").asc)).as("rank"),
-        col("doc_id"), col("c_micro"))
-    (postings, terms)
+        col("doc_id"), col("c_micro"), col("df"), col("idf_micro"))
   }
 
-  /** The index of `documents`, built in memory for this call: the
-    * postings are eagerly localCheckpointed and never released here — the
-    * returned plan reads them, and the blocks free via ContextCleaner once
-    * the result frame is garbage (the graph-loop outputs' precedent). */
-  def bm25Index(documents: DataFrame): Bm25Index = {
-    val (postings, terms) = bm25IndexTables(documents)
-    Bm25Index(postings.localCheckpoint(),
-      terms.map { case (t, df, idf) => t -> (df, idf) }.toMap)
+  /** The frame's two tables: the postings and one `(tok, df, idf_micro)`
+    * row per term, both over one eager localCheckpoint, so the corpus
+    * pass runs once. Never released here — the returned plans read it,
+    * and the blocks free via ContextCleaner once they are garbage (the
+    * graph-loop outputs' precedent). */
+  private def bm25IndexTables(documents: DataFrame,
+      vocab: Option[Seq[String]]): (DataFrame, DataFrame) = {
+    val ix = bm25IndexFrame(documents, vocab).localCheckpoint()
+    (ix.select("tok", "rank", "doc_id", "c_micro"),
+      ix.filter(col("rank") === 1).select("tok", "df", "idf_micro"))
   }
 
-  /** The persisted index of the dataset at `datasetDir`, built from
-    * `documents` (by-name: read only on a store miss) once per dataset
-    * identity and served from [[ArtifactStore.impactIndex]]. */
-  def bm25Index(spark: SparkSession, datasetDir: String)(
+  /** The index of `documents` over `vocab` only, built in memory for
+    * this call: one ≤ |vocab|-row term collect. */
+  def bm25Index(documents: DataFrame, vocab: Seq[String]): Bm25Index = {
+    val (postings, terms) = bm25IndexTables(documents, Some(vocab))
+    val found = terms.collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    Bm25Index(postings, vocab.map(t => t -> found.get(t)).toMap)
+  }
+
+  /** The persisted full-vocabulary index of the dataset at `datasetDir`,
+    * opened for `vocab`: built from `documents` (by-name: read only on a
+    * store miss) once per dataset identity and served from
+    * [[ArtifactStore.impactIndex]]. */
+  def bm25Index(spark: SparkSession, datasetDir: String, vocab: Seq[String])(
       documents: => DataFrame): Bm25Index = {
     val (postings, terms) = ArtifactStore.impactIndex(spark, datasetDir,
-      Bm25IndexName)(bm25IndexTables(documents))
+      Bm25IndexName, vocab)(bm25IndexTables(documents, None))
     Bm25Index(postings, terms)
   }
 
@@ -309,12 +318,13 @@ object Retrieval {
     *
     * Algorithm (top-k-only pruning — score-exact for the returned k):
     *  1. The [[Bm25Index]] holds the per-(term, doc) micro-long
-    *     contributions of the whole vocabulary with their impact rank —
-    *     query-INDEPENDENT, unlike the exact route's per-(query, doc,
-    *     term) aggregate, so it is built once per corpus (persisted by
-    *     the entry, in memory for the `DataFrame` overload) and the |Q|
-    *     fan-out never touches corpus-sized data. The query's idf must
-    *     be the index's (`require`d bit for bit).
+    *     contributions with their impact rank — query-INDEPENDENT,
+    *     unlike the exact route's per-(query, doc, term) aggregate, so
+    *     the entry persists it once per corpus over the whole vocabulary,
+    *     and the `DataFrame` overload builds it in memory over the query
+    *     vocabulary only; either way the |Q| fan-out never touches
+    *     corpus-sized data. The query's idf must be the index's
+    *     (`require`d bit for bit).
     *  2. Impact-ordered prefixes are a predicate, `tok ∈ T ∧ rank ≤ B`,
     *     over the index. A term is exhausted when its driver-held
     *     `df < B`; the bound of an unexhausted term is its `rank = B`
@@ -322,8 +332,8 @@ object Retrieval {
     *  3. Candidates per query = the union of its terms' prefixes; each
     *     candidate is scored EXACTLY (its contributions on ALL the
     *     query's terms, fetched by an equi-join of the query-load-bounded
-    *     candidate×term frame against the postings — a broadcast in a
-    *     small round, see the loop — so the corpus side never
+    *     candidate×term frame against the postings — AQE broadcasts
+    *     the frame while it is small, so the corpus side never
     *     re-shuffles).
     *  4. Termination certificate per query: a non-candidate doc's
     *     contribution on term t is ≤ bound_B(t) (the B-th prefix entry's
@@ -347,11 +357,13 @@ object Retrieval {
     *     termination at B ≥ max df.
     *
     * Scale: the corpus-sized work is the index build — one tokenize +
-    * tf aggregate and one per-term rank window, |Q|-independent and paid
-    * once per corpus identity when persisted. A round reads the query
-    * terms' postings by predicate (prefixes as `rank ≤ B`); everything
-    * |Q|-proportional is bounded by |Q|·terms·B rows. The exact route's
-    * dense-regime |Q|·N score matrix never materializes. MEASURED at
+    * tf aggregate and one per-term partitioning for df and rank, paid
+    * once per corpus identity when persisted (per call, over the query
+    * vocabulary's postings only, for the `DataFrame` overload). A round
+    * reads the query terms' postings by predicate (prefixes as
+    * `rank ≤ B`); everything |Q|-proportional is bounded by |Q|·terms·B
+    * rows. The exact route's dense-regime |Q|·N score matrix never
+    * materializes. MEASURED at
     * scale (SCALING.md §Retrieval, r17, before the index existed: a
     * per-call contribution pass and per-round prefix heaps): on the
     * skewed-idf probe mix the route exists for (one rare df-200 term +
@@ -377,25 +389,28 @@ object Retrieval {
   def bm25SearchPrunedDiag(documents: DataFrame,
       queryTerms: Seq[(Long, String, Long)], k: Int = Bm25TopK,
       initialB: Int = MaxScorePrefixB): (DataFrame, PrunedDiag) =
-    bm25SearchPrunedDiag(bm25Index(documents), queryTerms, k, initialB)
+    bm25SearchPrunedDiag(bm25Index(documents, queryTerms.map(_._2).distinct),
+      queryTerms, k, initialB)
 
   /** The certificate loop over `index` (see [[bm25SearchPruned]]). */
   def bm25SearchPrunedDiag(index: Bm25Index,
       queryTerms: Seq[(Long, String, Long)], k: Int,
       initialB: Int): (DataFrame, PrunedDiag) = {
-    val spark = index.postings.sparkSession
+    val vocab = queryTerms.map(_._2).distinct
+    val unopened = vocab.filterNot(index.terms.contains)
+    require(unopened.isEmpty,
+      s"the index was not opened for ${unopened.mkString(", ")}")
     // one contribution row per (term, doc): safe because idf is a
     // function of the term alone — the query's must be the index's
     queryTerms.foreach { case (_, t, idf) =>
-      index.terms.get(t).foreach { case (_, indexIdf) =>
+      index.terms(t).foreach { case (_, indexIdf) =>
         require(idf == indexIdf, s"term '$t' carries idf_micro $idf, " +
           s"but the index was built with $indexIdf")
       }
     }
     val qTermsOf: Map[Long, Seq[String]] =
       queryTerms.groupBy(_._1).map { case (q, ts) => q -> ts.map(_._2) }
-    val vocab = queryTerms.map(_._2).distinct
-    val dfOf = vocab.map(t => t -> index.terms.get(t).fold(0L)(_._1)).toMap
+    val dfOf = vocab.map(t => t -> index.terms(t).fold(0L)(_._1)).toMap
     // the escalation's termination backstop (ADVICE r16: an unbounded
     // `b *= 2` overflows Int once a term's df passes ~2^30 in the
     // tie-plateau regime): exhaustion is guaranteed at B > max df, so
@@ -416,17 +431,6 @@ object Retrieval {
     val queriesOfTerm = typedLit(queryTerms.groupBy(_._2)
       .map { case (t, qs) => t -> qs.map(_._1).distinct })
     val termsOfQuery = typedLit(qTermsOf)
-    // sizes against the session's broadcast threshold, at Spark's
-    // per-row estimate (8 bytes + the columns' default sizes), from row
-    // counts the driver knows exactly
-    val broadcastBytes =
-      spark.sessionState.conf.autoBroadcastJoinThreshold
-    def fits(bytes: Long) = broadcastBytes >= 0 && bytes <= broadcastBytes
-    val candRowBytes = // (query_id, doc_id, tok)
-      8L + 2 * LongType.defaultSize + StringType.defaultSize
-    val postingsFit = // the query terms' (tok, rank, doc_id, c_micro) rows
-      fits(dfOf.values.sum * (8L + StringType.defaultSize +
-        IntegerType.defaultSize + 2 * LongType.defaultSize))
     var b = math.max(initialB, k)
     // ESCALATING prefix schedule (r17): ×2 after the first failed
     // round, ×4 thereafter. Any schedule is EXACT (the certificate is
@@ -448,32 +452,19 @@ object Retrieval {
       val exhausted = vocab.filter(t => dfOf(t) < b).toSet
       // exact candidate scores: the (|Q|·terms·B)-bounded candidate×term
       // frame joins INTO the postings — docs missing a term simply
-      // contribute nothing (inner join). A SMALL round — the query
-      // terms' postings and the frame's row bound
-      // Σ_q |T_q| · Σ_{t∈T_q} min(df_t, B) both fit the broadcast
-      // threshold — runs in one task per job, two jobs a round: the
-      // prefix dedupe feeding the broadcast, then the postings scan,
-      // sums, top-k and certificate. Otherwise every step stays
-      // distributed and the planner picks the join (AQE broadcasts the
-      // frame at run time while it is small): in the adversarial
-      // exhaustion limit (all-equal scores force B → max df) the frame
-      // approaches the exact route's (query, doc, term) mass, where a
-      // forced broadcast would OOM exactly when the equi-join shape is
+      // contribute nothing (inner join). NOT force-broadcast: while B
+      // stays small AQE broadcasts it at runtime anyway, and in the
+      // adversarial exhaustion limit (all-equal scores force B → max df)
+      // the frame approaches the exact route's (query, doc, term) mass —
+      // a forced broadcast would OOM exactly when the equi-join shape is
       // the right degradation.
-      val rowBound = qTermsOf.values.map { ts =>
-        ts.size.toLong * ts.map(t => math.min(dfOf(t), b.toLong)).sum
-      }.sum
-      val small = postingsFit && fits(rowBound * candRowBytes)
-      def local(df: DataFrame) = if (small) df.coalesce(1) else df
-      val candTerms = local(postings.filter(col("rank") <= b)
-          .select(explode(element_at(queriesOfTerm, col("tok")))
-            .as("query_id"), col("doc_id")))
+      val candTerms = postings.filter(col("rank") <= b)
+        .select(explode(element_at(queriesOfTerm, col("tok")))
+          .as("query_id"), col("doc_id"))
         .distinct()
         .select(col("query_id"), col("doc_id"),
           explode(element_at(termsOfQuery, col("query_id"))).as("tok"))
-      val scores = local(postings)
-        .join(if (small) broadcast(candTerms) else candTerms,
-          Seq("tok", "doc_id"))
+      val scores = postings.join(candTerms, Seq("tok", "doc_id"))
         .groupBy("query_id", "doc_id")
         .agg(sum(col("c_micro")).cast("long").as("score_micro"))
       val topk =

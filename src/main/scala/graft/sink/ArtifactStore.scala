@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Durable store for TRAINED ARTIFACTS (IVF centroids, PQ codebooks,
@@ -31,10 +32,11 @@ import org.apache.spark.sql.types._
   *
   * The exception is the BM25 impact index ([[impactIndex]]): a
   * CORPUS-SIZED derived table (one postings row per distinct (term, doc)
-  * pair), not a KB-sized artifact. It shares the keying, the atomic move
-  * and the superseded-fingerprint GC, but is written by Spark in parallel,
-  * read back as a frame (never collected), and only its per-term table is
-  * held on the driver.
+  * pair, one terms row per vocabulary term), not a KB-sized artifact. It
+  * shares the keying and the atomic move, but is written by Spark in
+  * parallel, read back as a frame (never collected), keeps one superseded
+  * generation for plans still reading it, and puts on the driver only
+  * the term rows a query asks for.
   */
 object ArtifactStore {
   /** Artifact root: override with -Dgraft.artifacts.dir=… or
@@ -79,10 +81,11 @@ object ArtifactStore {
     graft.Fs.md5Hex8(inventory.mkString("|"))
   }
 
-  /** Superseded-fingerprint GC: before a fresh `name-<fp>` goes live, drop
-    * sibling `name-<otherFp>` dirs — artifacts for dataset states that no
-    * longer exist would otherwise accumulate across regenerations. */
-  private def pruneSuperseded(path: String): Unit = {
+  /** Superseded-fingerprint GC: once a fresh `name-<fp>` is live, drop
+    * sibling `name-<otherFp>` dirs but the `keep` most recent — artifacts
+    * for dataset states that no longer exist would otherwise accumulate
+    * across regenerations. */
+  private def pruneSuperseded(path: String, keep: Int): Unit = {
     val target = Paths.get(path)
     val name = target.getFileName.toString
     val prefix = name.substring(0, name.lastIndexOf('-') + 1)
@@ -100,23 +103,26 @@ object ArtifactStore {
             rest == "nodata" || rest.matches("[0-9a-f]{8}")
           }
         } finally ls.close()
-      stale.foreach(graft.Fs.deleteQuietly)
+      stale.sortBy(p => -Files.getLastModifiedTime(p).toMillis).drop(keep)
+        .foreach(graft.Fs.deleteQuietly)
     }
   }
 
   private def exists(path: String): Boolean =
     Files.exists(Paths.get(path))
 
-  /** Run `write` into a tmp dir, then ATOMIC_MOVE it into place; a racing
-    * winner is left untouched. */
-  private def writeAtomic(path: String)(write: String => Unit): Unit = {
+  /** Run `write` into a tmp dir, then ATOMIC_MOVE it into place and prune
+    * the superseded generations but `keep`; a racing winner is left
+    * untouched. */
+  private def writeAtomic(path: String, keep: Int = 0)(
+      write: String => Unit): Unit = {
     val target = Paths.get(path)
     Files.createDirectories(target.getParent)
     val tmp = Paths.get(path + ".tmp-" + java.util.UUID.randomUUID())
     write(tmp.toString)
     try {
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      pruneSuperseded(path)
+      pruneSuperseded(path, keep)
     } catch {
       case _: java.nio.file.FileAlreadyExistsException |
            _: java.nio.file.DirectoryNotEmptyException =>
@@ -233,7 +239,8 @@ object ArtifactStore {
   }
 
   // ---- BM25 impact index: postings (tok, rank, doc_id, c_micro), a
-  //      corpus-sized parallel write, plus terms (tok, df, idf_micro) ----
+  //      corpus-sized parallel write, plus terms (tok, df, idf_micro),
+  //      one row per vocabulary term ----
 
   private val PostingsSchema = StructType(Seq(
     StructField("tok", StringType, nullable = false),
@@ -246,32 +253,44 @@ object ArtifactStore {
     StructField("df", LongType, nullable = false),
     StructField("idf_micro", LongType, nullable = false)))
 
-  /** L1 over the stored `terms` tables, keyed by store path (the path
-    * carries the dataset fingerprint, so a rewritten corpus is a new key):
-    * tok → (df, idf_micro). */
-  private val termsMemo = TrieMap.empty[String, Map[String, (Long, Long)]]
+  /** `df`'s columns in `schema`'s order and types. */
+  private def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
 
-  /** The impact index for `(datasetDir, name)`: the postings as a frame
-    * read with their declared schema (no job until a query runs on it) and
-    * the term table from the driver memo. On a store miss `build` (by-name)
-    * returns the unexecuted postings plan and the term rows; the postings
-    * are written by Spark in parallel, in the plan's per-term rank order. */
-  def impactIndex(spark: SparkSession, datasetDir: String, name: String)(
-      build: => (DataFrame, Seq[(String, Long, Long)]))
-      : (DataFrame, Map[String, (Long, Long)]) = {
+  /** L1 over the stored `terms` tables, keyed by (store path, term) — the
+    * path carries the dataset fingerprint, so a rewritten corpus is a new
+    * key: (df, idf_micro), or None for a term absent from the corpus.
+    * Holds only terms some query asked for, never the vocabulary. */
+  private val termsMemo = TrieMap.empty[(String, String), Option[(Long, Long)]]
+
+  /** The impact index for `(datasetDir, name)`, opened for `vocab`: the
+    * postings as a frame read with their declared schema (no job until a
+    * query runs on it) and `vocab`'s term rows from the memo, a miss
+    * costing one ≤ |vocab|-row collect. On a store miss `build` (by-name)
+    * returns the unexecuted postings and terms plans, which Spark writes
+    * in parallel. The returned frame reads the store lazily, so a
+    * rebuild under a new fingerprint keeps the previous generation: a
+    * plan opened before one rebuild still finds its files. */
+  def impactIndex(spark: SparkSession, datasetDir: String, name: String,
+      vocab: Seq[String])(build: => (DataFrame, DataFrame))
+      : (DataFrame, Map[String, Option[(Long, Long)]]) = {
     val path = dirFor(datasetDir, name)
     if (!exists(path)) {
       val (postings, terms) = build
-      writeAtomic(path) { tmp =>
-        postings.write.parquet(s"$tmp/postings")
-        writeRows(spark, s"$tmp/terms", TermsSchema,
-          terms.map { case (t, df, idf) => Row(t, df, idf) })
+      writeAtomic(path, keep = 1) { tmp =>
+        conform(postings, PostingsSchema).write.parquet(s"$tmp/postings")
+        conform(terms, TermsSchema).write.parquet(s"$tmp/terms")
       }
-      termsMemo(path) = terms.map { case (t, df, idf) => t -> (df, idf) }.toMap
+      termsMemo.keys.filterNot(k => exists(k._1)).foreach(termsMemo.remove)
     }
-    val terms = termsMemo.getOrElseUpdate(path,
-      readRows(spark, s"$path/terms", TermsSchema)
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
-    (spark.read.schema(PostingsSchema).parquet(s"$path/postings"), terms)
+    val missing = vocab.distinct.filterNot(t => termsMemo.contains(path -> t))
+    if (missing.nonEmpty) {
+      val found = spark.read.schema(TermsSchema).parquet(s"$path/terms")
+        .filter(col("tok").isin(missing: _*)).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      missing.foreach(t => termsMemo(path -> t) = found.get(t))
+    }
+    (spark.read.schema(PostingsSchema).parquet(s"$path/postings"),
+      vocab.map(t => t -> termsMemo(path -> t)).toMap)
   }
 }

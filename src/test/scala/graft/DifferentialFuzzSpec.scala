@@ -123,13 +123,15 @@ abstract class DifferentialFuzzBase extends SparkSpec {
     * oracle tool. `SparkEntry.oracleSql` re-renders AFTER the queries ran
     * (it is a def) so data-dependent generated mirrors — planted-counts
     * CTEs like q_compression_dist — are keyed to the fuzz frame, exactly
-    * as in the Verify ordering. */
+    * as in the Verify ordering. Each seed runs under its own artifact
+    * root, deleted with the frame, so the indexes and artifacts trained on
+    * it do not outlive it. */
   protected def runFuzz(frames: Int,
       gen: Int => Seq[(String, DataFrame)],
       fuzzQueries: Vector[String]): Unit = {
     val queries = SparkEntry.queries
     val failures = collection.mutable.ArrayBuffer[String]()
-    for (seed <- 0 until frames) {
+    for (seed <- 0 until frames) withArtifactRoot {
       val dir = fuzzDir(gen(seed))
       val out = Files.createTempDirectory("graft-fuzz-out")
       try {
@@ -438,7 +440,7 @@ abstract class DifferentialFuzzBase extends SparkSpec {
 
   /** One frame, the full query list, one oracle invocation. */
   protected def sweep(frames: Seq[(String, DataFrame)],
-      queries: Vector[String]): Unit = {
+      queries: Vector[String]): Unit = withArtifactRoot {
     val dir = fuzzDir(frames)
     val out = Files.createTempDirectory("graft-sweep-out")
     try {

@@ -9,15 +9,19 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 
-  /** Runs `body` with the artifact store rooted in a fresh temp dir. */
+  /** Runs `body` with the artifact store rooted in a fresh temp dir,
+    * deleted afterwards with everything stored under it. */
   def withArtifactRoot[A](body: => A): A = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-artifacts-spec")
     val prev = sys.props.get("graft.artifacts.dir")
     sys.props("graft.artifacts.dir") = tmp.toString
     try body
-    finally prev match {
-      case Some(v) => sys.props("graft.artifacts.dir") = v
-      case None => sys.props -= "graft.artifacts.dir"
+    finally {
+      prev match {
+        case Some(v) => sys.props("graft.artifacts.dir") = v
+        case None => sys.props -= "graft.artifacts.dir"
+      }
+      Fs.deleteQuietly(tmp)
     }
   }
 }
