@@ -402,10 +402,9 @@ object SparkEntry {
             .agg(Exprs.exactSum(col("value")).as("rev"))))),
     // q_pagerank (float power iteration) RETIRED from the query surface
     // in r13: with q_pagerank_exact and q_ppr_exact both on the hash
-    // gate, its remaining value is the 1e-9 reference-equality proof,
-    // which lives on in GraphSpec against Graph.pageRank directly — a
-    // no-oracle entry costing ~2 bench seconds per round carried no
-    // information the exact twins don't.
+    // gate, a no-oracle entry costing ~2 bench seconds per round carried
+    // no information the exact twins don't. GraphSpec replays the
+    // fixed-point loop against a driver-side double iteration instead.
     // the fixed-point power iteration in longs — every operation an
     // order-independent integer add/multiply/floor-div, so the iterative
     // graph loop rides the HASH GATE (impossible for the double version:

@@ -44,72 +44,7 @@ object Graph {
       df.sparkSession)
   }
 
-  /** Bounded-iteration PageRank (Page et al. 1999 / the classic power
-    * iteration) over a DIRECTED edge list `(src, dst)`; symmetrize the
-    * edges first for an undirected graph.
-    *
-    * Per round: contributions = ranks ⋈ edges on src (rank/out-degree to
-    * each dst, one shuffle on the edge key), then a per-node aggregate
-    * with the teleport term. Dangling nodes (no out-edges) do not leak
-    * mass: their aggregate rank is a 1-row frame broadcast-crossed into
-    * the update, redistributed uniformly — the standard correction, kept
-    * fully distributed. Node count (one scalar for the teleport constant)
-    * is the only driver-side action, taken once before the loop.
-    *
-    * Output: `(node, rank)`, ranks summing to ~1.0, ordered by rank desc
-    * with the node id as tiebreak. Iterations are FIXED (10 ≈ the classic
-    * convergence horizon for damping 0.85 on small-diameter graphs);
-    * approximate by construction, so this is a rows-only surface entry
-    * with the exact-reference proof in GraphSpec. */
-  def pageRank(edges: DataFrame, iterations: Int = 10,
-      damping: Double = 0.85): DataFrame = {
-    // materialize the edge list ONCE — it is referenced by every round's
-    // contribs join (plus nodes/outDeg), and an expensive upstream plan
-    // (e.g. the basket-pairs self-join) would otherwise re-execute per
-    // iteration
-    val sym = edges.select(col("src"), col("dst")).localCheckpoint()
-    val nodes = sym.select(col("src").as("node"))
-      .union(sym.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    val n = nodes.count()
-    require(n > 0, "pageRank on an empty edge list")
-    val outDeg = sym.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("deg"))
-      .localCheckpoint()
-    val teleport = (1.0 - damping) / n
-
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = sym
-        .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-        .join(outDeg, "src")
-        .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
-      // rank mass sitting on nodes with no out-edges, redistributed
-      // uniformly — a 1-row broadcast frame, no driver action
-      val dangling = ranks
-        .join(outDeg, ranks("node") === outDeg("src"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-      val prev = ranks
-      ranks = nodes
-        .join(contribs, Seq("node"), "left_outer")
-        .groupBy("node")
-        .agg(coalesce(sum(col("c")), lit(0.0)).as("inflow"))
-        .crossJoin(broadcast(dangling))
-        .select(col("node"),
-          (lit(teleport) +
-            lit(damping) * (col("inflow") + col("dm") / n)).as("rank"))
-        .localCheckpoint()
-      // deterministic release of the superseded round's blocks (the new
-      // checkpoint is EAGER, so prev is no longer referenced); round 0's
-      // plain projection no-ops. Without this the N rounds' blocks sit in
-      // the storage-protected memory region until a GC nobody triggers.
-      ColumnBridge.releaseLocalCheckpoint(prev)
-    }
-    ranks.orderBy(col("rank").desc, col("node"))
-  }
-
-  /** Fixed-point scale for [[pageRankFixedPoint]]: ranks live as longs in
+  /** Fixed-point scale of the PageRank loop: ranks live as longs in
     * units of 1e-12 (total mass ≈ 1e12). Headroom: the per-round multiply
     * is `dampNum × (inflow + dangling share) ≤ 85 × 2e12 ≈ 1.7e14`, five
     * orders below Long.MaxValue. */
@@ -120,94 +55,6 @@ object Graph {
   val DampNum = 85L
   val DampDen = 100L
 
-  /** [[pageRank]] re-expressed in FIXED-POINT integer arithmetic so the
-    * iterative computation is bit-deterministic across engines and
-    * therefore HASH-GATEABLE — floating-point power iteration is not
-    * (shuffle-order-dependent double summation), which is why `q_pagerank`
-    * is a rows-only entry. Here every operation is a long add, multiply,
-    * or floor division, all order-independent:
-    *
-    *  - ranks start at `S div n` (S = [[FixedPointScale]]);
-    *  - a node's contribution per out-edge is `rank div deg`;
-    *  - damping 0.85 is the rational 85/100: `(85 × x) div 100`;
-    *  - dangling mass redistributes as `dm div n`.
-    *
-    * Floor truncation loses ≤1 unit (1e-12) per division, so total mass
-    * drifts below 1.0 by ~(edges × 1e-12) per round — irrelevant for
-    * ranking, and GraphSpec bounds the drift vs the double-precision
-    * [[pageRank]]. The DuckDB mirror unrolls the same iterations with
-    * `//` floor division (generated SQL, the q_bpe_tokens discipline);
-    * the hash gate then certifies the whole iterate-join-aggregate loop —
-    * joins, dangling handling, teleport — not just one pass.
-    *
-    * Same per-round plan shape as [[pageRank]]: one edge-keyed shuffle
-    * join + one node aggregate, dangling mass as a 1-row broadcast frame,
-    * per-round localCheckpoint. Output `(node, rank_fp)` with
-    * `rank_fp ≈ rank × S`, ordered by rank desc (node tiebreak). */
-  def pageRankFixedPoint(edges: DataFrame, iterations: Int = 10,
-      dampNum: Long = DampNum, dampDen: Long = DampDen): DataFrame = {
-    // pre-partition the edge list by the per-round join key ONCE with an
-    // EXPLICIT partition count (r18; the bucketed-join discipline applied
-    // to the loop invariant). The r17 keyless-count `repartition(src)`
-    // was DEAD WEIGHT: AQE coalesces it (shuffleOrigin REPARTITION_BY_COL
-    // is coalescible), so the checkpoint landed with a coalesced
-    // partition count that never matched the in-loop exchange target and
-    // every round re-exchanged the edge list anyway (proven by the
-    // committed round-2 executed plan, plans/r18/inloop_before/ — the
-    // r17 verdict's #3 ask). REPARTITION_BY_NUM is AQE-stable and
-    // `localCheckpoint` preserves the executed plan's HashPartitioning
-    // into the LogicalRDD, so the ten rounds' shuffle-hash joins now
-    // re-shuffle only the node-scale rank frame — the EDGE list (the
-    // 100 TB side) ships through the loop zero times.
-    val parts = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val sym = checkpointPinned(
-      edges.select(col("src"), col("dst")).repartition(parts, col("src")))
-    // nodes pinned on hash(node, parts): the per-round LeftOuter join and
-    // groupBy(node) keep their nodes-side exchange-free; outDeg rides
-    // sym's pinned hash(src, parts) through its aggregate with ZERO
-    // exchanges of its own
-    val nodes = checkpointPinned(
-      sym.select(col("src").as("node"))
-        .union(sym.select(col("dst").as("node")))
-        .distinct()) // distinct's own exchange IS hash(node, parts)
-    val n = nodes.count()
-    require(n > 0, "pageRankFixedPoint on an empty edge list")
-    val outDeg = checkpointPinned(
-      sym.groupBy(col("src"))
-        .agg(count(lit(1)).as("deg")))
-    val s = FixedPointScale
-    // teleport_fp = ((1-d)·S) div n, as integer ops: (15·S div 100) div n
-    val teleport = ((dampDen - dampNum) * s / dampDen) / n
-
-    var ranks = nodes.select(col("node"), lit(s / n).as("r"))
-    for (round <- 1 to iterations) {
-      val contribs = sym
-        .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-        .join(outDeg, "src")
-        .select(col("dst").as("node"), expr("r div deg").as("c"))
-      val dangling = ranks
-        .join(outDeg, ranks("node") === outDeg("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-      val prev = ranks
-      val next = nodes
-        .join(contribs, Seq("node"), "left_outer")
-        .groupBy("node")
-        .agg(coalesce(sum(col("c")), lit(0L)).as("inflow"))
-        .crossJoin(broadcast(dangling))
-        .select(col("node"),
-          (lit(teleport) +
-            expr(s"($dampNum * (inflow + dm div $n)) div $dampDen"))
-            .as("r"))
-      ranks = next.localCheckpoint()
-      // superseded round's blocks release deterministically (pageRank's
-      // storage-region discipline; round 0 no-ops)
-      ColumnBridge.releaseLocalCheckpoint(prev)
-    }
-    ranks.select(col("node"), col("r").as("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("node"))
-  }
-
   /** Seed-set size for [[personalizedPageRankFixedPoint]] — shared with
     * the generated mirror. Seeds are the `PprSeedCount` SMALLEST node
     * ids: deterministic and engine-portable (an ORDER BY + LIMIT in both
@@ -215,52 +62,96 @@ object Graph {
     * recommendation query. */
   val PprSeedCount = 3
 
-  /** PERSONALIZED PageRank in the same fixed-point longs as
-    * [[pageRankFixedPoint]] — the neighborhood-relevance primitive of
-    * item-to-item recommendation ("random walk with restart"): the
-    * teleport mass lands ONLY on the seed set (S·(1−d)/d-rational split
-    * `div` |seeds| per seed, 0 elsewhere), the walk starts entirely on
-    * the seeds (`S div k` each), and DANGLING mass restarts at the seeds
-    * too (`dm div k` added to seed inflow) — the pure RWR formulation,
-    * so rank mass concentrates around the seeds instead of spreading
-    * uniformly. Every operation stays a non-negative long add / multiply
-    * / truncating `div` (≡ DuckDB `//` on non-negatives), so ten rounds
-    * of join + aggregate + restart hash-match the unrolled mirror
-    * exactly. Same per-round plan shape as the uniform variant: one
-    * edge-keyed shuffle join + node aggregate, scalars on 1-row
-    * broadcast frames, seed flags on a broadcast `seedCount`-row frame,
-    * per-round localCheckpoint. */
+  /** Bounded-iteration PageRank (Page et al. 1999, the classic power
+    * iteration) over a DIRECTED edge list `(src, dst)` — symmetrize the
+    * edges first for an undirected graph — in FIXED-POINT integer
+    * arithmetic, so the iterative computation is bit-deterministic across
+    * engines and therefore HASH-GATEABLE (floating-point power iteration
+    * is not: shuffle-order-dependent double summation). Every operation
+    * is a long add, multiply or floor division, all order-independent:
+    * ranks start at `S div n` (S = [[FixedPointScale]]), a node's
+    * contribution per out-edge is `rank div deg`, damping is
+    * `(85 × x) div 100`, dangling mass (nodes with no out-edges)
+    * redistributes as `dm div n`. Floor truncation loses ≤1 unit (1e-12)
+    * per division, so total mass drifts below 1.0 by ~(edges × 1e-12) per
+    * round — irrelevant for ranking; GraphSpec bounds the drift against a
+    * double-precision replay. The DuckDB mirror unrolls the same
+    * iterations with `//` floor division, so the hash gate certifies the
+    * whole iterate-join-aggregate loop — joins, dangling handling,
+    * teleport — not just one pass. Output `(node, rank_fp)` with
+    * `rank_fp ≈ rank × S`, ordered by rank desc (node tiebreak). */
+  def pageRankFixedPoint(edges: DataFrame, iterations: Int = 10,
+      dampNum: Long = DampNum, dampDen: Long = DampDen): DataFrame =
+    restartWalk(edges, None, iterations, dampNum, dampDen)
+
+  /** PERSONALIZED PageRank in the same fixed-point longs — the
+    * neighborhood-relevance primitive of item-to-item recommendation
+    * ("random walk with restart"): teleport, start mass and dangling mass
+    * all land ONLY on the seed set (the `seedCount` smallest node ids), so
+    * rank mass concentrates around the seeds instead of spreading
+    * uniformly. [[pageRankFixedPoint]] is the special case whose seed set
+    * is every node. */
   def personalizedPageRankFixedPoint(edges: DataFrame,
       seedCount: Int = PprSeedCount, iterations: Int = 10,
-      dampNum: Long = DampNum, dampDen: Long = DampDen): DataFrame = {
-    // edge list pre-partitioned by the round-join key with an EXPLICIT
-    // partition count — see pageRankFixedPoint for why the count must be
-    // pinned (AQE coalesces keyless-count repartitions and the
-    // checkpointed partitioning then never matches the in-loop target)
+      dampNum: Long = DampNum, dampDen: Long = DampDen): DataFrame =
+    restartWalk(edges, Some(seedCount), iterations, dampNum, dampDen)
+
+  /** The fixed-point random walk with restart behind both PageRank
+    * entries. The restart set R (k = |R| nodes: every node when
+    * `seedCount` is None, else the `seedCount` smallest ids) is fixed
+    * before the loop, as a flag column over the pinned node frame. Start
+    * mass `S div k` and teleport `((d_den − d_num)·S div d_den) div k` sit
+    * on R, and R's nodes also share the dangling mass as `dm div k` of
+    * inflow; everyone else starts at 0 and gets only inflow. With R = all
+    * nodes this is uniform PageRank operation for operation, so the two
+    * entries cannot drift apart.
+    *
+    * Per round: contributions = ranks ⋈ edges on src (one shuffle of the
+    * node-scale rank frame), then a per-node aggregate; the dangling mass
+    * is a 1-row broadcast frame, never a driver action. The only driver
+    * actions are the pre-loop node count (or seed collect). Per-round
+    * localCheckpoint keeps the plan flat. */
+  private def restartWalk(edges: DataFrame, seedCount: Option[Int],
+      iterations: Int, dampNum: Long, dampDen: Long): DataFrame = {
+    // pre-partition the edge list by the per-round join key ONCE with an
+    // EXPLICIT partition count (r18; the bucketed-join discipline applied
+    // to the loop invariant). A keyless-count `repartition(src)` is dead
+    // weight: AQE coalesces it (REPARTITION_BY_COL is coalescible), the
+    // checkpoint lands with a partition count that never matches the
+    // in-loop exchange target, and every round re-exchanges the edge list
+    // (the committed plans/r18/inloop_before/ round plans).
+    // REPARTITION_BY_NUM is AQE-stable and [[checkpointPinned]] keeps its
+    // HashPartitioning, so the rounds' shuffle-hash joins re-shuffle only
+    // the node-scale rank frame — the EDGE list ships through the loop
+    // zero times.
     val parts = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val sym = checkpointPinned(
       edges.select(col("src"), col("dst")).repartition(parts, col("src")))
+    // nodes pinned on hash(node, parts): the per-round LeftOuter join and
+    // node aggregate keep their nodes side exchange-free; outDeg rides
+    // sym's pinned hash(src, parts) through its aggregate with ZERO
+    // exchanges of its own
     val nodes = checkpointPinned(
       sym.select(col("src").as("node"))
         .union(sym.select(col("dst").as("node")))
         .distinct()) // distinct's own exchange IS hash(node, parts)
-    val seedFlag = nodes.orderBy("node").limit(seedCount)
-      .withColumn("is_seed", lit(1L))
-      .localCheckpoint()
-    val k = seedFlag.count()
-    require(k > 0, "personalizedPageRank on an empty node list")
+    val seeds = seedCount.map(c =>
+      nodes.orderBy("node").limit(c).collect().toSeq.map(_.get(0)))
+    val k = seeds.fold(nodes.count())(_.length.toLong)
+    require(k > 0, "PageRank on an empty edge list")
+    // a projection keeps the pinned partitioning
+    val flagged = nodes.withColumn("restart",
+      seeds.fold(lit(true))(ids => col("node").isin(ids: _*)))
     val outDeg = checkpointPinned(
       sym.groupBy(col("src"))
         .agg(count(lit(1)).as("deg")))
     val s = FixedPointScale
-    val teleportSeed = ((dampDen - dampNum) * s / dampDen) / k
+    val teleport = ((dampDen - dampNum) * s / dampDen) / k
 
-    var ranks = nodes.join(broadcast(seedFlag), Seq("node"), "left_outer")
-      .select(col("node"),
-        when(col("is_seed").isNotNull, lit(s / k)).otherwise(lit(0L))
-          .as("r"))
-    for (round <- 1 to iterations) {
+    var ranks = flagged.select(col("node"),
+      when(col("restart"), lit(s / k)).otherwise(lit(0L)).as("r"))
+    for (_ <- 1 to iterations) {
       val contribs = sym
         .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
         .join(outDeg, "src")
@@ -269,19 +160,20 @@ object Graph {
         .join(outDeg, ranks("node") === outDeg("src"), "left_anti")
         .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
       val prev = ranks
-      val next = nodes
+      ranks = flagged
         .join(contribs, Seq("node"), "left_outer")
-        .groupBy("node")
+        .groupBy("node", "restart") // hash(node) already clusters both
         .agg(coalesce(sum(col("c")), lit(0L)).as("inflow"))
-        .join(broadcast(seedFlag), Seq("node"), "left_outer")
         .crossJoin(broadcast(dangling))
         .select(col("node"),
-          (when(col("is_seed").isNotNull, lit(teleportSeed))
-            .otherwise(lit(0L)) +
+          (when(col("restart"), lit(teleport)).otherwise(lit(0L)) +
             expr(s"($dampNum * (inflow + " +
-              s"if(is_seed is not null, dm div ${k}L, 0L))) div $dampDen"))
-            .as("r"))
-      ranks = next.localCheckpoint()
+              s"if(restart, dm div ${k}L, 0L))) div $dampDen")).as("r"))
+        .localCheckpoint()
+      // deterministic release of the superseded round's blocks (the new
+      // checkpoint is EAGER, so prev is no longer referenced); round 0's
+      // plain projection no-ops. Without this the rounds' blocks sit in
+      // the storage-protected memory region until a GC nobody triggers.
       ColumnBridge.releaseLocalCheckpoint(prev)
     }
     ranks.select(col("node"), col("r").as("rank_fp"))
@@ -295,20 +187,6 @@ object Graph {
     * data is spec-evidence, not a gate precondition. */
   val KCoreRounds = 10
 
-  /** k-core of a CANONICAL undirected edge list `(a, b)`, `a < b`: the
-    * maximal subgraph where every node keeps degree ≥ k — the classic
-    * graph-density filter (spam rings, community cores) and the third
-    * member of the iterative family (CC, PageRank, now peeling).
-    *
-    * Per round: one degree aggregate (map-side partials over 2 rows per
-    * edge) and two keep-semi-joins back onto the edge list — all
-    * equi-joins AQE can split; per-round localCheckpoint keeps the plan
-    * flat (the CC-loop lineage discipline). Rounds are FIXED
-    * ([[KCoreRounds]]), not convergence-detected: no driver-side count
-    * inside the loop, and the generated mirror unrolls the identical
-    * rounds with MATERIALIZED CTEs, so the gate certifies every peel
-    * step. Output: surviving `(node, deg)`, deg ≥ k, ordered deg desc
-    * with node tiebreak. */
   /** Fixed BFS relaxation rounds — shared with the unrolled mirror. */
   val BfsRounds = 6
 
@@ -346,6 +224,20 @@ object Graph {
     dist.filter(col("dist").isNotNull).orderBy(col("dist"), col("node"))
   }
 
+  /** k-core of a CANONICAL undirected edge list `(a, b)`, `a < b`: the
+    * maximal subgraph where every node keeps degree ≥ k — the classic
+    * graph-density filter (spam rings, community cores) and the third
+    * member of the iterative family (CC, PageRank, now peeling).
+    *
+    * Per round: one degree aggregate (map-side partials over 2 rows per
+    * edge) and two keep-semi-joins back onto the edge list — all
+    * equi-joins AQE can split; per-round localCheckpoint keeps the plan
+    * flat (the CC-loop lineage discipline). Rounds are FIXED
+    * ([[KCoreRounds]]), not convergence-detected: no driver-side count
+    * inside the loop, and the generated mirror unrolls the identical
+    * rounds with MATERIALIZED CTEs, so the gate certifies every peel
+    * step. Output: surviving `(node, deg)`, deg ≥ k, ordered deg desc
+    * with node tiebreak. */
   def kCore(edges: DataFrame, k: Int = 2,
       rounds: Int = KCoreRounds): DataFrame = {
     require(k >= 1 && rounds >= 1, s"bad kCore params: k=$k rounds=$rounds")

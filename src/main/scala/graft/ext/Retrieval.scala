@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -348,8 +348,9 @@ object Retrieval {
     *     hash gate certifies pruning losslessness, the q_zorder_prune
     *     pattern.
     *  5. Queries whose certificate fails grow B and re-check (driver
-    *     loop over a ≤ |terms| + |queries|-row collect — the
-    *     bounded-scalar rule):
+    *     loop over a ≤ |terms| + |queries|·k-row collect — the
+    *     bounded-scalar rule; the terminating round's collected top-k
+    *     rows are returned as a local frame, so no round runs twice):
     *     ×2 after the first failed round, ×4 thereafter (plateau corpora
     *     reach the exhaustion clamp in ~log₄ rounds with Σ Bᵢ ≤ 4/3 of
     *     the final round vs pure doubling's log₂ rounds and 2×; the
@@ -384,8 +385,9 @@ object Retrieval {
     bm25SearchPrunedDiag(index, queryTerms, Bm25TopK, MaxScorePrefixB)._1
 
   /** [[bm25SearchPruned]] plus its certification diagnostics — complete
-    * when this returns (the loop's jobs all run inside; only the final
-    * top-k plan is still lazy). Builds the index in memory. */
+    * when this returns (every job runs inside; the result is a local
+    * frame of the last round's collected rows). Builds the index in
+    * memory. */
   def bm25SearchPrunedDiag(documents: DataFrame,
       queryTerms: Seq[(Long, String, Long)], k: Int = Bm25TopK,
       initialB: Int = MaxScorePrefixB): (DataFrame, PrunedDiag) =
@@ -470,21 +472,26 @@ object Retrieval {
       val topk =
         TopK.topKPerGroup(scores, "query_id", "score_micro", "doc_id", k)
       // ONE driver action per round (r17): the unexhausted terms'
-      // `rank = B` rows (their bounds) and the per-query k-th scores
-      // ride a single union collect of ≤ |terms| + |queries| rows (the
+      // `rank = B` rows (their bounds) and every query's top-k rows ride a
+      // single union collect of ≤ |terms| + |queries|·k rows (the
       // bounded-scalar rule); query_id rides the string key column and
-      // round-trips exactly (a decimal-rendered long).
+      // round-trips exactly (a decimal-rendered long). The terminating
+      // round's rows ARE the result, so the caller's collect runs no
+      // round again.
       val certRows = postings.filter(col("rank") === b)
         .select(lit("t").as("kind"), col("tok").as("key"),
-          col("c_micro").as("v"))
-        .unionAll(topk.filter(col("rank") === k)
+          col("c_micro").as("v"), lit(null).cast("long").as("rank"),
+          lit(null).cast("long").as("doc_id"))
+        .unionAll(topk
           .select(lit("q").as("kind"),
             col("query_id").cast("string").as("key"),
-            col("score_micro").cast("long").as("v")))
+            col("score_micro").cast("long").as("v"), col("rank"),
+            col("doc_id")))
         .collect()
       val bound = certRows.iterator.filter(_.getString(0) == "t")
         .map(r => r.getString(1) -> r.getLong(2)).toMap
-      val kth = certRows.iterator.filter(_.getString(0) == "q")
+      val top = certRows.filter(_.getString(0) == "q")
+      val kth = top.iterator.filter(_.getLong(3) == k)
         .map(r => r.getString(1).toLong -> r.getLong(2)).toMap
       var anyByBound = false
       val unterminated = qTermsOf.keys.filter { q =>
@@ -497,12 +504,20 @@ object Retrieval {
       }
       if (unterminated.isEmpty) {
         diag = PrunedDiag(rounds, b, anyByBound)
-        result = topk
+        // the lazy plan's schema (analysis only, no job) types the rows
+        val schema = topk
           .select(col("query_id"), col("rank"), col("doc_id"),
             col("score_micro").cast("long").as("score_micro"),
             (col("score_micro").cast("double") / lit(1000000.0))
               .as("score"))
-          .orderBy("query_id", "rank")
+          .schema
+        val rows = top.map(r => (r.getString(1).toLong, r.getLong(3),
+            r.getLong(4), r.getLong(2)))
+          .sortBy(r => (r._1, r._2))
+          .map { case (q, rank, doc, micro) =>
+            Row(q, rank, doc, micro, micro.toDouble / 1000000.0) }
+        result = index.postings.sparkSession
+          .createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       } else {
         b = math.min(b.toLong * bMult, bCeil.toLong).toInt
         bMult = 4L

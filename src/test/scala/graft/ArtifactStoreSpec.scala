@@ -106,7 +106,7 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("regenerated dataset content invalidates the artifact (no stale serve)") {
     withArtifactRoot {
-      val data = java.nio.file.Files.createTempDirectory("graft-as-data")
+      val data = tempDir("graft-as-data")
       java.nio.file.Files.writeString(data.resolve("documents.parquet"), "v1")
       var trains = 0
       def train() = { trains += 1; Seq(("a", "a")) }
@@ -123,7 +123,7 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("a fresh fingerprint GCs the superseded artifact dirs") {
     withArtifactRoot {
-      val data = java.nio.file.Files.createTempDirectory("graft-as-gc")
+      val data = tempDir("graft-as-gc")
       java.nio.file.Files.writeString(data.resolve("d.parquet"), "v1")
       ArtifactStore.bpeMerges(spark, data.toString, "bpe")(Seq(("a", "b")))
       java.nio.file.Files.writeString(data.resolve("d.parquet"), "v2-longer")

@@ -47,7 +47,7 @@ class CleaningSpec extends SparkSpec {
   }
 
   test("replay checkpoint round-trips, advances and rotates") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ck").toString +
+    val path = tempDir("graft-ck").toString +
       "/ck.json"
     val ck0 = ReplayCheckpoint("2019-11", 0L)
     ReplayCheckpoint.save(path, ck0.advance(10000))

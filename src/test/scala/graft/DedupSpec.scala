@@ -248,7 +248,7 @@ class DedupSpec extends SparkSpec {
 
   test("incremental minhash dedup over two batches equals one shot over the union") {
     def freshIdx() =
-      java.nio.file.Files.createTempDirectory("graft-idx").toString + "/idx"
+      tempDir("graft-idx").toString + "/idx"
     // one-shot: a single increment into an empty index = plain batch LSH
     val oneShot = Dedup.minhashNearDupsIncremental(docs, freshIdx())
       .as[(Long, Long, Double)].collect().toSet
@@ -313,7 +313,7 @@ class DedupSpec extends SparkSpec {
 
   test("incremental index crash contract: atomic commits, reemit recovery") {
     def freshIdx() =
-      java.nio.file.Files.createTempDirectory("graft-idx").toString + "/idx"
+      tempDir("graft-idx").toString + "/idx"
     val evens = docs.filter($"doc_id" % 2 === 0)
     val odds = docs.filter($"doc_id" % 2 =!= 0)
     // crash BEFORE the commit rename: a stale .stage dir must be invisible

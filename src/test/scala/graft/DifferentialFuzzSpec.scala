@@ -96,7 +96,7 @@ abstract class DifferentialFuzzBase extends SparkSpec {
     * layout and symlinks every other table from sf0.001 (the oracle tool
     * binds all ten views up front). */
   private def fuzzDir(frames: Seq[(String, DataFrame)]): Path = {
-    val dir = Files.createTempDirectory("graft-fuzz")
+    val dir = tempDir("graft-fuzz")
     val generated = frames.map(_._1).toSet
     graft.model.TestdataContract.expected.keys
       .filterNot(generated.contains).foreach { t =>
@@ -133,7 +133,7 @@ abstract class DifferentialFuzzBase extends SparkSpec {
     val failures = collection.mutable.ArrayBuffer[String]()
     for (seed <- 0 until frames) withArtifactRoot {
       val dir = fuzzDir(gen(seed))
-      val out = Files.createTempDirectory("graft-fuzz-out")
+      val out = tempDir("graft-fuzz-out")
       try {
         // seed-shuffled subset: distinct within the frame, decorrelated
         // across seeds (no residue-class lock — see the scaladoc)
@@ -442,7 +442,7 @@ abstract class DifferentialFuzzBase extends SparkSpec {
   protected def sweep(frames: Seq[(String, DataFrame)],
       queries: Vector[String]): Unit = withArtifactRoot {
     val dir = fuzzDir(frames)
-    val out = Files.createTempDirectory("graft-sweep-out")
+    val out = tempDir("graft-sweep-out")
     try {
       val qmap = SparkEntry.queries
       queries.foreach { name =>

@@ -758,7 +758,7 @@ class EventQueriesSpec extends SparkSpec {
 
   test("zone-map partition pruning reaches PartitionFilters in the plan") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-prune")
+    val tmp = tempDir("graft-prune")
     try {
       spark.range(100)
         .selectExpr("id AS x", "id % 4 AS block")
@@ -774,7 +774,7 @@ class EventQueriesSpec extends SparkSpec {
 
   test("dynamic partition pruning fires on a dim-filtered fact join") {
     import org.apache.spark.sql.functions.{col, lit}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dpp")
+    val tmp = tempDir("graft-dpp")
     try {
       // fact partitioned by day; dim maps day → label with a selective
       // filter — Spark should inject a dynamicpruning#N subquery on the
@@ -878,6 +878,33 @@ class EventQueriesSpec extends SparkSpec {
     val drained = EventQueries.markovStationary(dead)
       .as[(String, Long, Double)].collect().map(r => r._1 -> r._2).toMap
     assert(drained == Map("view" -> 0L, "purchase" -> 0L), drained.toString)
+    // 65 states (> MarkovDriverFoldMaxStates) take the distributed
+    // rounds: one user laps t0…t64, then the even states only (so an even
+    // state leaves 2/3 to its successor, 1/3 two ahead), then t0…t64
+    // again; checked against a plain-Scala replay of the same floors
+    val seq = ((0 to 64) ++ (0 to 64 by 2) ++ (0 to 64)).map(i => s"t$i")
+    val t0 = ts("2024-01-01 10:00:00").getTime
+    val lap = seq.zipWithIndex.map { case (t, i) =>
+        (i.toLong, new Timestamp(t0 + i * 1000L), 1L, t, 1.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val pairs = seq.zip(seq.tail)
+    val tot = pairs.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val n = pairs.groupMapReduce(identity)(_ => 1L)(_ + _)
+    val states = seq.distinct.sorted
+    assert(states.size > EventQueries.MarkovDriverFoldMaxStates)
+    val scale = EventQueries.MarkovScale
+    var w = states.map(_ -> scale / states.size).toMap
+    for (_ <- 1 to EventQueries.MarkovIters) {
+      val c = n.toSeq.groupMapReduce(_._1._2) { case ((a, _), k) =>
+        w(a) * k / tot(a) }(_ + _)
+      w = states.map(s => s -> c.getOrElse(s, 0L)).toMap
+    }
+    val want = states.map(s => (s, w(s),
+      math.floor(w(s).toDouble / scale.toDouble * 10000.0 + 0.5) / 10000.0))
+    val got = EventQueries.markovStationary(lap)
+      .as[(String, Long, Double)].collect().toSeq
+    assert(got == want, s"got $got want $want")
+    assert(w.values.toSet.size > 1, "the replay must not be uniform")
   }
 
   test("survivalCurve: product-limit steps with exact at-risk counts") {

@@ -57,7 +57,7 @@ class FunnelStateSpec extends SparkSpec {
     val q = out.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_fsm")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-fsm").toString)
+        tempDir("graft-fsm").toString)
       .start()
     try {
       mem.addData(rows.take(4): _*)

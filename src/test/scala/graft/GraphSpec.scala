@@ -7,7 +7,8 @@ import graft.ext.Graph
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Reference power iteration, same update rule as [[Graph.pageRank]]. */
+  /** Reference double-precision power iteration: the update rule of
+    * [[Graph.pageRankFixedPoint]] without its floors. */
   private def refPageRank(edges: Seq[(String, String)], iters: Int,
       d: Double): Map[String, Double] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
@@ -16,74 +17,31 @@ class GraphSpec extends SparkSpec {
     var r = nodes.map(_ -> 1.0 / n).toMap
     for (_ <- 1 to iters) {
       val dm = nodes.filterNot(out.contains).map(r).sum
+      val inflow = edges.groupMapReduce(_._2)(e => r(e._1) / out(e._1))(_ + _)
       r = nodes.map { nd =>
-        val inflow = edges.collect {
-          case (s, dst) if dst == nd => r(s) / out(s)
-        }.sum
-        nd -> ((1.0 - d) / n + d * (inflow + dm / n))
+        nd -> ((1.0 - d) / n + d * (inflow.getOrElse(nd, 0.0) + dm / n))
       }.toMap
     }
     r
-  }
-
-  test("pageRank matches the reference power iteration, dangling included") {
-    // D is dangling (incoming only): its mass must redistribute, not leak
-    val edges = Seq(
-      ("A", "B"), ("A", "C"), ("B", "C"), ("C", "A"), ("B", "D"))
-    val got = Graph.pageRank(edges.toDF("src", "dst"), iterations = 10)
-      .as[(String, Double)].collect().toMap
-    val want = refPageRank(edges, iters = 10, d = 0.85)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (node, rank) =>
-      assert(math.abs(rank - want(node)) < 1e-9,
-        s"$node: got $rank want ${want(node)}")
-    }
-    assert(math.abs(got.values.sum - 1.0) < 1e-9,
-      s"mass leaked: total ${got.values.sum}")
   }
 
   test("pageRank ranks the hub of a star graph first") {
     // symmetrized star: HUB <-> each leaf; the hub must dominate
     val leaves = (1 to 6).map(i => s"L$i")
     val edges = leaves.flatMap(l => Seq(("HUB", l), (l, "HUB")))
-    val top = Graph.pageRank(edges.toDF("src", "dst")).limit(1)
-      .as[(String, Double)].collect().head
+    val top = Graph.pageRankFixedPoint(edges.toDF("src", "dst")).limit(1)
+      .as[(String, Long)].collect().head
     assert(top._1 == "HUB")
   }
 
   test("pageRank of a symmetric cycle is uniform") {
     val cyc = Seq(("A", "B"), ("B", "C"), ("C", "A"))
-    val got = Graph.pageRank(cyc.toDF("src", "dst"))
-      .as[(String, Double)].collect()
-    got.foreach { case (_, r) => assert(math.abs(r - 1.0 / 3) < 1e-12) }
-  }
-
-  /** The retired `q_pagerank` float entry, rebuilt locally: the 1e-9
-    * reference proof below is the reason the float twin still exists —
-    * the QUERY surface carries only the hash-gated exact twins
-    * (q_pagerank_exact / q_ppr_exact) since r13. */
-  private def floatPageRank(dir: String) = {
-    val e = graft.ingest.Sources.events(spark, dir)
-    val pairs = graft.ops.EventQueries
-      .basketPairs(e, minSupport = 2, sorted = false)
-      .select(col("item1"), col("item2"))
-    val edges = pairs
-      .select(col("item1").as("src"), col("item2").as("dst"))
-      .union(pairs.select(col("item2").as("src"), col("item1").as("dst")))
-    Graph.pageRank(edges)
-      .select(col("node"), graft.Exprs.round2(col("rank"), 8).as("rank"))
-      .orderBy(col("rank").desc, col("node"))
-  }
-
-  test("float pagerank runs over the co-purchase graph") {
-    val df = floatPageRank(sf("sf0.001"))
-    val rows = df.collect()
-    assert(rows.nonEmpty)
-    val total = rows.map(_.getDouble(1)).sum
-    assert(math.abs(total - 1.0) < 1e-4, s"mass total $total")
-    // ordered by rank desc
-    val ranks = rows.map(_.getDouble(1)).toSeq
-    assert(ranks == ranks.sorted.reverse)
+    val got = Graph.pageRankFixedPoint(cyc.toDF("src", "dst"))
+      .as[(String, Long)].collect()
+    assert(got.length == 3 && got.map(_._2).distinct.length == 1,
+      got.toSeq.toString)
+    val s = Graph.FixedPointScale.toDouble
+    assert(math.abs(got.head._2 / s - 1.0 / 3) < 1e-12, got.head.toString)
   }
 
   test("pageRankFixedPoint tracks the double power iteration, dangling " +
@@ -133,15 +91,33 @@ class GraphSpec extends SparkSpec {
     "round count") {
     val edges = Seq(
       ("A", "B"), ("A", "C"), ("B", "C"), ("C", "A"), ("B", "D"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Graph.pageRankFixedPoint(edges.toDF("src", "dst"), iterations = 10)
-      .collect()
-    val after = spark.sparkContext.getPersistentRDDs.size
+      .toDF("src", "dst")
+    def added(walk: => org.apache.spark.sql.DataFrame): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      walk.collect()
+      spark.sparkContext.getPersistentRDDs.size - before
+    }
     // shared pins (sym/nodes/outDeg) + the final round's ranks survive;
     // the 9 superseded rounds must NOT (without the release they did —
     // until a GC nobody triggers on a huge heap; the r14 harness lesson)
-    assert(after - before <= 4,
-      s"leaked checkpoints: $before -> $after persistent RDDs")
+    val pr = added(Graph.pageRankFixedPoint(edges))
+    assert(pr <= 4, s"pageRank leaked checkpoints: $pr more persistent RDDs")
+    val ppr = added(Graph.personalizedPageRankFixedPoint(edges))
+    assert(ppr <= 4, s"ppr leaked checkpoints: $ppr more persistent RDDs")
+  }
+
+  test("personalizedPageRankFixedPoint with every node a seed is " +
+    "pageRankFixedPoint, bit for bit") {
+    val edges = Seq(
+      ("A", "B"), ("A", "C"), ("B", "C"), ("C", "A"), ("B", "D"), ("E", "A"))
+      .toDF("src", "dst")
+    val uniform = Graph.pageRankFixedPoint(edges).collect().toSeq
+    assert(uniform.length == 5)
+    for (seeds <- Seq(5, 9)) {
+      val ppr = Graph.personalizedPageRankFixedPoint(edges, seedCount = seeds)
+        .collect().toSeq
+      assert(ppr == uniform, s"seedCount $seeds: $ppr vs $uniform")
+    }
   }
 
   test("personalizedPageRankFixedPoint: teleport, start mass and dangling " +
@@ -184,14 +160,17 @@ class GraphSpec extends SparkSpec {
     val s = Graph.FixedPointScale.toDouble
     val fp = SparkEntry.queries("q_pagerank_exact")(spark, sf("sf0.001"))
       .as[(String, Long)].collect().toMap
-    val dbl = floatPageRank(sf("sf0.001"))
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
+    // the entry's co-purchase graph, symmetrized, replayed in doubles
+    val pairs = graft.ops.EventQueries.basketPairs(
+        graft.ingest.Sources.events(spark, sf("sf0.001")), minSupport = 2,
+        sorted = false)
+      .select(col("item1"), col("item2")).as[(String, String)].collect()
+    val dbl = refPageRank(pairs.toSeq.flatMap { case (a, b) =>
+      Seq((a, b), (b, a)) }, iters = 10, d = 0.85)
     assert(fp.nonEmpty && fp.keySet == dbl.keySet)
-    // q_pagerank rounds to 8dp, so the comparison tolerance is that
-    // rounding (5e-9) plus the fixed-point floor drift (well under 1e-9
-    // at this graph size)
+    // each division floors away <= 1e-12 per round
     fp.foreach { case (node, r) =>
-      assert(math.abs(r / s - dbl(node)) < 1e-8,
+      assert(math.abs(r / s - dbl(node)) < 1e-9,
         s"$node: fixed-point ${r / s} vs double ${dbl(node)}")
     }
   }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -17,12 +17,9 @@ import graft.sink.{MaterializedView, Sinks}
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(prefix: String): Path =
-    Files.createTempDirectory(prefix)
-
   test("mergeSums folds slices to the one-shot aggregate and preserves " +
       "keys absent from a delta") {
-    val out = tmpDir("graft-mvspec").toString + "/mv"
+    val out = tempDir("graft-mvspec").toString + "/mv"
     val rows = Seq(("a", 1.25), ("a", 2.50), ("b", 0.75), ("c", 10.00))
     def delta(xs: Seq[(String, Double)]) =
       xs.toDF("k", "v").groupBy("k")
@@ -44,7 +41,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("mergeSumsOnce makes a replayed micro-batch a no-op (ledger rides " +
       "the view's atomic swap)") {
-    val out = tmpDir("graft-mvonce").toString + "/mv"
+    val out = tempDir("graft-mvonce").toString + "/mv"
     def delta(v: Double) = Seq(("a", v)).toDF("k", "v").groupBy("k")
       .agg(sum(col("v").cast(Exprs.Money)).as("partial"))
     def total(): Double = spark.read.parquet(out)
@@ -65,7 +62,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("eraseKeysPartitioned rewrites only affected buckets, deletes " +
       "fully-erased ones, and keeps null keys") {
-    val root = tmpDir("graft-erasespec").toString + "/t"
+    val root = tempDir("graft-erasespec").toString + "/t"
     val df = Seq[(java.lang.Long, String)](
       (1L, "a1"), (17L, "a17"),       // bucket 1
       (2L, "b2"), (18L, "b18"),       // bucket 2

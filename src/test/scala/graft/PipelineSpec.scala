@@ -8,7 +8,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("extractMonth runs csv -> clean -> cap -> parquet with stats and cursor") {
-    val dir = Files.createTempDirectory("graft-pipe")
+    val dir = tempDir("graft-pipe")
     val csv = dir.resolve("2019-11.csv")
     Files.writeString(csv,
       """event_time,event_type,product_id,category_id,category_code,brand,price,user_id,user_session
@@ -52,7 +52,7 @@ class PipelineSpec extends SparkSpec {
       (3L, ""),
       (4L, null.asInstanceOf[String]))
     val df = rows.toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("graft-jsonl-spec")
+    val tmp = tempDir("graft-jsonl-spec")
     graft.sink.Sinks.writeJsonl(df, s"$tmp/d")
     val back = graft.ingest.Sources.jsonl(spark, s"$tmp/d", df.schema)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
@@ -62,7 +62,7 @@ class PipelineSpec extends SparkSpec {
   test("jsonlTolerant quarantines corrupt lines without losing good ones") {
     import java.nio.file.{Files => JFiles, Paths}
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-jsonl-tol")
+    val dir = tempDir("graft-jsonl-tol")
     val lines = Seq(
       """{"doc_id": 1, "text": "good one"}""",
       """{"doc_id": 2, "text": "also fine"}""",
@@ -92,14 +92,14 @@ class PipelineSpec extends SparkSpec {
       (4L, ""),
       (5L, null.asInstanceOf[String]))
     val df = rows.toDF("doc_id", "text")
-    val csvTmp = Files.createTempDirectory("graft-csv-spec")
+    val csvTmp = tempDir("graft-csv-spec")
     graft.sink.Sinks.writeCsvTyped(df, s"$csvTmp/d")
     val csvBack = graft.ingest.Sources.csvTyped(spark, s"$csvTmp/d", df.schema)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     // the pinned dialect (\N nulls vs "" empties) keeps even CSV's
     // classic lossy corner intact — null and empty both round-trip
     assert(csvBack == rows)
-    val orcTmp = Files.createTempDirectory("graft-orc-spec")
+    val orcTmp = tempDir("graft-orc-spec")
     graft.sink.Sinks.writeOrc(df, s"$orcTmp/d")
     val orcBack = graft.ingest.Sources.orc(spark, s"$orcTmp/d")
       .as[(Long, String)].collect().sortBy(_._1).toSeq
@@ -108,7 +108,7 @@ class PipelineSpec extends SparkSpec {
 
   test("orc scan keeps predicate pushdown and column pruning") {
     val docs = graft.ingest.Sources.table(spark, sf("sf0.001"), "documents")
-    val tmp = Files.createTempDirectory("graft-orc-push")
+    val tmp = tempDir("graft-orc-push")
     graft.sink.Sinks.writeOrc(docs, s"$tmp/d")
     val q = graft.ingest.Sources.orc(spark, s"$tmp/d")
       .filter($"doc_id" > 100L).select("doc_id", "lang")

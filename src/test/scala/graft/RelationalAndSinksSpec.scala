@@ -243,7 +243,7 @@ class RelationalAndSinksSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val docs = Sources.table(spark, dir, "documents")
     val fileBytes = new java.io.File(s"$dir/documents.parquet").length()
-    val out = Files.createTempDirectory("graft-shards").toString
+    val out = tempDir("graft-shards").toString
     // target = 1/4 of the source bytes → exactly ceil(size/target) shards
     val n = Sinks.writeSizedShards(docs, out, targetBytes = fileBytes / 4)
     assert(n >= 4 && n <= 5, s"expected ~4 shards for a quarter target: $n")
@@ -252,7 +252,7 @@ class RelationalAndSinksSpec extends SparkSpec {
     assert(parts == n, s"wrote $parts part files, computed $n")
     assert(spark.read.parquet(out).count() == docs.count())
     // a huge target collapses to one shard via coalesce (no shuffle)
-    val out1 = Files.createTempDirectory("graft-shards1").toString
+    val out1 = tempDir("graft-shards1").toString
     assert(Sinks.writeSizedShards(docs, out1, targetBytes = 1L << 40) == 1)
   }
 
@@ -295,7 +295,7 @@ class RelationalAndSinksSpec extends SparkSpec {
   }
 
   test("date-partitioned sink writes prunable layout") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part").toString
     val events = Sources.events(spark, sf("sf0.001"))
     Sinks.writeDatePartitioned(events, out)
     val dirs = new java.io.File(out).listFiles()

@@ -201,14 +201,15 @@ class RetrievalSpec extends SparkSpec {
       "never a cartesian product") {
     val d = docsDf
     val qt = bm25Qt(d)
-    val df = Retrieval.bm25SearchPruned(d, qt)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plans = roundPlans(spark)(Retrieval.bm25SearchPruned(d, qt))
+    assert(plans.nonEmpty)
     // the candidate×term fetch joins broadcast-side against the
     // checkpointed contribution scan (LogicalRDD — lineage severed)
-    assert(plan.contains("BroadcastHashJoin"),
-      s"candidate fetch must broadcast:\n$plan")
-    assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
+    plans.foreach { plan =>
+      assert(plan.contains("BroadcastHashJoin"),
+        s"candidate fetch must broadcast:\n$plan")
+      assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
+    }
   }
 
   test("bm25SearchPruned: past the broadcast threshold every round stays " +
@@ -218,11 +219,37 @@ class RetrievalSpec extends SparkSpec {
     val d = graft.ingest.Sources.table(noBroadcast, sf("sf0.001"),
       "documents")
     val qt = bm25Qt(docsDf)
-    val prunedDf = Retrieval.bm25SearchPruned(d, qt)
-    assert(prunedDf.collect().toSeq ==
-      Retrieval.bm25Search(docsDf, qt).collect().toSeq)
-    val plan = prunedDf.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastExchange"), s"no broadcast:\n$plan")
+    var pruned = Seq.empty[org.apache.spark.sql.Row]
+    val plans = roundPlans(noBroadcast) {
+      pruned = Retrieval.bm25SearchPruned(d, qt).collect().toSeq
+    }
+    assert(pruned == Retrieval.bm25Search(docsDf, qt).collect().toSeq)
+    assert(plans.nonEmpty)
+    plans.foreach(plan =>
+      assert(!plan.contains("BroadcastExchange"), s"no broadcast:\n$plan"))
+  }
+
+  /** Executed plans of the certificate-round collects `body` runs in
+    * `session` (the actions whose plan unions bounds with top-k rows). */
+  private def roundPlans(session: org.apache.spark.sql.SparkSession)(
+      body: => Any): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graft.ColumnBridge
+        .waitForListeners(session.sparkContext)
+    } finally session.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.filter(_.contains("Union"))
   }
 
   /** `qs` with `d`'s trained idf, the `(query_id, tok, idf_micro)` rows. */
@@ -259,7 +286,7 @@ class RetrievalSpec extends SparkSpec {
       "a new index whose results ≡ the exact route on the new data, " +
       "and a plan opened on the previous index still runs") {
     withArtifactRoot {
-      val data = java.nio.file.Files.createTempDirectory("graft-bm25-index")
+      val data = tempDir("graft-bm25-index")
       val vocab = Vector("spark", "dup", "hash", "table", "join", "scan")
       def write(seed: Int): Unit = {
         val r = new scala.util.Random(seed)
@@ -270,29 +297,30 @@ class RetrievalSpec extends SparkSpec {
       }
       val qs = Seq(1L -> Seq("spark", "dup"), 2L -> Seq("hash", "table"))
       var builds = 0
-      def open(): (org.apache.spark.sql.DataFrame,
+      def open(): (Retrieval.Bm25Index, Seq[(Long, String, Long)],
           Seq[org.apache.spark.sql.Row]) = {
         val d = graft.ingest.Sources.table(spark, data.toString, "documents")
         val qt = qtFor(d, qs)
         val index = Retrieval.bm25Index(spark, data.toString,
           qt.map(_._2).distinct) { builds += 1; d }
-        (Retrieval.bm25SearchPruned(index, qt),
-          Retrieval.bm25Search(d, qt).collect().toSeq)
+        (index, qt, Retrieval.bm25Search(d, qt).collect().toSeq)
       }
+      def search(index: Retrieval.Bm25Index, qt: Seq[(Long, String, Long)]) =
+        Retrieval.bm25SearchPruned(index, qt).collect().toSeq
       try {
         write(1)
-        // plan1 first runs after the rebuild, so it must read the
-        // first index's files then
-        val (plan1, exact1) = open()
-        val pruned1 = open()._1.collect().toSeq
+        // index1's postings plan first runs again after the rebuild, so
+        // it must read the first index's files then
+        val (index1, qt1, exact1) = open()
+        val pruned1 = search(open()._1, qt1)
         assert(builds == 1)
         write(2)
-        val (plan2, exact2) = open()
-        val pruned2 = plan2.collect().toSeq
+        val (index2, qt2, exact2) = open()
+        val pruned2 = search(index2, qt2)
         assert(builds == 2, "a rewritten corpus must build a new index")
         assert(pruned1 == exact1 && pruned2 == exact2)
         assert(pruned1 != pruned2, "the two corpora must rank differently")
-        assert(plan1.collect().toSeq == pruned1,
+        assert(search(index1, qt1) == pruned1,
           "the rebuild must keep the previous generation's files")
       } finally Fs.deleteQuietly(data)
     }
@@ -314,6 +342,21 @@ class RetrievalSpec extends SparkSpec {
       assert(warm.collect().toSeq == exact.collect().toSeq)
       assert(usage.jobs <= 5L * diag.rounds,
         s"${usage.jobs} jobs for ${diag.rounds} certificate rounds")
+    }
+  }
+
+  test("q_bm25_maxscore warm call: collecting the returned frame runs no " +
+      "job — the last certificate round's rows are the result") {
+    withArtifactRoot {
+      val dir = sf("sf0.001")
+      val entry = SparkEntry.queries("q_bm25_maxscore")
+      val want = entry(spark, dir).collect().toSeq // trains, builds the index
+      val warm = entry(spark, dir)
+      val meter = Meter(spark)
+      val (got, usage) = try meter.run(warm.collect().toSeq)
+        finally meter.close()
+      assert(got.nonEmpty && got == want)
+      assert(usage.jobs == 0L, s"${usage.jobs} jobs to collect the result")
     }
   }
 

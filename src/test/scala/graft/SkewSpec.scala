@@ -156,7 +156,7 @@ class SkewSpec extends SparkSpec {
     // scan, discarding non-joining rows before the shuffle. Thresholds
     // scaled to local parquet sizes; broadcast disabled so the rule (which
     // targets shuffle joins) applies.
-    val dir = java.nio.file.Files.createTempDirectory("graft-rtf").toString
+    val dir = tempDir("graft-rtf").toString
     spark.range(100000)
       .select((col("id") % 5000).as("k"), md5(col("id").cast("string")).as("payload"))
       .write.parquet(s"$dir/fact")

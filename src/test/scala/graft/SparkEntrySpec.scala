@@ -1,11 +1,10 @@
 package graft
 
 import graft.sink.ArtifactStore
-import org.scalatest.BeforeAndAfterAll
 
 /** Cross-sfDir behavior of the [[SparkEntry]] surface itself — the pieces
   * the per-query specs can't see because they pin one dataset at a time. */
-class SparkEntrySpec extends SparkSpec with BeforeAndAfterAll {
+class SparkEntrySpec extends SparkSpec {
 
   private val dirA = sf("sf0.001")
   private val dirB = sf("sf0.01")
@@ -13,15 +12,12 @@ class SparkEntrySpec extends SparkSpec with BeforeAndAfterAll {
   /** The first 250 docs of `dirA`: both testdata corpora hold 500 docs,
     * and `q_tfidf_pairs`' trained artifact is the corpus size alone, so
     * its mirror can only re-key between corpora of different sizes. */
-  private val halfDir = java.nio.file.Files.createTempDirectory("graft-half")
+  private val halfDir = tempDir("graft-half")
   private lazy val halfDocs: String = {
     spark.read.parquet(s"$dirA/documents.parquet").orderBy("doc_id")
       .limit(250).write.parquet(s"$halfDir/documents.parquet")
     halfDir.toString
   }
-
-  override def afterAll(): Unit =
-    try Fs.deleteQuietly(halfDir) finally super.afterAll()
 
   private def evalThenMirror(q: String, dir: String): String = {
     SparkEntry.queries(q)(spark, dir).collect()

@@ -101,7 +101,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName("t_tws")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-tws").toString)
+          tempDir("graft-tws").toString)
         .start()
       try {
         val events = ingest.Sources.events(spark, sf("sf0.001"))
@@ -135,7 +135,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName("t_tws_evict")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-twse").toString)
+          tempDir("graft-twse").toString)
         .start()
       try {
         def batch(rows: In*): Unit = { mem.addData(rows); q.processAllAvailable() }
@@ -172,7 +172,7 @@ class StreamingSpec extends SparkSpec {
     val q = agg.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_wm")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-wm").toString)
+        tempDir("graft-wm").toString)
       .start()
     try {
       mem.addData(
@@ -283,7 +283,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_transitions")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-trans").toString)
+        tempDir("graft-trans").toString)
       .start()
     try {
       def ts(s: String) = Timestamp.valueOf(s)
@@ -317,7 +317,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_velocity")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-vel").toString)
+        tempDir("graft-vel").toString)
       .start()
     try {
       def ts(s: String) = Timestamp.valueOf(s)
@@ -353,7 +353,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_velocity_split")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-vel-split").toString)
+        tempDir("graft-vel-split").toString)
       .start()
     try {
       def ts(s: String) = Timestamp.valueOf(s)
@@ -388,7 +388,7 @@ class StreamingSpec extends SparkSpec {
       val q = wire(mem.toDS()).writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName(name)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft-$name").toString)
+          tempDir(s"graft-$name").toString)
         .start()
       try {
         // batch 1: u1 click, u2 view (both keys get state)
@@ -432,7 +432,7 @@ class StreamingSpec extends SparkSpec {
       val q = wire(mem.toDS()).writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName(name)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft-$name").toString)
+          tempDir(s"graft-$name").toString)
         .start()
       try {
         mem.addData(In(1, ts("2024-01-01 10:00:00"), 1),
@@ -474,7 +474,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_streaks_ttl")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-streaks-ttl").toString)
+        tempDir("graft-streaks-ttl").toString)
       .start()
     try {
       mem.addData(In(1, ts("2024-01-01 00:00:00"), 1, "view"))

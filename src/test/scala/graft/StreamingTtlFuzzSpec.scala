@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -99,10 +99,10 @@ abstract class StreamingTtlFuzzBase extends SparkSpec {
     * drained — the runAppendFinalized two-phase discipline, generalized. */
   protected def runMultiBatch(name: String, batches: Seq[Seq[Ev]],
       transform: DataFrame => DataFrame): DataFrame = {
-    val srcDir = Files.createTempDirectory(s"graft-ttlf-$name")
-    val ck = Files.createTempDirectory(s"graft-ttlfck-$name")
+    val srcDir = tempDir(s"graft-ttlf-$name")
+    val ck = tempDir(s"graft-ttlfck-$name")
     def addFile(rows: Seq[Ev], idx: Int): Unit = {
-      val stage = Files.createTempDirectory(s"graft-ttlfst-$name")
+      val stage = tempDir(s"graft-ttlfst-$name")
       try {
         toDf(rows).coalesce(1).write.mode("overwrite")
           .parquet(stage.resolve("out").toString)

@@ -38,7 +38,7 @@ class TimestampContractSpec extends SparkSpec {
   /** Writes `<dir>/events.parquet` as a plain FILE (the driver's testdata
     * layout — the streaming file source symlinks that exact path). */
   private def writeEventsDir(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-tsfix")
+    val dir = tempDir("graft-tsfix")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/stage")
     val part = {
       import scala.jdk.CollectionConverters._
@@ -141,7 +141,7 @@ class TimestampContractSpec extends SparkSpec {
     // millis — the pinned Sinks.TsFormat must carry all six digits
     val df = ltzFrame.withColumn("ts",
       timestamp_micros(unix_micros(col("ts")) + 123456L))
-    val dir = Files.createTempDirectory("graft-tsdialect")
+    val dir = tempDir("graft-tsdialect")
     try {
       graft.sink.Sinks.writeCsvTyped(df, s"$dir/csv")
       val csvBack = Sources.csvTyped(spark, s"$dir/csv", df.schema)
@@ -159,7 +159,7 @@ class TimestampContractSpec extends SparkSpec {
   test("TestdataContract: a perturbed fixture produces a one-line diff " +
     "naming exactly what changed (the Verify fail-fast path)") {
     val src = java.nio.file.Paths.get(sf("sf0.001"))
-    val dir = Files.createTempDirectory("graft-contract")
+    val dir = tempDir("graft-contract")
     try {
       // symlink every table except events; perturb events: rename
       // user_id → uid, retype value double → string

@@ -28,9 +28,9 @@ class WarehouseSpec extends SparkSpec {
   test("streamToWarehouse appends RAW and refreshes REPORTING per batch") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[PropEvent]
-    val raw = Files.createTempDirectory("graft-raw").toString
-    val rep = Files.createTempDirectory("graft-rep").toString
-    val ck = Files.createTempDirectory("graft-whck").toString
+    val raw = tempDir("graft-raw").toString
+    val rep = tempDir("graft-rep").toString
+    val ck = tempDir("graft-whck").toString
     val q = Sinks.streamToWarehouse(mem.toDF(), raw, rep, ck,
       EventQueries.dailyRevenue)
     try {
@@ -53,10 +53,10 @@ class WarehouseSpec extends SparkSpec {
 
   test("warehouseBatchChecked gates publication on the constraint suite") {
     import graft.ops.Checks
-    val raw = Files.createTempDirectory("graft-gr").toString
-    val rep = Files.createTempDirectory("graft-gp").toString
-    val chk = Files.createTempDirectory("graft-gc").toString
-    val rej = Files.createTempDirectory("graft-gx").toString
+    val raw = tempDir("graft-gr").toString
+    val rep = tempDir("graft-gp").toString
+    val chk = tempDir("graft-gc").toString
+    val rej = tempDir("graft-gx").toString
     def run(b: org.apache.spark.sql.DataFrame, id: Long) =
       Sinks.warehouseBatchChecked(b, id, raw, rep,
         EventQueries.dailyRevenue, Checks.dataChecks, chk, rej)
@@ -101,11 +101,11 @@ class WarehouseSpec extends SparkSpec {
   test("gate composes with row rules: quarantinable rows don't reject the batch") {
     import graft.ops.Checks
     import graft.ingest.Cleaning
-    val raw = Files.createTempDirectory("graft-cgr").toString
-    val rep = Files.createTempDirectory("graft-cgp").toString
-    val chk = Files.createTempDirectory("graft-cgc").toString
-    val rej = Files.createTempDirectory("graft-cgx").toString
-    val qua = Files.createTempDirectory("graft-cgq").toString
+    val raw = tempDir("graft-cgr").toString
+    val rep = tempDir("graft-cgp").toString
+    val chk = tempDir("graft-cgc").toString
+    val rej = tempDir("graft-cgx").toString
+    val qua = tempDir("graft-cgq").toString
     // one rule-failing row (negative value) among good ones: the per-row
     // split must strip it FIRST, so the constraint suite judges only the
     // publishable half — checks-before-quarantine would wholesale-reject
@@ -126,8 +126,8 @@ class WarehouseSpec extends SparkSpec {
     val nullReport = (d: org.apache.spark.sql.DataFrame) =>
       Checks.dataChecks(d).withColumn("passed",
         org.apache.spark.sql.functions.lit(null).cast("boolean"))
-    val raw2 = Files.createTempDirectory("graft-cgr2").toString
-    val rep2 = Files.createTempDirectory("graft-cgp2").toString
+    val raw2 = tempDir("graft-cgr2").toString
+    val rep2 = tempDir("graft-cgp2").toString
     Sinks.warehouseBatchChecked(batch, 0L, raw2, rep2,
       EventQueries.dailyRevenue, nullReport, chk, rej)
     assert(!new java.io.File(raw2).listFiles().exists(_.getName.startsWith(
@@ -140,11 +140,11 @@ class WarehouseSpec extends SparkSpec {
     import graft.ops.Checks
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[PropEvent]
-    val raw = Files.createTempDirectory("graft-sgr").toString
-    val rep = Files.createTempDirectory("graft-sgp").toString
-    val chk = Files.createTempDirectory("graft-sgc").toString
-    val rej = Files.createTempDirectory("graft-sgx").toString
-    val ck = Files.createTempDirectory("graft-sgk").toString
+    val raw = tempDir("graft-sgr").toString
+    val rep = tempDir("graft-sgp").toString
+    val chk = tempDir("graft-sgc").toString
+    val rej = tempDir("graft-sgx").toString
+    val ck = tempDir("graft-sgk").toString
     val q = Sinks.streamToWarehouseChecked(mem.toDF(), raw, rep, ck,
       EventQueries.dailyRevenue, Checks.dataChecks, chk, rej)
     try {
@@ -173,9 +173,9 @@ class WarehouseSpec extends SparkSpec {
   test("incremental refresh input does not grow as RAW history accumulates") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[PropEvent]
-    val raw = Files.createTempDirectory("graft-raw2").toString
-    val rep = Files.createTempDirectory("graft-rep2").toString
-    val ck = Files.createTempDirectory("graft-whck2").toString
+    val raw = tempDir("graft-raw2").toString
+    val rep = tempDir("graft-rep2").toString
+    val ck = tempDir("graft-whck2").toString
     // tracks records AND bytes actually read from files between marks;
     // incremental refresh should read only the micro-batch's day
     // partitions, so the per-batch read stays flat while RAW grows batch
@@ -215,8 +215,8 @@ class WarehouseSpec extends SparkSpec {
     // the exactly-once-observable core: re-running a batchId REPLACES its
     // own (day, batch) raw partitions instead of appending — so foreachBatch
     // replay after a crash (its native at-least-once) cannot duplicate
-    val raw = Files.createTempDirectory("graft-raw-rp").toString
-    val rep = Files.createTempDirectory("graft-rep-rp").toString
+    val raw = tempDir("graft-raw-rp").toString
+    val rep = tempDir("graft-rep-rp").toString
     val b0 = Seq(
       PropEvent(1, ts("2024-01-01 10:00:00"), 1, "purchase", 10.0, "{}"),
       PropEvent(2, ts("2024-01-01 11:00:00"), 2, "view", 1.0, "{}")).toDF()
@@ -244,10 +244,10 @@ class WarehouseSpec extends SparkSpec {
 
   test("warehouseBatchChecked job budget; REPORTING refreshes exactly the batch's days") {
     import graft.ops.Checks
-    val raw = Files.createTempDirectory("graft-jb-raw").toString
-    val rep = Files.createTempDirectory("graft-jb-rep").toString
-    val chk = Files.createTempDirectory("graft-jb-chk").toString
-    val rej = Files.createTempDirectory("graft-jb-rej").toString
+    val raw = tempDir("graft-jb-raw").toString
+    val rep = tempDir("graft-jb-rep").toString
+    val chk = tempDir("graft-jb-chk").toString
+    val rej = tempDir("graft-jb-rej").toString
     def run(b: org.apache.spark.sql.DataFrame, id: Long) =
       Sinks.warehouseBatchChecked(b, id, raw, rep,
         EventQueries.dailyRevenue, Checks.dataChecks, chk, rej)
@@ -291,11 +291,11 @@ class WarehouseSpec extends SparkSpec {
   test("an all-quarantined batch publishes no REPORTING and does not throw") {
     import graft.ops.Checks
     import graft.ingest.Cleaning
-    val raw = Files.createTempDirectory("graft-aq-raw").toString
-    val rep = Files.createTempDirectory("graft-aq-rep").toString
-    val chk = Files.createTempDirectory("graft-aq-chk").toString
-    val rej = Files.createTempDirectory("graft-aq-rej").toString
-    val qua = Files.createTempDirectory("graft-aq-qua").toString
+    val raw = tempDir("graft-aq-raw").toString
+    val rep = tempDir("graft-aq-rep").toString
+    val chk = tempDir("graft-aq-chk").toString
+    val rej = tempDir("graft-aq-rej").toString
+    val qua = tempDir("graft-aq-qua").toString
     val batch = Seq(
       PropEvent(1, ts("2024-01-01 10:00:00"), 1, "purchase", -3.0, "{}"),
       PropEvent(2, ts("2024-01-02 10:00:00"), 2, "error", 1.0, "{}")).toDF()
@@ -312,8 +312,8 @@ class WarehouseSpec extends SparkSpec {
 
   test("observedRowWidth's footer cache equals a cold computation") {
     import scala.jdk.CollectionConverters._
-    val raw = Files.createTempDirectory("graft-rw-raw").toString
-    val rep = Files.createTempDirectory("graft-rw-rep").toString
+    val raw = tempDir("graft-rw-raw").toString
+    val rep = tempDir("graft-rw-rep").toString
     val sampleFiles = 4
     // the definition, computed from scratch: first sampleFiles non-empty
     // parquet files by path, their bytes and footer rows
@@ -368,10 +368,10 @@ class WarehouseSpec extends SparkSpec {
 
   test("dead-letter layer: quarantined rows split out, replay idempotent") {
     implicit val sqlCtx = spark.sqlContext
-    val raw = Files.createTempDirectory("graft-raw-q").toString
-    val rep = Files.createTempDirectory("graft-rep-q").toString
-    val dead = Files.createTempDirectory("graft-dead-q").toString
-    val ck = Files.createTempDirectory("graft-ck-q").toString
+    val raw = tempDir("graft-raw-q").toString
+    val rep = tempDir("graft-rep-q").toString
+    val dead = tempDir("graft-dead-q").toString
+    val ck = tempDir("graft-ck-q").toString
     val mem = MemoryStream[PropEvent]
     val q = Sinks.streamToWarehouse(mem.toDF(), raw, rep, ck,
       EventQueries.dailyRevenue, quarantinePath = dead,
@@ -415,17 +415,17 @@ class WarehouseSpec extends SparkSpec {
     // with a FRESH checkpoint would replay ingest_batch=0 and the dynamic
     // overwrite would DELETE the first pipeline's partitions
     implicit val sqlCtx = spark.sqlContext
-    val raw = Files.createTempDirectory("graft-raw-ln").toString
-    val rep = Files.createTempDirectory("graft-rep-ln").toString
+    val raw = tempDir("graft-raw-ln").toString
+    val rep = tempDir("graft-rep-ln").toString
     def runPipeline(ck: String, rows: Seq[PropEvent]): Unit = {
       val mem = MemoryStream[PropEvent]
       val q = Sinks.streamToWarehouse(mem.toDF(), raw, rep, ck,
         EventQueries.dailyRevenue)
       try { mem.addData(rows: _*); q.processAllAvailable() } finally q.stop()
     }
-    runPipeline(Files.createTempDirectory("graft-ck-ln1").toString, Seq(
+    runPipeline(tempDir("graft-ck-ln1").toString, Seq(
       PropEvent(1, ts("2024-01-01 10:00:00"), 1, "purchase", 10.0, "{}")))
-    runPipeline(Files.createTempDirectory("graft-ck-ln2").toString, Seq(
+    runPipeline(tempDir("graft-ck-ln2").toString, Seq(
       PropEvent(2, ts("2024-01-01 11:00:00"), 2, "purchase", 2.5, "{}")))
     // both pipelines' batch-0 rows coexist (same day, distinct lineages)
     val ids = spark.read.parquet(raw).select("event_id")
@@ -448,7 +448,7 @@ class WarehouseSpec extends SparkSpec {
     }
     def writeFile(dir: String, name: String, rows: Seq[PropEvent]): Unit = {
       import scala.jdk.CollectionConverters._
-      val out = Files.createTempDirectory("graft-rsf").toString + "/out"
+      val out = tempDir("graft-rsf").toString + "/out"
       rows.toDF().coalesce(1).write.parquet(out)
       val ls = Files.list(java.nio.file.Paths.get(out))
       val part =
@@ -467,22 +467,22 @@ class WarehouseSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     // run A: uninterrupted over all four files
-    val srcA = Files.createTempDirectory("graft-rs-srcA").toString
+    val srcA = tempDir("graft-rs-srcA").toString
     (0 until 4).foreach(i =>
       writeFile(srcA, f"f$i%02d.parquet", events.slice(i * 2, i * 2 + 2)))
     val (rawA, repA, ckA) = (
-      Files.createTempDirectory("graft-rs-rawA").toString,
-      Files.createTempDirectory("graft-rs-repA").toString,
-      Files.createTempDirectory("graft-rs-ckA").toString)
+      tempDir("graft-rs-rawA").toString,
+      tempDir("graft-rs-repA").toString,
+      tempDir("graft-rs-ckA").toString)
     runOver(srcA, rawA, repA, ckA)
     // run B: two files, stop, two more files, RESUME from the checkpoint
-    val srcB = Files.createTempDirectory("graft-rs-srcB").toString
+    val srcB = tempDir("graft-rs-srcB").toString
     (0 until 2).foreach(i =>
       writeFile(srcB, f"f$i%02d.parquet", events.slice(i * 2, i * 2 + 2)))
     val (rawB, repB, ckB) = (
-      Files.createTempDirectory("graft-rs-rawB").toString,
-      Files.createTempDirectory("graft-rs-repB").toString,
-      Files.createTempDirectory("graft-rs-ckB").toString)
+      tempDir("graft-rs-rawB").toString,
+      tempDir("graft-rs-repB").toString,
+      tempDir("graft-rs-ckB").toString)
     runOver(srcB, rawB, repB, ckB)
     assert(spark.read.parquet(rawB).count() == 4, "pre-restart raw rows")
     (2 until 4).foreach(i =>
@@ -502,9 +502,9 @@ class WarehouseSpec extends SparkSpec {
   test("incremental probe rejects reporting fns at call time, probe shape matches runtime") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[PropEvent]
-    def dirs() = (Files.createTempDirectory("graft-p").toString,
-      Files.createTempDirectory("graft-p").toString,
-      Files.createTempDirectory("graft-p").toString)
+    def dirs() = (tempDir("graft-p").toString,
+      tempDir("graft-p").toString,
+      tempDir("graft-p").toString)
     // a reporting fn that leans on a pre-stamped event_date input column
     // must fail when streamToWarehouse is CALLED (probe), not mid-stream
     // inside foreachBatch: the runtime input has event_date dropped
@@ -526,7 +526,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("upsertParquet replaces matching keys and appends new ones") {
-    val path = Files.createTempDirectory("graft-upsert").toString + "/t"
+    val path = tempDir("graft-upsert").toString + "/t"
     Sinks.upsertParquet(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, Seq("k"))
     Sinks.upsertParquet(Seq((2L, "B"), (3L, "c")).toDF("k", "v"), path, Seq("k"))
     val got = spark.read.parquet(path).as[(Long, String)]
@@ -545,7 +545,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("upsertParquetPartitioned rewrites only partitions carrying updated keys") {
-    val path = Files.createTempDirectory("graft-upsertp").toString + "/t"
+    val path = tempDir("graft-upsertp").toString + "/t"
     Sinks.upsertParquetPartitioned(
       Seq((1L, "d1", "a"), (2L, "d1", "b"), (3L, "d2", "c"), (4L, "d3", "d"))
         .toDF("k", "day", "v"),
@@ -569,7 +569,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("partition-level crash leftovers are healed before the target is read") {
     import java.nio.file.{Files => F, Paths, StandardCopyOption}
-    val path = Files.createTempDirectory("graft-upsertc").toString + "/t"
+    val path = tempDir("graft-upsertc").toString + "/t"
     Sinks.upsertParquetPartitioned(
       Seq((1L, "d1", "a"), (2L, "d2", "b"), (3L, "d3", "c"))
         .toDF("k", "day", "v"),
@@ -601,7 +601,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("compactPartitions compacts fragmented dirs and skips compact ones") {
-    val path = Files.createTempDirectory("graft-compactpp").toString + "/t"
+    val path = tempDir("graft-compactpp").toString + "/t"
     val ev = Sources.events(spark, sf("sf0.001"))
     Sinks.writeDatePartitioned(ev.repartition(4), path)
     val total = ev.count()
@@ -628,7 +628,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("recoverSwap restores a crashed backup-then-swap") {
-    val root = Files.createTempDirectory("graft-recover").toString
+    val root = tempDir("graft-recover").toString
     val path = root + "/t"
     Seq((1L, "a")).toDF("k", "v").write.parquet(path)
     // simulate a crash between the two moves: data only under the backup
@@ -653,7 +653,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("writeZOrdered fails loudly on keys outside [0, 2^bits) instead of " +
       "silently interleaving garbage") {
-    val out = Files.createTempDirectory("graft-zg").toString + "/z"
+    val out = tempDir("graft-zg").toString + "/z"
     def write(rows: Seq[(Long, Long)]): Unit =
       Sinks.writeZOrdered(rows.toDF("a", "b"), out, partitions = 1,
         "a", "b", bits = 4)
@@ -681,8 +681,8 @@ class WarehouseSpec extends SparkSpec {
       .select(col("user_id"), unix_micros(col("ts"))
         .divide(86400000000L).cast("long").as("day"), col("value"))
     val total = ev.count()
-    val zPath = Files.createTempDirectory("graft-z").toString + "/z"
-    val dayPath = Files.createTempDirectory("graft-z").toString + "/day"
+    val zPath = tempDir("graft-z").toString + "/z"
+    val dayPath = tempDir("graft-z").toString + "/day"
     Sinks.writeZOrdered(ev, zPath, partitions = 16, "user_id", "day")
     Sinks.writeRangeLayout(ev, dayPath, 16, "day")
     val meter = Meter(spark)
@@ -705,7 +705,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("writeRangeLayout produces disjoint, internally sorted file ranges") {
-    val path = Files.createTempDirectory("graft-range").toString + "/t"
+    val path = tempDir("graft-range").toString + "/t"
     val ev = Sources.events(spark, sf("sf0.001"))
     Sinks.writeRangeLayout(ev, path, 4, "event_id")
     // per-file min/max must not overlap — that disjointness is what lets
@@ -724,7 +724,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("compact merges small files preserving rows") {
-    val path = Files.createTempDirectory("graft-compact").toString + "/t"
+    val path = tempDir("graft-compact").toString + "/t"
     val ev = Sources.events(spark, sf("sf0.001"))
     ev.repartition(16).write.parquet(path) // 16 tiny files
     def parquetFiles() = {
@@ -740,7 +740,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("compact preserves Hive-partitioned layouts") {
-    val path = Files.createTempDirectory("graft-compactp").toString + "/t"
+    val path = tempDir("graft-compactp").toString + "/t"
     val ev = Sources.events(spark, sf("sf0.001"))
     Sinks.writeDatePartitioned(ev.repartition(8), path)
     val dirsBefore = new java.io.File(path).listFiles()
@@ -774,8 +774,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("stored day-sketches serve any rolling window without raw events") {
     val ev = Sources.events(spark, sf("sf0.001"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-sketches").toString + "/dau_sk"
+    val path = tempDir("graft-sketches").toString + "/dau_sk"
     sink.Sinks.writeDailySketches(ev, path)
     val stored = spark.read.parquet(path)
     // kilobytes of state: one small binary sketch per day
@@ -794,7 +793,7 @@ class WarehouseSpec extends SparkSpec {
       .groupBy("user_id").agg(count(lit(1)).as("n_views"))
     val buys = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(count(lit(1)).as("n_buys"))
-    val dir = Files.createTempDirectory("graft-bucketed")
+    val dir = tempDir("graft-bucketed")
     Sinks.writeBucketed(views, "b_views", "user_id", 8, Some(s"$dir/views"))
     Sinks.writeBucketed(buys, "b_buys", "user_id", 8, Some(s"$dir/buys"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

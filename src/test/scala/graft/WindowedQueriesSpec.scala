@@ -76,7 +76,7 @@ class WindowedQueriesSpec extends SparkSpec {
     val q = agg.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("t_sess")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-sess").toString)
+        tempDir("graft-sess").toString)
       .start()
     try {
       mem.addData(
