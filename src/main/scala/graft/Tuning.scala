@@ -1,50 +1,16 @@
 package graft
 
 /** Cluster-sizing recipe for the 100 TB target (SURVEY §7.4's design
-  * stance), as pure conf maps a deployment applies to its session builder —
-  * the local harness (Verify/Bench at local[32]) deliberately does NOT use
-  * these; they encode what changes when the same plans run on a
-  * 1000-executor cluster.
-  *
-  * Sizing logic:
-  *  - shuffle partitions follow DATA volume (one ~256 MB post-shuffle
-  *    partition each), floored at 2 tasks/core so a small stage still fills
-  *    the cluster — never a fixed 200;
-  *  - scans cap at 256 MB per input split (`files.maxPartitionBytes`);
-  *  - AQE re-coalesces and splits skewed joins at runtime, on by default;
-  *  - streaming state goes to RocksDB (off-heap, spillable, incremental
+  * stance), as pure functions and conf maps a deployment applies to its
+  * session builder or writers:
+  *  - output files sized from the table's observed row width
+  *    ([[maxRecordsPerFile]]);
+  *  - status-store retention capped for long-lived drivers;
+  *  - streaming state on RocksDB (off-heap, spillable, incremental
   *    changelog checkpoints) — the HDFS-backed in-memory default caps state
   *    at executor heap, which an unbounded keyed stream will exhaust.
   */
 object Tuning {
-
-  /** One post-shuffle partition per `targetPartitionBytes` of input, at
-    * least `floor` (use 2× total cores: every stage fills the cluster with
-    * two waves even when AQE coalesces). */
-  def shufflePartitions(inputBytes: Long,
-      targetPartitionBytes: Long = 256L << 20, floor: Int = 64): Int = {
-    // Long math + clamp: a petabyte-scale input must not Int-overflow into
-    // a tiny partition count (the silent worst case for a sizing helper)
-    val byVolume = inputBytes / math.max(1L, targetPartitionBytes)
-    math.max(floor.toLong, math.min(byVolume, Int.MaxValue.toLong)).toInt
-  }
-
-  /** Batch-side scale configs for a cluster with `totalCores` cores
-    * processing `inputBytes` per query stage. */
-  def scaleConf(inputBytes: Long, totalCores: Int): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" ->
-      shufflePartitions(inputBytes, floor = 2 * totalCores).toString,
-    // runtime re-planning: coalesce small partitions, split skewed ones
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.files.maxPartitionBytes" -> (256L << 20).toString,
-    // dimensions up to 64 MB broadcast (fact-dim joins without a shuffle)
-    "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
-    // partition-scoped REPORTING refresh (Sinks.streamToWarehouse) must
-    // replace only the rewritten day directories
-    "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
-    "spark.sql.parquet.compression.codec" -> "zstd")
 
   /** `spark.sql.files.maxRecordsPerFile` for a parquet write targeting
     * ~`targetFileBytes` per output file, derived from the OBSERVED
@@ -57,7 +23,7 @@ object Tuning {
     * "no cap") when nothing has been observed yet — the first batch
     * lands unsplit and becomes the next batch's observation. Long
     * arithmetic via BigInt so petabyte observations cannot overflow
-    * into a tiny cap (the [[shufflePartitions]] discipline). */
+    * into a tiny cap. */
   def maxRecordsPerFile(observedBytes: Long, observedRows: Long,
       targetFileBytes: Long = 128L << 20): Long =
     if (observedRows <= 0 || observedBytes <= 0 || targetFileBytes <= 0) 0L

@@ -38,15 +38,6 @@ object Event {
     StructField("user_id", StringType, nullable = false),
     StructField("user_session", StringType, nullable = false)))
 
-  /** The funnel domain of the reference
-    * (`reference:airflow_docker/dags/utils/snowflake_refresh.py:37`). */
-  val funnelTypes: Seq[String] = Seq("view", "cart", "purchase")
-
-  /** Funnel domain remapped onto the driver testdata's `events` table
-    * (`{view, click, purchase, signup, error}`; `click` stands in for
-    * `cart` — see FIXTURES.md §2). */
-  val testdataFunnelTypes: Seq[String] = Seq("view", "click", "purchase")
-
   /** Full event-type domain of the driver testdata. */
   val testdataTypes: Seq[String] =
     Seq("view", "click", "purchase", "signup", "error")

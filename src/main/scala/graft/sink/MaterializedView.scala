@@ -23,9 +23,9 @@ import graft.Exprs
   * `q_daily_revenue`'s batch-recompute oracle VERBATIM (the shared-oracle
   * equivalence discipline).
   *
-  * Durability: the view swaps in via the same backup-then-rename as
-  * [[Sinks.upsertParquet]] (see [[Sinks.recoverSwap]] for the one crash
-  * window). Rewriting the whole view per refresh is deliberate — the view
+  * Durability: the view is rewritten whole through [[Sinks.rewrite]],
+  * the one crash-safe replace primitive (its scaladoc lists the crash
+  * windows). Rewriting the whole view per refresh is deliberate — the view
   * is keys-sized; partition-scoping the rewrite would save nothing and
   * cost the affected-key bookkeeping.
   */
@@ -44,7 +44,7 @@ object MaterializedView {
     * be aggregated to one row per key (e.g. [[dailyRevenueDelta]]). */
   def mergeSums(deltaAgg: DataFrame, mvPath: String, keyCols: Seq[String],
       sumCols: Seq[String]): Unit =
-    mergeInternal(deltaAgg, mvPath, keyCols, sumCols, ledgerAdd = None)
+    mergeInternal(deltaAgg, mvPath, keyCols, sumCols, batchId = None)
 
   /** EXACTLY-ONCE [[mergeSums]] for replayable callers (foreachBatch): the
     * fold is additive, so a replayed micro-batch would double-count — this
@@ -58,15 +58,8 @@ object MaterializedView {
     * batch; here: ledger + whole-view swap, because partials MERGE rather
     * than land disjointly). */
   def mergeSumsOnce(deltaAgg: DataFrame, mvPath: String, batchId: Long,
-      keyCols: Seq[String], sumCols: Seq[String]): Boolean = {
-    Sinks.recoverSwap(mvPath)
-    if (appliedBatches(mvPath).contains(batchId)) false
-    else {
-      mergeInternal(deltaAgg, mvPath, keyCols, sumCols,
-        ledgerAdd = Some(batchId))
-      true
-    }
-  }
+      keyCols: Seq[String], sumCols: Seq[String]): Boolean =
+    mergeInternal(deltaAgg, mvPath, keyCols, sumCols, Some(batchId))
 
   /** Batch ids already folded into the view (empty for a ledger-less or
     * absent view). */
@@ -82,32 +75,41 @@ object MaterializedView {
 
   private val LedgerFile = "_applied_batches"
 
+  /** Folds the delta into the view unless `batchId` is already in its
+    * ledger, and says whether it folded. The heal, the ledger read, the
+    * view read, the write and the swap all run inside one
+    * [[Sinks.rewrite]], so the view is healed once, before it is read. */
   private def mergeInternal(deltaAgg: DataFrame, mvPath: String,
       keyCols: Seq[String], sumCols: Seq[String],
-      ledgerAdd: Option[Long]): Unit = {
+      batchId: Option[Long]): Boolean = {
     val spark = deltaAgg.sparkSession
-    Sinks.recoverSwap(mvPath)
-    val target = Paths.get(mvPath)
-    val delta = deltaAgg.select(
-      keyCols.map(col) ++ sumCols.map(c => col(c).cast(PartialType).as(c)): _*)
-    // the stored view has the delta's schema: reading it with that schema
-    // skips the parquet schema-inference job
-    val merged =
-      if (Files.exists(target))
-        spark.read.schema(delta.schema).parquet(mvPath).unionByName(delta)
-          .groupBy(keyCols.map(col): _*)
-          .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
-          .select(keyCols.map(col) ++ sumCols.map(c =>
-            col(s"sum($c)").cast(PartialType).as(c)): _*)
-      else delta
-    val tmp = Paths.get(mvPath + ".upsert-tmp")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    ledgerAdd.foreach { id =>
-      val lines = (appliedBatches(mvPath) + id).toSeq.sorted.map(_.toString)
-      Files.write(tmp.resolve(LedgerFile),
-        lines.mkString("\n").getBytes("UTF-8"))
+    var folded = false
+    Sinks.rewrite(mvPath) { tmp =>
+      val applied = appliedBatches(mvPath)
+      if (batchId.exists(applied.contains)) Nil
+      else {
+        val delta = deltaAgg.select(keyCols.map(col) ++
+          sumCols.map(c => col(c).cast(PartialType).as(c)): _*)
+        // the stored view has the delta's schema: reading it with that
+        // schema skips the parquet schema-inference job
+        val merged =
+          if (Files.exists(Paths.get(mvPath)))
+            spark.read.schema(delta.schema).parquet(mvPath).unionByName(delta)
+              .groupBy(keyCols.map(col): _*)
+              .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
+              .select(keyCols.map(col) ++ sumCols.map(c =>
+                col(s"sum($c)").cast(PartialType).as(c)): _*)
+          else delta
+        merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+        batchId.foreach { id =>
+          Files.write(Paths.get(tmp, LedgerFile), (applied + id).toSeq.sorted
+            .mkString("\n").getBytes("UTF-8"))
+        }
+        folded = true
+        Seq("")
+      }
     }
-    Sinks.swapReplace(target, tmp, ".upsert-old")
+    folded
   }
 
   /** Per-day purchase-revenue partials of one event delta — the incremental

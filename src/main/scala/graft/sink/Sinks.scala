@@ -512,167 +512,129 @@ object Sinks {
     }
   }
 
-  /** Crash recovery for the backup-then-swap utilities ([[upsertParquet]],
-    * [[compact]], and their partition-scoped variants): a crash between
-    * "move target aside" and "move tmp in" leaves the data ONLY under the
-    * `.{upsert,compact}-old` backup with the target missing. Every swap
-    * entry point calls this first, so the next invocation (or an explicit
-    * operational call) restores the backup before proceeding — readers that
-    * raced the window fail transiently, but no data is ever lost and no
-    * manual surgery is needed. A leftover backup WITH a live target means
-    * the crash happened after the new data went live; it is stale and the
-    * next swap deletes it. */
+  /** Suffixes of [[rewrite]]'s two sibling dirs: the fresh copy is written
+    * to `<target>.swap-tmp`, and a swap parks the dir it replaces at
+    * `<dir>.swap-old` until the fresh copy is live. */
+  private[graft] val TmpSuffix = ".swap-tmp"
+  private[graft] val BackupSuffix = ".swap-old"
+
+  /** Heals the leftovers of a crashed [[rewrite]] at `path` and at every
+    * `k=v` dir below it: a backup whose dir is missing is moved back (the
+    * crash hit between a swap's two renames), a backup beside a live dir is
+    * deleted (the crash hit after the fresh copy went live), and a tmp is
+    * deleted (its copy never went live; the caller redoes it). MUST run
+    * before any read of the target: partition inference would parse a
+    * leftover `k=v.swap-old` as the bogus value `v.swap-old` while the real
+    * partition's rows are missing. [[rewrite]] runs it first. */
   def recoverSwap(path: String): Unit = {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    def walk(p: Path): Unit = {
+      val backup = suffixed(p, BackupSuffix)
+      if (Files.exists(backup))
+        if (Files.exists(p)) graft.Fs.deleteRecursively(backup)
+        else Files.move(backup, p, StandardCopyOption.ATOMIC_MOVE)
+      graft.Fs.deleteRecursively(suffixed(p, TmpSuffix))
+      if (Files.isDirectory(p))
+        listDir(p).map(_.getFileName.toString
+            .stripSuffix(BackupSuffix).stripSuffix(TmpSuffix))
+          .filter(_.contains("=")).distinct.foreach(n => walk(p.resolve(n)))
+    }
+    walk(java.nio.file.Paths.get(path))
+  }
+
+  /** The one replace-in-place rewrite behind every maintenance sink
+    * ([[MaterializedView]]'s merge, [[upsertParquetPartitioned]],
+    * [[eraseKeysPartitioned]], [[compact]]): plain parquet has no ACID
+    * commit, so renames stand in for one. [[recoverSwap]] heals `path`
+    * first; then `write` writes the fresh copy under the tmp dir it is
+    * given and lists the dirs to swap in, as paths relative to the target
+    * and the tmp: `""` for the whole target, `k=v` (or deeper) for a child.
+    * A listed dir the write did not produce is deleted; dirs not listed
+    * keep their files and mtimes; `Nil` swaps nothing. Each swap moves the
+    * old dir to its backup, moves the fresh copy in, then deletes the
+    * backup, so the old data is never the sole deleted copy.
+    *
+    * Crash windows, each healed by the next call's [[recoverSwap]]:
+    *  1. during `write`: the target is untouched and the tmp is deleted;
+    *  2. between a swap's two renames: the dir lives only as its backup,
+    *     which is moved back;
+    *  3. after a swap, before its backup is deleted: the stale backup is
+    *     deleted;
+    *  4. between two children's swaps: the listed children are part new,
+    *     part old; every caller is idempotent, so re-running the call
+    *     converges (a whole-target swap, the MV's, has no such window). */
+  private[sink] def rewrite(path: String)(
+      write: String => Seq[String]): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val target = Paths.get(path)
-    if (!Files.exists(target))
-      Seq(".upsert-old", ".compact-old").map(s => Paths.get(path + s))
-        .find(Files.exists(_))
-        .foreach(Files.move(_, target, StandardCopyOption.ATOMIC_MOVE))
-  }
-
-  /** Heal PER-PARTITION crash leftovers under a partitioned target, at
-    * every `k=v` nesting level: a `<dir>.upsert-old` / `<dir>.compact-old`
-    * child whose real dir is missing is moved back (the crash hit between
-    * the swap's two renames); one whose real dir exists is deleted (the
-    * crash hit after the new data went live but before backup cleanup);
-    * stale `*.upsert-tmp` / `*.compact-tmp` children are deleted (their
-    * rewrite never went live and will be redone). MUST run before any
-    * read of the target: a leftover backup dir would otherwise be parsed
-    * by partition inference as a bogus partition value ("X.upsert-old")
-    * while the real partition's rows are missing — the silent-data-loss
-    * window [[upsertParquetPartitioned]]'s per-partition swaps open
-    * without this. */
-  private def recoverPartitionSwaps(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(root) || !Files.isDirectory(root)) return
-    val kids = {
-      val ls = Files.list(root)
-      try ls.iterator().asScala.toList finally ls.close()
-    }
-    kids.foreach { p =>
-      val name = p.getFileName.toString
-      if (Files.isDirectory(p)) {
-        val backupSuffix =
-          Seq(".upsert-old", ".compact-old").find(name.endsWith)
-        if (backupSuffix.isDefined) {
-          val real = p.resolveSibling(name.dropRight(backupSuffix.get.length))
-          if (!Files.exists(real))
-            Files.move(p, real, StandardCopyOption.ATOMIC_MOVE)
-          else graft.Fs.deleteRecursively(p)
-        } else if (name.endsWith(".upsert-tmp") ||
-            name.endsWith(".compact-tmp")) {
-          graft.Fs.deleteRecursively(p)
-        } else if (name.contains("=")) {
-          recoverPartitionSwaps(p) // nested partition levels
-        }
-      }
-    }
-  }
-
-  /** Backup-then-swap of a freshly written `tmp` into `target`: the old
-    * data is never the sole deleted copy (see [[recoverSwap]] for the one
-    * crash window and its recovery). */
-  private[sink] def swapReplace(target: java.nio.file.Path,
-      tmp: java.nio.file.Path, backupSuffix: String): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val backup =
-      target.resolveSibling(target.getFileName.toString + backupSuffix)
-    if (Files.exists(backup)) graft.Fs.deleteRecursively(backup)
-    if (Files.exists(target))
-      Files.move(target, backup, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(backup)) graft.Fs.deleteRecursively(backup)
-  }
-
-  /** CDC-style upsert into a parquet path: keep target rows whose key has
-    * no update (anti-join), union the updates, swap via two renames
-    * (target → backup, tmp → target; plain parquet has no ACID merge — the
-    * rewrite is the no-table-format equivalent of MERGE INTO). Nothing is
-    * deleted until the new data is live; the one crash window is healed by
-    * [[recoverSwap]] on the next call. Per-call cost is O(target) — for a
-    * target that accumulates history, use [[upsertParquetPartitioned]],
-    * which rewrites only the partitions carrying updated keys. */
-  def upsertParquet(updates: DataFrame, path: String,
-      keyCols: Seq[String]): Unit = {
-    import java.nio.file.{Files, Paths}
     recoverSwap(path)
-    val spark = updates.sparkSession
     val target = Paths.get(path)
-    val merged =
-      if (Files.exists(target)) {
-        val existing = spark.read.parquet(path)
-        existing.join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(updates)
-      } else updates
-    val tmp = Paths.get(path + ".upsert-tmp")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // the write above has fully materialized — no lazy reads of `path` remain
-    swapReplace(target, tmp, ".upsert-old")
+    val tmp = suffixed(target, TmpSuffix)
+    write(tmp.toString).foreach { c =>
+      val (dst, fresh) = (target.resolve(c), tmp.resolve(c))
+      val backup = suffixed(dst, BackupSuffix)
+      if (Files.exists(dst))
+        Files.move(dst, backup, StandardCopyOption.ATOMIC_MOVE)
+      if (Files.isDirectory(fresh))
+        Files.move(fresh, dst, StandardCopyOption.ATOMIC_MOVE)
+      graft.Fs.deleteRecursively(backup)
+    }
+    graft.Fs.deleteRecursively(tmp)
   }
 
-  /** Partition-scoped upsert — the at-scale variant of [[upsertParquet]]
-    * for a target partitioned by `partitionCol` (the
-    * [[writeDatePartitioned]] layout): only partition directories that
-    * carry updated keys are rewritten, so per-call cost is O(affected
-    * partitions) and stays constant as history accumulates. Untouched
-    * partition directories keep their files byte-for-byte (asserted in
-    * WarehouseSpec). Each affected directory is replaced with the same
-    * backup-then-swap as the full variant.
+  private def suffixed(p: java.nio.file.Path, suffix: String) =
+    p.resolveSibling(p.getFileName.toString + suffix)
+
+  private def listDir(p: java.nio.file.Path): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val ls = java.nio.file.Files.list(p)
+    try ls.iterator().asScala.toList finally ls.close()
+  }
+
+  /** Partition-scoped upsert (CDC-style MERGE INTO without a table format)
+    * into a target partitioned by `partitionCol` (the
+    * [[writeDatePartitioned]] layout): in each partition that carries an
+    * updated key, keep the target rows whose key has no update
+    * (anti-join) and union the updates. Only those partition dirs are
+    * rewritten ([[rewrite]]), so per-call cost is O(affected partitions)
+    * and stays constant as history accumulates; untouched partition dirs
+    * keep their files byte-for-byte (asserted in WarehouseSpec). The first
+    * call creates the target.
     *
     * Contract: `updates` carries `partitionCol` (same type as the target's
     * inferred partition column), and keys are PARTITION-STABLE — a key's
     * partition value never changes across versions (e.g. a date derived
     * from the row's immutable event time). A key that migrated partitions
     * would leave its old row alive in an unaffected directory; detecting
-    * that requires the full-target pass this variant exists to avoid. */
+    * that requires the full-target pass this function exists to avoid. */
   def upsertParquetPartitioned(updates: DataFrame, path: String,
       keyCols: Seq[String], partitionCol: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     require(updates.columns.contains(partitionCol),
       s"updates must carry the partition column '$partitionCol'")
-    recoverSwap(path)
-    val spark = updates.sparkSession
-    val target = Paths.get(path)
-    // heal partition-level crash leftovers BEFORE the target is read —
-    // the read below materializes at the tmp write, long before the
-    // per-partition swap loop's own recoverSwap would run
-    recoverPartitionSwaps(target)
-    if (!Files.exists(target)) {
-      updates.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCol).parquet(path)
-      return
+    rewrite(path) { tmp =>
+      def writeTmp(rows: DataFrame): Unit =
+        rows.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+          .parquet(tmp)
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
+        writeTmp(updates)
+        Seq("")
+      } else {
+        // affected partition values: bounded by the update batch's span,
+        // never by target history
+        val affected = updates.select(partitionCol).distinct().collect()
+          .map(_.get(0)).toIndexedSeq
+        if (affected.isEmpty) Nil
+        else {
+          writeTmp(updates.sparkSession.read.parquet(path)
+            .filter(col(partitionCol).isin(affected: _*))
+            .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
+            .unionByName(updates))
+          // swap exactly the partition dirs the merged write produced;
+          // Spark formatted the k=v names, so they match the target's
+          listDir(java.nio.file.Paths.get(tmp)).map(_.getFileName.toString)
+            .filter(_.startsWith(partitionCol + "="))
+        }
+      }
     }
-    // affected partition values: bounded by the update batch's span,
-    // never by target history
-    val affected = updates.select(partitionCol).distinct().collect()
-      .map(_.get(0)).toIndexedSeq
-    if (affected.isEmpty) return
-    val existing = spark.read.parquet(path)
-      .filter(col(partitionCol).isin(affected: _*))
-    val merged = existing
-      .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .unionByName(updates)
-    val tmp = Paths.get(path + ".upsert-tmp")
-    merged.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol).parquet(tmp.toString)
-    // swap exactly the partition dirs the merged write produced; Spark
-    // formatted the k=v names, so they match the target's layout
-    val tmpDirs = {
-      val ls = Files.list(tmp)
-      try ls.iterator().asScala.toList.filter(p =>
-        Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(partitionCol + "="))
-      finally ls.close()
-    }
-    tmpDirs.foreach { d =>
-      val t = target.resolve(d.getFileName.toString)
-      recoverSwap(t.toString)
-      swapReplace(t, d, ".upsert-old")
-    }
-    graft.Fs.deleteRecursively(tmp)
   }
 
   /** Keyed erasure with partition-pruned rewrite — the right-to-be-forgotten
@@ -683,11 +645,9 @@ object Sinks {
     * is O(affected partitions), never O(table): at 100 TB an erasure batch
     * of a few hundred users touches a few hundred bucket directories and
     * the other ~all of the table keeps its files byte-for-byte (asserted in
-    * WarehouseSpec). A partition whose rows are ALL erased is deleted
-    * outright (the merged write produces no directory for it — the swap
-    * loop must not leave the stale one alive). Each affected directory is
-    * replaced with the same backup-then-swap as the upsert path, healed by
-    * [[recoverSwap]]/partition recovery on the next call.
+    * MaintenanceSpec). A partition whose rows are ALL erased is deleted
+    * outright: the merged write produces no directory for it, and
+    * [[rewrite]] deletes a listed child the write did not produce.
     *
     * NULL keys are KEPT: a row with no key cannot match an erasure request
     * (`!coalesce(isin, false)` — the fail-closed gate discipline, inverted:
@@ -697,144 +657,66 @@ object Sinks {
   def eraseKeysPartitioned(spark: org.apache.spark.sql.SparkSession,
       path: String, keyCol: String, keys: Seq[Long], partitionCol: String,
       partitionOf: Long => Long): Unit = {
-    import java.nio.file.{Files, Paths}
     if (keys.isEmpty) return
     require(keys.size <= 100000,
       s"${keys.size} erasure keys: driver-side key lists are for bounded " +
         "request batches; use an anti-join rewrite for corpus-sized lists")
-    recoverSwap(path)
-    val target = Paths.get(path)
-    require(Files.isDirectory(target), s"erasure target missing: $path")
-    recoverPartitionSwaps(target)
-    val affected = keys.map(partitionOf).distinct.sorted
-    val kept = spark.read.parquet(path)
-      .filter(col(partitionCol).isin(affected.map(_.asInstanceOf[Any]): _*))
-      .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
-    val tmp = Paths.get(path + ".upsert-tmp")
-    kept.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol).parquet(tmp.toString)
-    affected.foreach { v =>
-      val dirName = s"$partitionCol=$v"
-      val t = target.resolve(dirName)
-      val src = tmp.resolve(dirName)
-      recoverSwap(t.toString)
-      if (Files.isDirectory(src)) swapReplace(t, src, ".upsert-old")
-      else if (Files.isDirectory(t)) graft.Fs.deleteRecursively(t)
+    rewrite(path) { tmp =>
+      require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)),
+        s"erasure target missing: $path")
+      val affected = keys.map(partitionOf).distinct.sorted
+      spark.read.parquet(path)
+        .filter(col(partitionCol).isin(affected.map(_.asInstanceOf[Any]): _*))
+        .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCol).parquet(tmp)
+      affected.map(v => s"$partitionCol=$v")
     }
-    graft.Fs.deleteRecursively(tmp)
   }
 
-  /** Small-file compaction: rewrite a parquet path into files of
-    * ~`targetBytes` each (streaming appends and per-batch writes accumulate
-    * tiny files whose per-file open/footer cost eventually dominates scans
-    * — the standard operational chore at 100 TB). File count follows the
-    * CURRENT on-disk size; the rewrite reuses [[upsertParquet]]'s
-    * backup-then-swap so a crash never leaves the target as the sole
-    * deleted copy.
+  /** Small-file compaction: rewrite each LEAF dir of a parquet path (a
+    * `k=v` dir with no `k=v` children; a path with none is its own single
+    * leaf) into files of ~`targetBytes` each. Streaming appends and
+    * per-batch writes accumulate tiny files whose per-file open/footer cost
+    * eventually dominates scans — the standard operational chore at
+    * 100 TB. File count follows the leaf's CURRENT on-disk size, and a leaf
+    * already at its target file count is SKIPPED untouched (files and
+    * mtimes unchanged — asserted in WarehouseSpec), so re-running after a
+    * streaming append only pays for the leaves that fragmented. Each
+    * rewrite shuffle is bounded by one leaf's volume, not the table's.
     *
-    * Hive-partitioned layouts (`k=v/` directories, e.g.
-    * [[writeDatePartitioned]] output) are PRESERVED: the inferred
-    * partition columns are re-applied with `partitionBy` on the rewrite.
-    * Flattening them instead would be a correctness hazard — a later
-    * dynamic-partition-overwrite refresh only replaces matching partition
-    * directories, so rows baked into flat files would survive as
-    * duplicates. Per-call cost is O(path); at scale run
-    * [[compactPartitions]], which rewrites one partition directory at a
-    * time and skips already-compact ones. Crash window healed by
-    * [[recoverSwap]] on the next call. */
+    * Hive-partitioned layouts are PRESERVED: a leaf holds plain parquet
+    * files (partition values live in the dir names), so its rewrite needs
+    * no partitionBy and cannot flatten the layout. Flattening would be a
+    * correctness hazard — a later dynamic-partition-overwrite refresh only
+    * replaces matching partition directories, so rows baked into flat
+    * files would survive as duplicates. The rewritten leaves swap in
+    * through [[rewrite]]. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    recoverSwap(path)
-    val dir = Paths.get(path)
-    // a leftover "k=v.upsert-old" child would satisfy the k=v descent
-    // below and be read as a bogus partition — heal first
-    recoverPartitionSwaps(dir)
-    val onDisk = parquetBytes(dir)
-    // detect partition levels: descend while a child dir is named k=v
-    val partitionCols = {
-      val keys = Seq.newBuilder[String]
-      var cur = dir
-      var descend = true
-      while (descend) {
-        val ls = Files.list(cur)
-        val kv =
-          try ls.iterator().asScala.find(p =>
-            Files.isDirectory(p) && p.getFileName.toString.contains("="))
-          finally ls.close()
-        kv match {
-          case Some(p) =>
-            keys += p.getFileName.toString.takeWhile(_ != '=')
-            cur = p
-          case None => descend = false
+      targetBytes: Long = 128L << 20): Unit =
+    rewrite(path) { tmp =>
+      import java.nio.file.{Files, Path, Paths}
+      val root = Paths.get(path)
+      def leaves(p: Path): List[Path] = {
+        val kv = listDir(p).filter(c =>
+          Files.isDirectory(c) && c.getFileName.toString.contains("="))
+        if (kv.isEmpty) List(p) else kv.flatMap(leaves)
+      }
+      leaves(root).flatMap { d =>
+        val files =
+          listDir(d).filter(_.getFileName.toString.endsWith(".parquet"))
+        val want = math.max(1L,
+          (files.map(Files.size(_)).sum + targetBytes - 1) / targetBytes).toInt
+        if (files.length <= want) None
+        else {
+          val leaf = root.relativize(d).toString
+          spark.read.parquet(d.toString).repartition(want)
+            .write.mode(SaveMode.Overwrite)
+            .parquet(Paths.get(tmp).resolve(leaf).toString)
+          Some(leaf)
         }
       }
-      keys.result()
     }
-    val nFiles = targetFileCount(onDisk, targetBytes)
-    val tmp = Paths.get(path + ".compact-tmp")
-    val writer = spark.read.parquet(path).repartition(nFiles)
-      .write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(tmp.toString)
-    swapReplace(dir, tmp, ".compact-old")
-  }
-
-  /** Per-partition-directory compaction — the at-scale driver for
-    * [[compact]] over a Hive-partitioned layout: each LEAF `k=v` directory
-    * is compacted independently, so the rewrite shuffle is bounded by one
-    * partition's volume (not the table's), partitions can be processed
-    * incrementally across calls, and a directory already at its target
-    * file count is SKIPPED untouched (files and mtimes unchanged —
-    * asserted in WarehouseSpec; re-running after a streaming append only
-    * pays for the partitions that actually fragmented). Leaf directories
-    * hold plain parquet files (partition values live in the dir name), so
-    * the per-directory rewrite needs no partitionBy and cannot flatten the
-    * layout. Falls back to [[compact]] when the path has no `k=v`
-    * children. */
-  def compactPartitions(spark: org.apache.spark.sql.SparkSession,
-      path: String, targetBytes: Long = 128L << 20): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    def children(p: Path): List[Path] = {
-      val ls = Files.list(p)
-      try ls.iterator().asScala.toList finally ls.close()
-    }
-    // leaf partition dirs: k=v-named dirs with no k=v children (backup /
-    // tmp leftovers are healed above and excluded here — a
-    // "k=v.upsert-old" name contains '=' but is NOT a partition)
-    def leaves(p: Path): List[Path] = {
-      val kv = children(p).filter { c =>
-        val n = c.getFileName.toString
-        Files.isDirectory(c) && n.contains("=") &&
-          !n.contains(".upsert-") && !n.contains(".compact-")
-      }
-      if (kv.isEmpty) Nil
-      else kv.flatMap(c => leaves(c) match {
-        case Nil => List(c)
-        case deeper => deeper
-      })
-    }
-    recoverPartitionSwaps(Paths.get(path))
-    val dirs = leaves(Paths.get(path))
-    if (dirs.isEmpty) { compact(spark, path, targetBytes); return }
-    dirs.foreach { d =>
-      recoverSwap(d.toString)
-      val files = children(d)
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      val want = targetFileCount(files.map(Files.size(_)).sum, targetBytes)
-      if (files.length > want) {
-        val tmp = Paths.get(d.toString + ".compact-tmp")
-        spark.read.parquet(d.toString).repartition(want)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapReplace(d, tmp, ".compact-old")
-      }
-    }
-  }
-
-  private def targetFileCount(bytes: Long, targetBytes: Long): Int =
-    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
 
   /** OBSERVED on-disk parquet row width of `path`: (bytes, rows) summed
     * over up to `sampleFiles` part files (deterministic path order), rows
@@ -906,16 +788,6 @@ object Sinks {
         graft.Tuning.maxRecordsPerFile(bytes, rows, targetFileBytes)
       case None => 0L
     }
-
-  private def parquetBytes(dir: java.nio.file.Path): Long = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(dir)
-    try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") &&
-        java.nio.file.Files.isRegularFile(p))
-      .map(java.nio.file.Files.size).sum
-    finally walk.close()
-  }
 
   /** Range-partitioned, internally sorted layout: `repartitionByRange` +
     * `sortWithinPartitions` writes files with DISJOINT key ranges, each

@@ -39,25 +39,66 @@ class MaintenanceSpec extends SparkSpec {
       MaterializedView.PartialType)
   }
 
+  private def mvDelta(v: Double) = Seq(("a", v)).toDF("k", "v")
+    .groupBy("k").agg(sum(col("v").cast(Exprs.Money)).as("partial"))
+
+  private def mvTotal(mv: String): Double = spark.read.parquet(mv)
+    .select(col("partial").cast("double")).as[Double].collect().sum
+
   test("mergeSumsOnce makes a replayed micro-batch a no-op (ledger rides " +
       "the view's atomic swap)") {
     val out = tempDir("graft-mvonce").toString + "/mv"
-    def delta(v: Double) = Seq(("a", v)).toDF("k", "v").groupBy("k")
-      .agg(sum(col("v").cast(Exprs.Money)).as("partial"))
-    def total(): Double = spark.read.parquet(out)
-      .select(col("partial").cast("double")).as[Double].collect().sum
-    assert(MaterializedView.mergeSumsOnce(delta(1.0), out, 0L,
+    assert(MaterializedView.mergeSumsOnce(mvDelta(1.0), out, 0L,
       Seq("k"), Seq("partial")))
-    assert(MaterializedView.mergeSumsOnce(delta(2.0), out, 1L,
+    assert(MaterializedView.mergeSumsOnce(mvDelta(2.0), out, 1L,
       Seq("k"), Seq("partial")))
-    assert(total() == 3.0)
+    assert(mvTotal(out) == 3.0)
     // a foreachBatch restart replays batch 1: must not double-count
-    assert(!MaterializedView.mergeSumsOnce(delta(2.0), out, 1L,
+    assert(!MaterializedView.mergeSumsOnce(mvDelta(2.0), out, 1L,
       Seq("k"), Seq("partial")))
-    assert(total() == 3.0)
+    assert(mvTotal(out) == 3.0)
     assert(MaterializedView.appliedBatches(out) == Set(0L, 1L))
     // the ledger is invisible to parquet readers (underscore-prefixed)
     assert(spark.read.parquet(out).columns.toSet == Set("k", "partial"))
+  }
+
+  test("mergeSumsOnce restores a view that crashed between its swap's " +
+      "renames, then folds the batch once") {
+    val out = tempDir("graft-mvcrash").toString + "/mv"
+    assert(MaterializedView.mergeSumsOnce(mvDelta(1.0), out, 0L,
+      Seq("k"), Seq("partial")))
+    // the crash window between the renames: the view lives only under its
+    // backup name
+    Files.move(Paths.get(out), Paths.get(out + Sinks.BackupSuffix))
+    assert(MaterializedView.mergeSumsOnce(mvDelta(2.0), out, 1L,
+      Seq("k"), Seq("partial")))
+    assert(!Files.exists(Paths.get(out + Sinks.BackupSuffix)))
+    assert(mvTotal(out) == 3.0)
+    // the ledger lists each batch once
+    import scala.jdk.CollectionConverters._
+    assert(Files.readAllLines(Paths.get(out, "_applied_batches")).asScala ==
+      Seq("0", "1"))
+    assert(!MaterializedView.mergeSumsOnce(mvDelta(2.0), out, 1L,
+      Seq("k"), Seq("partial")))
+    assert(mvTotal(out) == 3.0)
+  }
+
+  test("mergeSumsOnce deletes a stale backup beside a live view and keeps " +
+      "the live view's data") {
+    val root = tempDir("graft-mvstale").toString
+    val out = root + "/mv"
+    assert(MaterializedView.mergeSumsOnce(mvDelta(1.0), out, 0L,
+      Seq("k"), Seq("partial")))
+    // the crash window after the fresh view went live: a backup (here with
+    // other data) is left beside it
+    MaterializedView.mergeSums(mvDelta(100.0), root + "/other",
+      Seq("k"), Seq("partial"))
+    Files.move(Paths.get(root, "other"), Paths.get(out + Sinks.BackupSuffix))
+    assert(MaterializedView.mergeSumsOnce(mvDelta(2.0), out, 1L,
+      Seq("k"), Seq("partial")))
+    assert(!Files.exists(Paths.get(out + Sinks.BackupSuffix)))
+    assert(mvTotal(out) == 3.0)
+    assert(MaterializedView.appliedBatches(out) == Set(0L, 1L))
   }
 
   test("eraseKeysPartitioned rewrites only affected buckets, deletes " +

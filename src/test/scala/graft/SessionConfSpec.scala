@@ -9,8 +9,20 @@ import scala.jdk.CollectionConverters._
 
 /** Session conf has one owner, [[GraftSession]]: query code never writes
   * the conf of the session it was given, so queries sharing a session
-  * cannot see each other's settings. */
+  * cannot see each other's settings. The source scans below also pin the
+  * one owner of the maintenance sinks' rewrite suffixes. */
 class SessionConfSpec extends SparkSpec {
+  /** The Scala files under `src/main`. */
+  private def mainSources(): Seq[Path] =
+    Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+
+  /** `file:line: text` of each line of `p` that `pattern` matches. */
+  private def hits(pattern: scala.util.matching.Regex)(p: Path) =
+    Files.readAllLines(p).asScala.zipWithIndex.collect {
+      case (line, i) if pattern.findFirstIn(line).isDefined =>
+        s"$p:${i + 1}: ${line.trim}"
+    }
 
   test("a graph loop, a stream and a batch entry run concurrently on one " +
     "session: serial rows, and the session's conf never changes") {
@@ -56,20 +68,31 @@ class SessionConfSpec extends SparkSpec {
   }
 
   test("no src/main file but GraftSession.scala writes session conf") {
-    val files = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val files = mainSources()
     assert(files.exists(_.endsWith("graft/GraftSession.scala")),
       s"scan of src/main found no GraftSession.scala (${files.size} files)")
-    val write = """\.conf\.(set|unset)\(""".r
-    def hits(p: Path) = Files.readAllLines(p).asScala.zipWithIndex.collect {
-      case (line, i) if write.findFirstIn(line).isDefined =>
-        s"$p:${i + 1}: ${line.trim}"
-    }
     val offenders = files
       .filterNot(_.getFileName.toString == "GraftSession.scala")
-      .flatMap(hits)
+      .flatMap(hits("""\.conf\.(set|unset)\(""".r))
     assert(offenders.isEmpty,
       "session conf is written outside GraftSession:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("the rewrite's tmp/backup suffix pair is spelled only in Sinks.scala") {
+    // a string literal naming a sibling dir suffix such as ".x-tmp"
+    val suffix = """"\.[A-Za-z]+-(tmp|old)"""".r
+    val (sinks, others) =
+      mainSources().partition(_.endsWith("graft/sink/Sinks.scala"))
+    assert(sinks.size == 1, "scan of src/main found no sink/Sinks.scala")
+    // exactly one pair: one tmp suffix and one backup suffix
+    val spelled = Files.readAllLines(sinks.head).asScala
+      .flatMap(suffix.findAllIn).toSet
+    assert(spelled.toSeq.map(_.takeRight(5)).sorted == Seq("-old\"", "-tmp\""),
+      s"Sinks.scala spells $spelled")
+    val offenders = others.flatMap(hits(suffix))
+    assert(offenders.isEmpty,
+      "rewrite suffixes are spelled outside Sinks.scala:\n" +
         offenders.mkString("\n"))
   }
 }

@@ -156,13 +156,27 @@ class StreamingSpec extends SparkSpec {
     } finally Tuning.rocksDbStateStore.keys.foreach(spark.conf.unset)
   }
 
-  test("shufflePartitions follows data volume with a cluster-width floor") {
-    assert(Tuning.shufflePartitions(0L) == 64)
-    // 100 TB / 256 MB = 409600 partitions
-    assert(Tuning.shufflePartitions(100L << 40) == 409600)
-    // floor dominates when data is small relative to the cluster
-    assert(Tuning.scaleConf(1L << 30, totalCores = 4000)(
-      "spark.sql.shuffle.partitions") == "8000")
+  test("the append-finalized harness leaves no sentinel build dir behind") {
+    // a fresh copy of the events file: its sf dir misses the per-JVM
+    // sentinel memo, so this run builds the sentinel
+    val dir = tempDir("graft-sentspec")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf("sf0.001"), "events.parquet"),
+      dir.resolve("events.parquet"))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def builds() = tmp.list().filter(_.startsWith("graft-sentcache")).toSet
+    val before = builds()
+    val revenue = StreamingQueries
+      .runAppendFinalized(spark, dir.toString, "t_sent_build")(
+        StreamingQueries.windowedRevenue(_, delay = "0 seconds"))
+    assert(revenue.count() > 0)
+    // a suite JVM running beside this one may hold its own build dir for
+    // a moment; a leaked dir never goes away
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Millis, Seconds, Span}
+    eventually(timeout(Span(30, Seconds)), interval(Span(200, Millis))) {
+      assert((builds() -- before).isEmpty)
+    }
   }
 
   test("windowed revenue with watermark finalizes closed windows and drops late rows") {

@@ -525,18 +525,6 @@ class WarehouseSpec extends SparkSpec {
     assert(e.getMessage.contains("event_date"))
   }
 
-  test("upsertParquet replaces matching keys and appends new ones") {
-    val path = tempDir("graft-upsert").toString + "/t"
-    Sinks.upsertParquet(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, Seq("k"))
-    Sinks.upsertParquet(Seq((2L, "B"), (3L, "c")).toDF("k", "v"), path, Seq("k"))
-    val got = spark.read.parquet(path).as[(Long, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(got == Seq((1L, "a"), (2L, "B"), (3L, "c")))
-    // idempotent re-apply
-    Sinks.upsertParquet(Seq((3L, "c")).toDF("k", "v"), path, Seq("k"))
-    assert(spark.read.parquet(path).count() == 3)
-  }
-
   private def dirSnapshot(dir: String): Map[String, Long] = {
     val d = new java.io.File(dir)
     assert(d.isDirectory, s"missing partition dir $dir")
@@ -553,18 +541,23 @@ class WarehouseSpec extends SparkSpec {
     val before2 = dirSnapshot(s"$path/day=d2")
     val before3 = dirSnapshot(s"$path/day=d3")
     // update one key in d1, insert a new one there; d2/d3 untouched
-    Sinks.upsertParquetPartitioned(
+    def update(): Unit = Sinks.upsertParquetPartitioned(
       Seq((2L, "d1", "B"), (5L, "d1", "e")).toDF("k", "day", "v"),
       path, Seq("k"), "day")
-    val got = spark.read.parquet(path).select("k", "day", "v")
-      .as[(Long, String, String)].collect().toSet
-    assert(got == Set((1L, "d1", "a"), (2L, "d1", "B"), (5L, "d1", "e"),
-      (3L, "d2", "c"), (4L, "d3", "d")))
+    def rows() = spark.read.parquet(path).select("k", "day", "v")
+      .as[(Long, String, String)].collect().toSeq
+    update()
+    val want = Set((1L, "d1", "a"), (2L, "d1", "B"), (5L, "d1", "e"),
+      (3L, "d2", "c"), (4L, "d3", "d"))
+    assert(rows().toSet == want)
     // untouched partition directories keep their exact files and mtimes —
     // the O(affected partitions) claim, not just O(correct result)
     assert(dirSnapshot(s"$path/day=d2") == before2)
     assert(dirSnapshot(s"$path/day=d3") == before3)
-    assert(!new java.io.File(path + ".upsert-tmp").exists())
+    assert(!new java.io.File(path + Sinks.TmpSuffix).exists())
+    // idempotent re-apply: the same rows, no duplicates
+    update()
+    assert(rows().sorted == want.toSeq.sorted)
   }
 
   test("partition-level crash leftovers are healed before the target is read") {
@@ -577,10 +570,10 @@ class WarehouseSpec extends SparkSpec {
     // simulate a crash BETWEEN the swap's two renames on d2: the real dir
     // is gone, only the backup exists — and the next batch does NOT touch
     // d2, so only up-front healing can restore it
-    F.move(Paths.get(s"$path/day=d2"), Paths.get(s"$path/day=d2.upsert-old"),
-      StandardCopyOption.ATOMIC_MOVE)
+    val d2backup = Paths.get(s"$path/day=d2" + Sinks.BackupSuffix)
+    F.move(Paths.get(s"$path/day=d2"), d2backup, StandardCopyOption.ATOMIC_MOVE)
     // and a crash AFTER d3's new data went live but before backup cleanup
-    val d3backup = Paths.get(s"$path/day=d3.compact-old")
+    val d3backup = Paths.get(s"$path/day=d3" + Sinks.BackupSuffix)
     F.createDirectory(d3backup)
     Sinks.upsertParquetPartitioned(
       Seq((1L, "d1", "A")).toDF("k", "day", "v"), path, Seq("k"), "day")
@@ -589,23 +582,22 @@ class WarehouseSpec extends SparkSpec {
     assert(got == Set((1L, "d1", "A"), (2L, "d2", "b"), (3L, "d3", "c")),
       s"got $got")
     assert(F.exists(Paths.get(s"$path/day=d2")))
-    assert(!F.exists(Paths.get(s"$path/day=d2.upsert-old")))
+    assert(!F.exists(d2backup))
     assert(!F.exists(d3backup))
-    // compactPartitions heals too and never treats a backup as a leaf
-    F.move(Paths.get(s"$path/day=d2"), Paths.get(s"$path/day=d2.compact-old"),
-      StandardCopyOption.ATOMIC_MOVE)
-    Sinks.compactPartitions(spark, path)
+    // compact heals too and never treats a backup as a leaf
+    F.move(Paths.get(s"$path/day=d2"), d2backup, StandardCopyOption.ATOMIC_MOVE)
+    Sinks.compact(spark, path)
     val after = spark.read.parquet(path).select("k", "day", "v")
       .as[(Long, String, String)].collect().toSet
     assert(after == got && F.exists(Paths.get(s"$path/day=d2")))
   }
 
-  test("compactPartitions compacts fragmented dirs and skips compact ones") {
+  test("compact compacts fragmented partition dirs and skips compact ones") {
     val path = tempDir("graft-compactpp").toString + "/t"
     val ev = Sources.events(spark, sf("sf0.001"))
     Sinks.writeDatePartitioned(ev.repartition(4), path)
     val total = ev.count()
-    Sinks.compactPartitions(spark, path, targetBytes = 1L << 30)
+    Sinks.compact(spark, path, targetBytes = 1L << 30)
     val days = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
       .map(_.getName).sorted
@@ -619,7 +611,7 @@ class WarehouseSpec extends SparkSpec {
     val extra = spark.read.parquet(s"$path/$fragmented")
     extra.coalesce(1).write.mode("append").parquet(s"$path/$fragmented")
     val rows = spark.read.parquet(path).count()
-    Sinks.compactPartitions(spark, path, targetBytes = 1L << 30)
+    Sinks.compact(spark, path, targetBytes = 1L << 30)
     assert(dirSnapshot(s"$path/$fragmented").size == 1,
       "fragmented partition must be rewritten")
     // already-compact partitions are SKIPPED byte-for-byte
@@ -633,10 +625,10 @@ class WarehouseSpec extends SparkSpec {
     Seq((1L, "a")).toDF("k", "v").write.parquet(path)
     // simulate a crash between the two moves: data only under the backup
     java.nio.file.Files.move(java.nio.file.Paths.get(path),
-      java.nio.file.Paths.get(path + ".compact-old"))
+      java.nio.file.Paths.get(path + Sinks.BackupSuffix))
     Sinks.recoverSwap(path)
     assert(spark.read.parquet(path).count() == 1)
-    assert(!new java.io.File(path + ".compact-old").exists())
+    assert(!new java.io.File(path + Sinks.BackupSuffix).exists())
   }
 
   test("zorderKey interleaves bits exactly (scala reference parity)") {
@@ -735,8 +727,8 @@ class WarehouseSpec extends SparkSpec {
     Sinks.compact(spark, path, targetBytes = 1L << 30) // everything fits one
     assert(parquetFiles() == 1, s"expected 1 file, got ${parquetFiles()}")
     assert(spark.read.parquet(path).count() == ev.count())
-    assert(!new java.io.File(path + ".compact-old").exists())
-    assert(!new java.io.File(path + ".compact-tmp").exists())
+    assert(!new java.io.File(path + Sinks.BackupSuffix).exists())
+    assert(!new java.io.File(path + Sinks.TmpSuffix).exists())
   }
 
   test("compact preserves Hive-partitioned layouts") {
