@@ -2,8 +2,10 @@ package graft
 
 import scala.util.control.NonFatal
 
-/** Latched N-way pure-CPU host probe, shared by [[Bench]] and
-  * [[Scaling]] (r16: the Scaling single-section experiments measured
+/** Latched N-way pure-CPU host probe, shared by [[Bench]] and the
+  * scaling harness (`sbt "scaling/runMain graft.Scaling …"`, whose
+  * `scaling/records` carry the probes as `host_probe` cells; r16: the
+  * Scaling single-section experiments measured
   * wall swings of 2–3× between byte-identical runs — route-crossover
   * conclusions must carry the run's own capacity evidence, the same
   * requirement the r15 verdict imposed on the bench record).

@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one metering mechanism of the engine: a task-metrics listener on
   * the session's SparkContext plus a delta API over it. Bench's per-query
-  * byte/cpu maps, Scaling's curves and the specs' job/read budgets all
+  * byte/cpu maps, the scaling harness's curves (`scaling/`, records
+  * under `scaling/records`) and the specs' job/read budgets all
   * read [[Meter.Usage]] deltas from [[run]].
   *
   * Counters are cumulative since registration; a reading is the

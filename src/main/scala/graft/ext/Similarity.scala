@@ -710,9 +710,10 @@ object Similarity {
     // the probe only runs when the plan estimate is already under the
     // cap). Derived frames have no footer floor and keep Catalyst's
     // estimate, whose errors skew large — the safe side.
-    // `broadcastCapBytes` is overridable so the Scaling harness can
-    // measure the ABOVE-cap equi-join shape on a below-cap corpus
-    // (pass 0).
+    // `broadcastCapBytes` is overridable so the scaling harness
+    // (`sbt "scaling/runMain graft.Scaling … dim768"`, record
+    // `scaling/records/dim768`) can measure the ABOVE-cap equi-join
+    // shape on a below-cap corpus (pass 0).
     val planBytes = embeddings.queryExecution.optimizedPlan.stats.sizeInBytes
     val dim = centroids.headOption.map(_.length).getOrElse(0)
     val rowFloor =

@@ -144,13 +144,14 @@ object Sources {
       .createOrReplaceTempView("view_kafka_ecommerce_stream")
   }
 
-  /** Parses a Kafka-shaped frame (`key: string, value: string`) back into
-    * typed events — the inverse of [[graft.sink.Sinks.kafkaEnvelope]];
+  /** Parses the JSON envelope (`kafka_value: string`) back into typed
+    * fields — the inverse of [[graft.sink.Sinks.kafkaEnvelope]];
     * stands in for `readStream.format("kafka")` + `from_json`
     * (`reference:README.md:214`; no kafka connector jar ships in this
     * environment, so the envelope codec is exercised over files/memory). */
   def fromKafkaEnvelope(envelope: DataFrame, eventSchema: StructType): DataFrame =
-    envelope.select(from_json(col("value"), eventSchema).as("e")).select("e.*")
+    envelope.select(from_json(col("kafka_value"), eventSchema).as("e"))
+      .select("e.*")
 
   /** Decodes the AVRO envelope (`kafka_value: binary`) back to typed fields
     * — the inverse of [[graft.sink.Sinks.avroEnvelope]] (SURVEY S7); stands

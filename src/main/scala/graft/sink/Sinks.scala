@@ -37,17 +37,6 @@ object Sinks {
         lit("}")).as("kafka_value"))
       .orderBy("event_id")
 
-  /** Idiomatic variant of the envelope (`to_json(struct(...))`) — the form
-    * you'd ship to a real broker; ISO-millis timestamp formatting parity
-    * with `producer.py:36`. */
-  def jsonEnvelope(events: DataFrame): DataFrame =
-    events.select(
-      col("user_id").cast(StringType).as("key"),
-      to_json(struct(
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSS").as("event_time"),
-        col("event_id"), col("event_type"), col("user_id"),
-        col("value").as("price"), col("props"))).as("value"))
-
   /** AVRO envelope for the aggregated/processed topic (SURVEY S7; the
     * reference's PROCESSED topic is AVRO, `reference:README.md:39,216`):
     * Kafka-shaped (key, binary value) frame with the value in real Avro

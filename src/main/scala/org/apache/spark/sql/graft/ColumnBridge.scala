@@ -42,7 +42,8 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Unified-memory-manager storage gauge (one JVM under local[*]) —
-    * the Scaling harness prints it per measurement so lingering-block
+    * the scaling harness (`sbt "scaling/runMain graft.Scaling …"`)
+    * prints it per measurement so lingering-block
     * regressions are visible as numbers, not 4× wall-time mysteries.
     * A `private[spark]` internal, but a simple stable gauge. */
   def storageMemoryUsedBytes: Long =

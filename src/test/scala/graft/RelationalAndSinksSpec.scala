@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField,
+  StructType}
 
 import graft.ext.Multimodal
 import graft.ingest.Sources
@@ -258,19 +260,18 @@ class RelationalAndSinksSpec extends SparkSpec {
 
   test("kafka envelope round-trips through from_json") {
     val events = Sources.events(spark, sf("sf0.001"))
-    val env = Sinks.jsonEnvelope(events)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("price",
-        org.apache.spark.sql.types.DoubleType)))
+    val env = Sinks.kafkaEnvelope(events)
+    val price = DecimalType(18, 2)
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("ts_us", LongType), StructField("event_type", StringType),
+      StructField("price", price)))
     val back = Sources.fromKafkaEnvelope(env, schema)
+    assert(back.columns.toSeq == Seq("event_id", "ts_us", "event_type", "price"))
     assert(back.count() == events.count())
-    val sumBack = back.agg(sum("price")).as[Double].head()
-    val sumOrig = events.agg(sum("value")).as[Double].head()
-    assert(math.abs(sumBack - sumOrig) < 1e-6)
+    val sumBack = back.agg(sum("price")).as[java.math.BigDecimal].head()
+    val sumOrig = events.agg(sum(col("value").cast(price)))
+      .as[java.math.BigDecimal].head()
+    assert(sumBack.compareTo(sumOrig) == 0, s"$sumBack != $sumOrig")
   }
 
   test("avro envelope round-trips byte-deterministically") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.sink.ArtifactStore
 
 /** Cross-sfDir behavior of the [[SparkEntry]] surface itself — the pieces
@@ -74,30 +76,41 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   /** The registered entries without a DuckDB mirror, each checked by its
-    * own spec instead of the hash gate. */
-  private val NoOracle = Map(
-    "q_compression_quality" -> "DEFLATE ratios are JVM-deterministic but not portable SQL",
-    "q_dau_approx" -> "HyperLogLog++ estimate",
-    "q_dup_clusters_lsh" -> "LSH banding recall is hash-dependent",
-    "q_embedding_neardups" -> "sign-LSH buckets are hash-dependent",
-    "q_ivf_knn" -> "probed cells depend on k-means training",
-    "q_knn_int8" -> "int8 quantization rounding is engine-specific",
-    "q_lsh_knn" -> "sign-LSH candidates are hash-dependent",
-    "q_minhash_incremental" -> "minhash-estimated jaccard is hash-dependent",
-    "q_minhash_neardups" -> "minhash banding recall is hash-dependent",
-    "q_pq_knn" -> "codebook reconstruction error is training-dependent",
-    "q_price_quantiles_sketch" -> "approx_percentile sketch estimate",
-    "q_profile_docs_approx" -> "HyperLogLog distinct counts",
-    "q_rolling_dau_sketch" -> "HyperLogLog sketch union estimate",
-    "q_simhash_neardups" -> "simhash bands are hash-dependent",
-    "q_stream_dau_bounded" -> "watermark eviction makes re-emission batch-order-dependent")
+    * own spec instead of the hash gate. Pinned here so an entry cannot
+    * quietly lose its mirror; the reasons live in the declarations. */
+  private val NoOracleNames = Set("q_compression_quality", "q_dau_approx",
+    "q_dup_clusters_lsh", "q_embedding_neardups", "q_ivf_knn", "q_knn_int8",
+    "q_lsh_knn", "q_minhash_incremental", "q_minhash_neardups", "q_pq_knn",
+    "q_price_quantiles_sketch", "q_profile_docs_approx",
+    "q_rolling_dau_sketch", "q_simhash_neardups", "q_stream_dau_bounded")
 
   test("every registered entry has a DuckDB mirror or a stated reason it has none") {
-    val registered = SparkEntry.queries.keySet
-    val mirrored = SparkEntry.oracleSql.keySet
-    assert(mirrored.subsetOf(registered),
-      s"mirrors without an entry: ${(mirrored -- registered).toSeq.sorted}")
-    assert(registered -- mirrored == NoOracle.keySet)
+    val reasons = SparkEntry.entries.collect {
+      case (n, SparkEntry.Entry(_, SparkEntry.NoOracle(r))) => n -> r
+    }
+    assert(reasons.keySet == NoOracleNames)
+    assert(reasons.values.forall(_.trim.nonEmpty))
+    assert(SparkEntry.oracleSql.keySet ==
+      SparkEntry.queries.keySet -- NoOracleNames)
+  }
+
+  private val noFrame: (SparkSession, String) => DataFrame =
+    (s, _) => s.emptyDataFrame
+
+  test("the registry rejects a name declared twice") {
+    val e = SparkEntry.Entry(noFrame, SparkEntry.NoOracle("test"))
+    val err = intercept[IllegalArgumentException](
+      SparkEntry.registry("q_a" -> e, "q_b" -> e, "q_a" -> e))
+    assert(err.getMessage.contains("q_a") && !err.getMessage.contains("q_b"))
+  }
+
+  test("a mirror renders on each read, never while the registry is built") {
+    var renders = 0
+    val reg = SparkEntry.registry("q_a" -> SparkEntry.Entry(noFrame,
+      SparkEntry.Mirror { renders += 1; s"SELECT $renders" }))
+    assert(renders == 0)
+    val SparkEntry.Entry(_, m: SparkEntry.Mirror) = reg("q_a")
+    assert(m.sql == "SELECT 1" && m.sql == "SELECT 2")
   }
 
   test("q_funnel_conversions_tws leaves the caller's state-store conf untouched") {

@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
-"""Count the non-comment Scala lines of the main and test sources.
+"""Count the non-comment Scala lines of the engine and scaling sources.
 
 Usage: loc.py [repo root] [file ...]
 
-With no files, prints one line per tree, `src/main` and `src/test` under
-the repo root (default: the parent of this script's directory):
+With no files, prints one line per tree under the repo root (default: the
+parent of this script's directory): the engine's `src/main` and `src/test`,
+and the scaling harness's `scaling/src` (main and test), so code moved
+between them shows on both sides:
 
-  src/main  15415
-  src/test  8041
+  src/main  14211
+  src/test  8166
+  scaling/src  470
 
 With files, prints each file's count instead, then their total.
 
@@ -18,6 +21,9 @@ tracked: the line counts, and so do the block's further lines.
 """
 import os
 import sys
+
+
+TREES = ("src/main", "src/test", "scaling/src")
 
 
 def count_lines(text):
@@ -68,7 +74,7 @@ def main(argv):
             print("%s  %d" % (f, c))
         print("total  %d" % total)
     else:
-        for tree in ("src/main", "src/test"):
+        for tree in TREES:
             print("%s  %d" % (tree, count_tree(os.path.join(root, tree))))
     return 0
 

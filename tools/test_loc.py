@@ -42,7 +42,9 @@ class TreeTest(unittest.TestCase):
     def setUp(self):
         self.root = tempfile.mkdtemp(prefix="loc-test")
         for tree, body in (("src/main/scala/a", "object A\n// c\n"),
-                           ("src/test/scala/a", "/** d */\nclass T\nval t = 1\n")):
+                           ("src/test/scala/a", "/** d */\nclass T\nval t = 1\n"),
+                           ("scaling/src/main/scala/a", "object S\n"),
+                           ("scaling/src/test/scala/a", "class U\n/* x */\n")):
             os.makedirs(os.path.join(self.root, tree))
             with open(os.path.join(self.root, tree, "A.scala"), "w") as f:
                 f.write(body)
@@ -53,11 +55,20 @@ class TreeTest(unittest.TestCase):
     def tearDown(self):
         shutil.rmtree(self.root)
 
-    def test_cli_prints_both_trees(self):
+    def test_cli_prints_every_tree(self):
         out = subprocess.run([sys.executable, SCRIPT, self.root],
                              capture_output=True, text=True, check=True)
-        self.assertEqual(out.stdout.split("\n")[:2],
-                         ["src/main  1", "src/test  2"])
+        self.assertEqual(out.stdout.split("\n")[:3],
+                         ["src/main  1", "src/test  2", "scaling/src  2"])
+
+    def test_a_move_into_scaling_shows_on_both_sides(self):
+        src = os.path.join(self.root, "src/main/scala/a/A.scala")
+        os.rename(src, os.path.join(self.root,
+                                    "scaling/src/main/scala/a/Moved.scala"))
+        out = subprocess.run([sys.executable, SCRIPT, self.root],
+                             capture_output=True, text=True, check=True)
+        self.assertEqual(out.stdout.split("\n")[:3],
+                         ["src/main  0", "src/test  2", "scaling/src  3"])
 
     def test_cli_counts_named_files(self):
         out = subprocess.run(
