@@ -56,7 +56,7 @@ object Bench {
       try {
         val src = dir.resolve("src").toString
         spark.range(1).toDF("id").write.mode("overwrite").parquet(src)
-        val schema = spark.read.parquet(src).schema
+        val schema = graft.ingest.Sources.parquet(spark, src).schema
         (1 to 3).map { i =>
           val t0 = System.nanoTime()
           val q = spark.readStream.schema(schema).parquet(src)

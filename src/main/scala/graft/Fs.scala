@@ -25,6 +25,13 @@ object Fs {
   def deleteQuietly(p: String): Unit =
     deleteQuietly(java.nio.file.Paths.get(p))
 
+  /** The entries of directory `p`, in listing order. */
+  def list(p: java.nio.file.Path): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val ls = java.nio.file.Files.list(p)
+    try ls.iterator().asScala.toList finally ls.close()
+  }
+
   /** First 4 md5 bytes as 8 hex chars — the shared short-key digest
     * (artifact dir keys, warehouse lineage salts). */
   def md5Hex8(s: String): String =

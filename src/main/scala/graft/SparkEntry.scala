@@ -1859,9 +1859,11 @@ object SparkEntry {
         |      / 1000000 END AS rank_pct
         |FROM r CROSS JOIN g ORDER BY user_id""".stripMargin)),
     // schema-evolution read: two parquet generations (v1 lacks value/
-    // props) merged via mergeSchema with null back-fill — the migration
-    // every long-lived lakehouse table goes through; split determinism
-    // via event_id parity so the mirror reconstructs the merge
+    // props) read under the newest generation's schema, which v1 files
+    // back-fill with nulls — the migration every long-lived lakehouse
+    // table goes through, with the table schema declared the way a table
+    // format's catalog declares it (no per-read merge job); split
+    // determinism via event_id parity so the mirror reconstructs the merge
     "q_schema_evolution" -> Entry((s, dir) => {
       val ev = Sources.events(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-schemev")
@@ -1873,7 +1875,7 @@ object SparkEntry {
           .select(col("event_id"), col("user_id"), col("value"),
             col("props"))
           .write.parquet(s"$tmp/t/v2")
-        s.read.option("mergeSchema", "true")
+        s.read.schema(Sources.parquet(s, s"$tmp/t/v2").schema)
           .parquet(s"$tmp/t/v1", s"$tmp/t/v2")
           .orderBy("event_id").localCheckpoint(true)
       } finally Fs.deleteRecursively(tmp)
@@ -2444,7 +2446,7 @@ object SparkEntry {
         // three files -> three micro-batches (any row split works: the
         // fold is associative and the ledger de-duplicates replays)
         e.repartition(3).write.parquet(src)
-        val schema = s.read.parquet(src).schema
+        val schema = Sources.parquet(s, src).schema
         val stream = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
         val q = stream.writeStream
@@ -2477,7 +2479,7 @@ object SparkEntry {
           .withColumn("price", Exprs.round2(col("price") * 1.05))
         Sinks.upsertParquetPartitioned(updates, path,
           Seq("o_orderkey"), "o_year")
-        s.read.parquet(path).localCheckpoint(true)
+        Sources.parquet(s, path).localCheckpoint(true)
           .groupBy("o_year")
           .agg(count(lit(1)).as("n_orders"),
             Exprs.moneySum(col("price")).as("total_price"))
@@ -2511,7 +2513,7 @@ object SparkEntry {
           .collect().map(_.getLong(0)).toSeq
         Sinks.eraseKeysPartitioned(s, path, "user_id", keys, "bucket",
           k => java.lang.Math.floorMod(k, 16L))
-        s.read.parquet(path).localCheckpoint(true)
+        Sources.parquet(s, path).localCheckpoint(true)
           .groupBy(to_date(col("ts")).as("event_date"))
           .agg(count(lit(1)).as("n_events"),
             Exprs.moneySum(when(col("event_type") === "purchase",

@@ -1118,20 +1118,15 @@ object Dedup {
 
   private def readSigIndexOpt(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Option[DataFrame] = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(indexPath)
-    if (!Files.isDirectory(root)) return None
-    import scala.jdk.CollectionConverters._
-    val ls = Files.list(root)
-    val visible =
-      try ls.iterator().asScala.toList.filter { p =>
+    val root = java.nio.file.Paths.get(indexPath)
+    val visible = java.nio.file.Files.isDirectory(root) &&
+      graft.Fs.list(root).exists { p =>
         val n = p.getFileName.toString
         !n.startsWith(".") && !n.startsWith("_")
       }
-      finally ls.close()
-    if (visible.isEmpty) None
-    else Some(spark.read.option("recursiveFileLookup", "true")
-      .parquet(indexPath))
+    if (visible)
+      Some(graft.ingest.Sources.parquet(spark, indexPath, recursive = true))
+    else None
   }
 
   /** MinHash + LSH banding near-dup candidates, verified with exact Jaccard.

@@ -1,6 +1,17 @@
 package graft.ingest
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+
+import scala.util.control.NonFatal
+
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,13 +23,109 @@ import org.apache.spark.sql.types._
   * is the property that matters at 100 TB (never materialize-then-filter).
   */
 object Sources {
-  /** One parquet file per table (TESTDATA.md). NTZ-encoded timestamp
-    * columns (`l_shipdate`, `o_orderdate`, …) read as plain TIMESTAMP
-    * under the timestamp pins [[graft.GraftSession.builder]] sets; the
-    * read writes no conf. [[normalizeTimestamps]] is the input-safety cast
-    * for sessions built elsewhere, without the pins. */
+  /** One parquet file per table (TESTDATA.md), read through [[parquet]]:
+    * its schema comes from the file's memoized footer, so opening a table
+    * launches no Spark job. NTZ-encoded timestamp columns (`l_shipdate`,
+    * `o_orderdate`, …) read as plain TIMESTAMP under the timestamp pins
+    * [[graft.GraftSession.builder]] sets; the read writes no conf.
+    * [[normalizeTimestamps]] is the input-safety cast for sessions built
+    * elsewhere, without the pins. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeTimestamps(spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalizeTimestamps(parquet(spark, s"$sfDir/$name.parquet"))
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the one
+    * parquet read in the engine that takes its schema from the data.
+    *
+    * Spark infers a parquet schema (with `mergeSchema` off) by running a
+    * one-task job that reads ONE footer, the one [[schemaFile]] finds.
+    * Here the driver reads that footer itself, memoized per path
+    * ([[footerOf]]), and converts it with Spark's own
+    * `readSchemaFromFooter` under `spark`'s conf on every call, so pinned,
+    * unpinned and [[graft.GraftSession.derive]]d sessions each get exactly
+    * the schema Spark would infer, timestamp encodings included. The scan
+    * then carries that schema and launches no job; partition columns are
+    * still discovered from the `k=v` dirs. A path with no data file, or a
+    * footer that cannot be read, goes to `spark.read.parquet` unchanged,
+    * so Spark raises its own error. `recursive` is Spark's
+    * `recursiveFileLookup` (no partition discovery). */
+  def parquet(spark: SparkSession, path: String,
+      recursive: Boolean = false): DataFrame = {
+    val read =
+      if (recursive) spark.read.option("recursiveFileLookup", "true")
+      else spark.read
+    footerOf(spark, path) match {
+      case Some(footer) =>
+        read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+          .parquet(path)
+      case None => read.parquet(path)
+    }
+  }
+
+  /** The file whose footer Spark's schema inference reads for `root` with
+    * `mergeSchema` off (`ParquetUtils.inferSchema`): of the files Spark's
+    * listing keeps, in path order, the first `_common_metadata`, else the
+    * first `_metadata`, else the first data file. The listing descends
+    * into every dir it keeps (`k=v` partition dirs too) and drops
+    * `.`-names and `_`-names without a `=` (`_SUCCESS`, the MV's
+    * `_applied_batches`, staging dirs), as `HadoopFSUtils` does. */
+  private def schemaFile(root: Path): Option[Path] = {
+    def kept(p: Path) = {
+      val n = p.getFileName.toString
+      n.startsWith("_common_metadata") || n.startsWith("_metadata") ||
+        !(n.startsWith(".") || n.endsWith("._COPYING_") ||
+          (n.startsWith("_") && !n.contains("=")))
+    }
+    def files(p: Path): List[Path] =
+      if (Files.isDirectory(p)) graft.Fs.list(p).filter(kept).flatMap(files)
+      else if (Files.isRegularFile(p)) List(p)
+      else Nil
+    val listed =
+      (if (Files.isDirectory(root) || kept(root)) files(root) else Nil)
+        .sortBy(_.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => listed.find(_.getFileName.toString == n))
+      .headOption.orElse(listed.find(p =>
+        !summaries.contains(p.getFileName.toString)))
+  }
+
+  /** Footer memo behind [[parquet]]: absolute read path → (its
+    * [[schemaFile]], that file's (size, mtime, file key), its footer
+    * without row-group metadata). One entry per path: a different schema
+    * file or a changed identity replaces it, and each miss drops the
+    * entries of paths that no longer exist (deleted temp tables). */
+  private val footers = new java.util.concurrent.ConcurrentHashMap[String,
+    (Path, (Long, FileTime, AnyRef), ParquetMetadata)]
+
+  /** The read paths [[footers]] holds an entry for. */
+  private[graft] def memoizedPaths: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    footers.keySet.asScala.toSet
+  }
+
+  /** `path`'s schema footer, read on the driver at most once per file
+    * identity; None when `path` has no data file or the read fails. */
+  private def footerOf(spark: SparkSession, path: String): Option[Footer] =
+    try {
+      val root = Paths.get(path).toAbsolutePath.normalize
+      schemaFile(root).map { file =>
+        val a = Files.readAttributes(file, classOf[BasicFileAttributes])
+        val stamp = (a.size, a.lastModifiedTime, a.fileKey)
+        val hadoopPath = new org.apache.hadoop.fs.Path(file.toUri)
+        val meta = Option(footers.get(root.toString)).collect {
+          case (`file`, `stamp`, m) => m
+        }.getOrElse {
+          val m = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromPath(hadoopPath,
+              spark.sessionState.newHadoopConf()),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          footers.keySet.removeIf(k => !Files.exists(Paths.get(k)))
+          footers.put(root.toString, (file, stamp, m))
+          m
+        }
+        new Footer(hadoopPath, meta)
+      }
+    } catch { case NonFatal(_) => None }
 
   /** Casts any TIMESTAMP_NTZ column to TIMESTAMP (value-identical under the
     * UTC session timezone): what an unpinned session reads µs/isAdjustedToUTC=0
@@ -139,9 +246,9 @@ object Sources {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
       .foreach(t => table(spark, sfDir, t).createOrReplaceTempView(t))
-    events(spark, sfDir).createOrReplaceTempView("events")
-    events(spark, sfDir)
-      .createOrReplaceTempView("view_kafka_ecommerce_stream")
+    val ev = events(spark, sfDir)
+    ev.createOrReplaceTempView("events")
+    ev.createOrReplaceTempView("view_kafka_ecommerce_stream")
   }
 
   /** Parses the JSON envelope (`kafka_value: string`) back into typed

@@ -1737,7 +1737,7 @@ object EventQueries {
         .withColumn("block",
           shiftright(mortonCol(col("x"), col("y")), ZOrderBlockShift))
       coords.write.partitionBy("block").parquet(s"$tmp/t")
-      val table = spark.read.parquet(s"$tmp/t")
+      val table = graft.ingest.Sources.parquet(spark, s"$tmp/t")
         .withColumn("block", col("block").cast(LongType))
       val layout = table.groupBy("block")
         .agg(min(col("x")).as("x_min"), max(col("x")).as("x_max"))

@@ -124,7 +124,7 @@ object MaterializedView {
     * `Exprs.moneySum` does (round-then-double on the exact decimal), so the
     * output is bit-identical to the batch recompute. */
   def dailyRevenue(spark: SparkSession, mvPath: String): DataFrame =
-    spark.read.parquet(mvPath)
+    graft.ingest.Sources.parquet(spark, mvPath)
       .select(col("event_date"),
         round(col("partial"), 2).cast(DoubleType).as("total_revenue"))
       .orderBy("event_date")

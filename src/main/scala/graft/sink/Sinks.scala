@@ -524,7 +524,7 @@ object Sinks {
         else Files.move(backup, p, StandardCopyOption.ATOMIC_MOVE)
       graft.Fs.deleteRecursively(suffixed(p, TmpSuffix))
       if (Files.isDirectory(p))
-        listDir(p).map(_.getFileName.toString
+        graft.Fs.list(p).map(_.getFileName.toString
             .stripSuffix(BackupSuffix).stripSuffix(TmpSuffix))
           .filter(_.contains("=")).distinct.foreach(n => walk(p.resolve(n)))
     }
@@ -573,12 +573,6 @@ object Sinks {
   private def suffixed(p: java.nio.file.Path, suffix: String) =
     p.resolveSibling(p.getFileName.toString + suffix)
 
-  private def listDir(p: java.nio.file.Path): List[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val ls = java.nio.file.Files.list(p)
-    try ls.iterator().asScala.toList finally ls.close()
-  }
-
   /** Partition-scoped upsert (CDC-style MERGE INTO without a table format)
     * into a target partitioned by `partitionCol` (the
     * [[writeDatePartitioned]] layout): in each partition that carries an
@@ -613,13 +607,14 @@ object Sinks {
           .map(_.get(0)).toIndexedSeq
         if (affected.isEmpty) Nil
         else {
-          writeTmp(updates.sparkSession.read.parquet(path)
+          writeTmp(graft.ingest.Sources.parquet(updates.sparkSession, path)
             .filter(col(partitionCol).isin(affected: _*))
             .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
             .unionByName(updates))
           // swap exactly the partition dirs the merged write produced;
           // Spark formatted the k=v names, so they match the target's
-          listDir(java.nio.file.Paths.get(tmp)).map(_.getFileName.toString)
+          graft.Fs.list(java.nio.file.Paths.get(tmp))
+            .map(_.getFileName.toString)
             .filter(_.startsWith(partitionCol + "="))
         }
       }
@@ -654,7 +649,7 @@ object Sinks {
       require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)),
         s"erasure target missing: $path")
       val affected = keys.map(partitionOf).distinct.sorted
-      spark.read.parquet(path)
+      graft.ingest.Sources.parquet(spark, path)
         .filter(col(partitionCol).isin(affected.map(_.asInstanceOf[Any]): _*))
         .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
         .write.mode(SaveMode.Overwrite)
@@ -687,19 +682,19 @@ object Sinks {
       import java.nio.file.{Files, Path, Paths}
       val root = Paths.get(path)
       def leaves(p: Path): List[Path] = {
-        val kv = listDir(p).filter(c =>
+        val kv = graft.Fs.list(p).filter(c =>
           Files.isDirectory(c) && c.getFileName.toString.contains("="))
         if (kv.isEmpty) List(p) else kv.flatMap(leaves)
       }
       leaves(root).flatMap { d =>
         val files =
-          listDir(d).filter(_.getFileName.toString.endsWith(".parquet"))
+          graft.Fs.list(d).filter(_.getFileName.toString.endsWith(".parquet"))
         val want = math.max(1L,
           (files.map(Files.size(_)).sum + targetBytes - 1) / targetBytes).toInt
         if (files.length <= want) None
         else {
           val leaf = root.relativize(d).toString
-          spark.read.parquet(d.toString).repartition(want)
+          graft.ingest.Sources.parquet(spark, d.toString).repartition(want)
             .write.mode(SaveMode.Overwrite)
             .parquet(Paths.get(tmp).resolve(leaf).toString)
           Some(leaf)

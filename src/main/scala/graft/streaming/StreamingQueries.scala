@@ -95,7 +95,7 @@ object StreamingQueries {
       Map("spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString))
     val srcDir = Files.createTempDirectory(s"graft-src-$name")
     Files.createSymbolicLink(srcDir.resolve(s"$table.parquet"), path)
-    val raw = session.read.parquet(path.toString)
+    val raw = graft.ingest.Sources.parquet(session, path.toString)
     val stream = session.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val ck = Files.createTempDirectory(s"graft-ck-$name").toString

@@ -79,6 +79,71 @@ class SessionConfSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  /** Each `read`/`readStream` call chain in `src` (comments removed) that
+    * ends in `.parquet(`, as the names of the calls between the two. A
+    * chain is followed across lines; a reader held in a val and called
+    * later is seen only if the val is named `read`. */
+  private def parquetReads(code: String): Seq[Seq[String]] = {
+    val src = code.replaceAll("""(?s)/\*.*?\*/""", "")
+      .replaceAll("""(?m)^\s*//.*$""", "")
+    def skipWs(i: Int) = src.indexWhere(!_.isWhitespace, i) match {
+      case -1 => src.length
+      case j => j
+    }
+    // index past the parenthesised argument list that opens at `i`
+    def skipArgs(i: Int): Int = {
+      var (depth, j, quoted) = (0, i, false)
+      while ({
+        src(j) match {
+          case '"' => quoted = !quoted
+          case '(' if !quoted => depth += 1
+          case ')' if !quoted => depth -= 1
+          case _ =>
+        }
+        j += 1
+        depth > 0 && j < src.length
+      }) ()
+      j
+    }
+    """\bread(Stream)?\b""".r.findAllMatchIn(src).flatMap { m =>
+      val calls = Seq.newBuilder[String]
+      var (i, open, parquet) = (m.end, true, false)
+      while (open) {
+        val dot = skipWs(i)
+        if (dot < src.length && src(dot) == '.') {
+          val start = skipWs(dot + 1)
+          val end = src.indexWhere(!_.isLetterOrDigit, start)
+          val name = src.substring(start, end)
+          val args = skipWs(end)
+          val call = args < src.length && src(args) == '('
+          if (call && name == "parquet") { parquet = true; open = false }
+          else {
+            calls += name
+            i = if (call) skipArgs(args) else end
+          }
+        } else open = false
+      }
+      if (parquet) Some(calls.result()) else None
+    }.toSeq
+  }
+
+  test("no src/main parquet read infers its schema outside Sources.parquet") {
+    val reads = mainSources().map(p =>
+      p -> parquetReads(new String(Files.readAllBytes(p), "UTF-8")))
+    val inferring = reads.flatMap { case (p, chains) =>
+      chains.filterNot(_.contains("schema"))
+        .map(c => s"$p: ${("read" +: c :+ "parquet(").mkString(".")}")
+    }
+    // the one inferring chain: Sources.parquet's fallback for a path with
+    // no footer to read, which Spark then rejects with its own error
+    assert(inferring.size == 1 &&
+      inferring.head.contains("graft/ingest/Sources.scala"),
+      "parquet reads that infer their schema:\n" + inferring.mkString("\n"))
+    // the scan sees the schema-carrying reads too (ArtifactStore, the
+    // REPORTING read-back, the stream sources, Sources.parquet itself)
+    assert(reads.map(_._2.size).sum >= 8, reads.filter(_._2.nonEmpty))
+  }
+
   test("the rewrite's tmp/backup suffix pair is spelled only in Sinks.scala") {
     // a string literal naming a sibling dir suffix such as ".x-tmp"
     val suffix = """"\.[A-Za-z]+-(tmp|old)"""".r
