@@ -830,8 +830,7 @@ object Dedup {
           col("old"))
         .localCheckpoint(true)
       changed = next.filter(col("label") =!= col("old")).count()
-      org.apache.spark.sql.graft.ColumnBridge
-        .releaseLocalCheckpoint(labelsCk)
+      Graph.releaseLocalCheckpoint(labelsCk)
       labelsCk = next
       labels = next.select("id", "label")
       iter += 1
@@ -891,8 +890,7 @@ object Dedup {
       val next = smallStar(largeStar(edges)).localCheckpoint(true)
       val nextSig = signature(next)
       converged = nextSig == sig
-      org.apache.spark.sql.graft.ColumnBridge
-        .releaseLocalCheckpoint(edges)
+      Graph.releaseLocalCheckpoint(edges)
       edges = next
       sig = nextSig
       iter += 1
@@ -1036,15 +1034,9 @@ object Dedup {
     val root = Paths.get(indexPath)
     // sweep stale stage dirs (a crash between write and rename): invisible
     // to reads, but disk residue — single-writer contract makes this safe
-    if (Files.isDirectory(root)) {
-      import scala.jdk.CollectionConverters._
-      val ls = Files.list(root)
-      val stale =
-        try ls.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith(".stage-"))
-        finally ls.close()
-      stale.foreach(graft.Fs.deleteRecursively)
-    }
+    if (Files.isDirectory(root))
+      graft.Fs.list(root).filter(_.getFileName.toString.startsWith(".stage-"))
+        .foreach(graft.Fs.deleteRecursively)
     val hasIndex = readSigIndexOpt(spark, indexPath).isDefined
     def index() = readSigIndex(spark, indexPath)
     // idempotent under at-least-once delivery: a doc_id already in the

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.GraftSession
 
@@ -43,6 +42,25 @@ object Graph {
     GraftSession.rebind(GraftSession.rebind(df, noAqe).localCheckpoint(),
       df.sparkSession)
   }
+
+  /** Releases the storage blocks of a dataset that IS a bare local
+    * checkpoint (analyzed plan = exactly one LogicalRDD). Iterative
+    * operators re-checkpoint per round; the superseded round's blocks
+    * otherwise occupy the storage-protected region of unified memory
+    * until a GC lets ContextCleaner collect them — which a huge heap may
+    * never trigger — squeezing later stages' execution memory (measured
+    * 4× on a 50M-row aggregate in r14). Safe by construction:
+    * no-op on any frame that is not a bare checkpoint root (a round-0
+    * seed projection, a shared pinned edge list consumed via joins keeps
+    * its own LogicalRDD — callers only pass the frame they themselves
+    * superseded). */
+  private[graft] def releaseLocalCheckpoint(
+      ds: org.apache.spark.sql.Dataset[_]): Unit =
+    ds.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Fixed-point scale of the PageRank loop: ranks live as longs in
     * units of 1e-12 (total mass ≈ 1e12). Headroom: the per-round multiply
@@ -174,7 +192,7 @@ object Graph {
       // checkpoint is EAGER, so prev is no longer referenced); round 0's
       // plain projection no-ops. Without this the rounds' blocks sit in
       // the storage-protected memory region until a GC nobody triggers.
-      ColumnBridge.releaseLocalCheckpoint(prev)
+      releaseLocalCheckpoint(prev)
     }
     ranks.select(col("node"), col("r").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("node"))
@@ -219,7 +237,7 @@ object Graph {
       dist = dist.union(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
         .localCheckpoint()
-      ColumnBridge.releaseLocalCheckpoint(prev)
+      releaseLocalCheckpoint(prev)
     }
     dist.filter(col("dist").isNotNull).orderBy(col("dist"), col("node"))
   }
@@ -252,7 +270,7 @@ object Graph {
         .join(keep.select(col("node").as("a")).hint("shuffle_hash"), "a")
         .join(keep.select(col("node").as("b")).hint("shuffle_hash"), "b")
         .select("a", "b").localCheckpoint()
-      ColumnBridge.releaseLocalCheckpoint(prev)
+      releaseLocalCheckpoint(prev)
     }
     degrees(e).orderBy(col("deg").desc, col("node"))
   }
@@ -381,7 +399,7 @@ object Graph {
       val araw = e.join(h.hint("shuffle_hash"), "src")
         .groupBy("dst").agg(sum(col("h")).as("araw"))
         .localCheckpoint()
-      if (arawPrev != null) ColumnBridge.releaseLocalCheckpoint(arawPrev)
+      if (arawPrev != null) releaseLocalCheckpoint(arawPrev)
       arawPrev = araw
       val at = araw.agg(sum(col("araw")).as("t"))
       a = araw.crossJoin(broadcast(at))
@@ -389,7 +407,7 @@ object Graph {
       val hraw = e.join(a.hint("shuffle_hash"), "dst")
         .groupBy("src").agg(sum(col("a")).as("hraw"))
         .localCheckpoint()
-      if (hrawPrev != null) ColumnBridge.releaseLocalCheckpoint(hrawPrev)
+      if (hrawPrev != null) releaseLocalCheckpoint(hrawPrev)
       hrawPrev = hraw
       val ht = hraw.agg(sum(col("hraw")).as("t"))
       h = hraw.crossJoin(broadcast(ht))

@@ -718,8 +718,7 @@ object Similarity {
     val dim = centroids.headOption.map(_.length).getOrElse(0)
     val rowFloor =
       if (planBytes * 4 <= broadcastCapBytes)
-        org.apache.spark.sql.graft.ColumnBridge
-          .parquetScanRowCount(embeddings)
+        graft.ingest.Sources.parquetScanRowCount(embeddings)
           .map(rows => BigInt(rows) * (4L * dim + 64L))
       else None
     val estBytes = planBytes.max(rowFloor.getOrElse(BigInt(0))) * 4

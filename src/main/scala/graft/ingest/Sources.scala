@@ -2,7 +2,9 @@ package graft.ingest
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -10,6 +12,8 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -38,8 +42,8 @@ object Sources {
     *
     * Spark infers a parquet schema (with `mergeSchema` off) by running a
     * one-task job that reads ONE footer, the one [[schemaFile]] finds.
-    * Here the driver reads that footer itself, memoized per path
-    * ([[footerOf]]), and converts it with Spark's own
+    * Here the driver reads that footer itself, memoized per file identity
+    * ([[footersOf]]), and converts it with Spark's own
     * `readSchemaFromFooter` under `spark`'s conf on every call, so pinned,
     * unpinned and [[graft.GraftSession.derive]]d sessions each get exactly
     * the schema Spark would infer, timestamp encodings included. The scan
@@ -62,14 +66,12 @@ object Sources {
     }
   }
 
-  /** The file whose footer Spark's schema inference reads for `root` with
-    * `mergeSchema` off (`ParquetUtils.inferSchema`): of the files Spark's
-    * listing keeps, in path order, the first `_common_metadata`, else the
-    * first `_metadata`, else the first data file. The listing descends
-    * into every dir it keeps (`k=v` partition dirs too) and drops
+  /** The files Spark's listing keeps for `root`, in path order: it
+    * descends into every dir it keeps (`k=v` partition dirs too) and drops
     * `.`-names and `_`-names without a `=` (`_SUCCESS`, the MV's
-    * `_applied_batches`, staging dirs), as `HadoopFSUtils` does. */
-  private def schemaFile(root: Path): Option[Path] = {
+    * `_applied_batches`, staging dirs), as `HadoopFSUtils` does, but keeps
+    * the `_common_metadata` and `_metadata` summaries. */
+  private def listing(root: Path): List[Path] = {
     def kept(p: Path) = {
       val n = p.getFileName.toString
       n.startsWith("_common_metadata") || n.startsWith("_metadata") ||
@@ -80,27 +82,81 @@ object Sources {
       if (Files.isDirectory(p)) graft.Fs.list(p).filter(kept).flatMap(files)
       else if (Files.isRegularFile(p)) List(p)
       else Nil
-    val listed =
-      (if (Files.isDirectory(root) || kept(root)) files(root) else Nil)
-        .sortBy(_.toString)
+    (if (Files.isDirectory(root) || kept(root)) files(root) else Nil)
+      .sortBy(_.toString)
+  }
+
+  /** The file whose footer Spark's schema inference reads for `root` with
+    * `mergeSchema` off (`ParquetUtils.inferSchema`): of the [[listing]],
+    * the first `_common_metadata`, else the first `_metadata`, else the
+    * first data file. */
+  private def schemaFile(root: Path): Option[Path] = {
+    val listed = listing(root)
     val summaries = Seq("_common_metadata", "_metadata")
     summaries.flatMap(n => listed.find(_.getFileName.toString == n))
       .headOption.orElse(listed.find(p =>
         !summaries.contains(p.getFileName.toString)))
   }
 
-  /** Footer memo behind [[parquet]]: absolute read path → (its
-    * [[schemaFile]], that file's (size, mtime, file key), its footer
-    * without row-group metadata). One entry per path: a different schema
-    * file or a changed identity replaces it, and each miss drops the
-    * entries of paths that no longer exist (deleted temp tables). */
-  private val footers = new java.util.concurrent.ConcurrentHashMap[String,
-    (Path, (Long, FileTime, AnyRef), ParquetMetadata)]
+  /** A memoized footer: the file's (size, mtime, file key) when it was
+    * read, its metadata without the row groups, and its row count. */
+  private final case class Memo(stamp: (Long, FileTime, AnyRef),
+      meta: ParquetMetadata, rows: Long)
 
-  /** The read paths [[footers]] holds an entry for. */
-  private[graft] def memoizedPaths: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    footers.keySet.asScala.toSet
+  /** The driver's one parquet footer memo, absolute file path → [[Memo]].
+    * It serves three callers: the schema read ([[parquet]]), the RAW row
+    * width sample ([[observedRowWidth]]) and the broadcast row floor
+    * ([[parquetScanRowCount]]). */
+  private val footers = new ConcurrentHashMap[String, Memo]
+
+  /** The files each caller's latest call used: (caller, the roots it
+    * read) → files. [[footers]] keeps only what these hold: one schema
+    * file per read path, one sample per table, the files of one scanned
+    * relation. */
+  private val holders = new ConcurrentHashMap[(String, Seq[Path]), Seq[String]]
+
+  private val reads = new java.util.concurrent.atomic.AtomicLong
+
+  /** The roots (read paths, tables, relation roots) the memo holds
+    * footers for. */
+  private[graft] def memoizedPaths: Set[String] =
+    holders.keySet.asScala.flatMap(_._2.map(_.toString)).toSet
+
+  /** Footers read from disk so far. */
+  private[graft] def footerReads: Long = reads.get
+
+  /** The footers of `files`, each read from disk at most once per file
+    * identity, recorded as what `caller` reading `roots` holds now. After
+    * a miss, or when the held files change, the holders whose roots are
+    * gone (deleted temp tables) are dropped, then every footer no holder
+    * holds. */
+  private def footersOf(spark: SparkSession, caller: String,
+      roots: Seq[Path], files: Seq[Path]): Seq[Memo] = {
+    lazy val conf = spark.sessionState.newHadoopConf()
+    var missed = false
+    val memos = files.map { f =>
+      val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+      val stamp = (a.size, a.lastModifiedTime, a.fileKey)
+      Option(footers.get(f.toString)).filter(_.stamp == stamp).getOrElse {
+        missed = true
+        reads.incrementAndGet()
+        val m = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf),
+          ParquetMetadataConverter.NO_FILTER)
+        val memo = Memo(stamp, new ParquetMetadata(m.getFileMetaData,
+          java.util.Collections.emptyList()),
+          m.getBlocks.asScala.map(_.getRowCount).sum)
+        footers.put(f.toString, memo)
+        memo
+      }
+    }
+    val held = files.map(_.toString)
+    if (holders.put((caller, roots), held) != held || missed) {
+      holders.keySet.removeIf(!_._2.forall(Files.exists(_)))
+      val live = holders.values.asScala.flatten.toSet
+      footers.keySet.removeIf(!live(_))
+    }
+    memos
   }
 
   /** `path`'s schema footer, read on the driver at most once per file
@@ -109,23 +165,63 @@ object Sources {
     try {
       val root = Paths.get(path).toAbsolutePath.normalize
       schemaFile(root).map { file =>
-        val a = Files.readAttributes(file, classOf[BasicFileAttributes])
-        val stamp = (a.size, a.lastModifiedTime, a.fileKey)
-        val hadoopPath = new org.apache.hadoop.fs.Path(file.toUri)
-        val meta = Option(footers.get(root.toString)).collect {
-          case (`file`, `stamp`, m) => m
-        }.getOrElse {
-          val m = ParquetFooterReader.readFooter(
-            HadoopInputFile.fromPath(hadoopPath,
-              spark.sessionState.newHadoopConf()),
-            ParquetMetadataConverter.SKIP_ROW_GROUPS)
-          footers.keySet.removeIf(k => !Files.exists(Paths.get(k)))
-          footers.put(root.toString, (file, stamp, m))
-          m
-        }
-        new Footer(hadoopPath, meta)
+        new Footer(new org.apache.hadoop.fs.Path(file.toUri),
+          footersOf(spark, "schema", Seq(root), Seq(file)).head.meta)
       }
     } catch { case NonFatal(_) => None }
+
+  /** OBSERVED on-disk parquet row width of the table at `path`: (bytes,
+    * rows) summed over the first `sampleFiles` non-empty `.parquet` files
+    * of its [[listing]], rows from their memoized footers. Driver-side
+    * metadata reads only, no job, and the sample bounds the footer IO
+    * however many files the table accumulates; a table that grows by a
+    * batch re-reads only the footers that entered or changed in its
+    * sample. None when the path has no non-empty parquet file yet, or on
+    * any footer-read failure (callers fall back to "no cap"). */
+  private[graft] def observedRowWidth(spark: SparkSession, path: String,
+      sampleFiles: Int): Option[(Long, Long)] =
+    try {
+      val root = Paths.get(path).toAbsolutePath.normalize
+      val sample = listing(root).iterator.filter(f =>
+        f.getFileName.toString.endsWith(".parquet") && Files.size(f) > 0)
+        .take(sampleFiles).toList
+      val memos = footersOf(spark, "width", Seq(root), sample)
+      val rows = memos.map(_.rows).sum
+      if (rows <= 0) None else Some((memos.map(_.stamp._1).sum, rows))
+    } catch { case NonFatal(_) => None }
+
+  /** Exact row count of a frame whose optimized plan is ONE parquet scan,
+    * from the scanned files' memoized footers: no Spark job, no column IO.
+    * This is the row-based broadcast-size floor: the optimizer's
+    * `sizeInBytes` is COMPRESSED on-disk bytes, so a low-entropy corpus
+    * (zeroed/repeated vectors) can pass a broadcast cap whose real
+    * constraint is the raw collected/resident footprint, and `rows ×
+    * rowWidth` does not compress. None when the plan is not a bare parquet
+    * scan (derived frames keep Catalyst's propagated estimate, whose
+    * errors skew large — the safe side), when the relation lists more than
+    * `maxFiles` non-empty files (footer probing is driver-side IO; callers
+    * only need the floor when the plan estimate is already under a
+    * broadcast cap, where file counts are small), or when a file is not on
+    * the local file system. Filters and projections above the scan only
+    * reduce rows, so the count stays an upper bound — floor-safe. */
+  def parquetScanRowCount(df: DataFrame, maxFiles: Int = 4096): Option[Long] =
+    df.queryExecution.optimizedPlan.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => lr.relation match {
+        case rel: HadoopFsRelation
+            if rel.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val files = rel.location.listFiles(Nil, Nil)
+            .flatMap(_.files).filter(_.getLen > 0)
+          if (files.isEmpty || files.size > maxFiles) None
+          else try {
+            def local(p: org.apache.hadoop.fs.Path) = Paths.get(p.toUri)
+            Some(footersOf(df.sparkSession, "rows",
+              rel.location.rootPaths.map(local),
+              files.map(f => local(f.getPath))).map(_.rows).sum)
+          } catch { case NonFatal(_) => None }
+        case _ => None
+      }
+      case _ => None
+    }
 
   /** Casts any TIMESTAMP_NTZ column to TIMESTAMP (value-identical under the
     * UTC session timezone): what an unpinned session reads µs/isAdjustedToUTC=0

@@ -69,15 +69,11 @@ object ArtifactStore {
   private def contentFingerprint(datasetDir: String): String = {
     val dir = Paths.get(datasetDir)
     if (!Files.isDirectory(dir)) return "nodata"
-    import scala.jdk.CollectionConverters._
-    val ls = Files.list(dir)
-    val inventory =
-      try ls.iterator().asScala.toList
-        .map(p => (p.getFileName.toString, p))
-        .sortBy(_._1)
-        .map { case (n, p) =>
-          s"$n:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}" }
-      finally ls.close()
+    val inventory = graft.Fs.list(dir)
+      .map(p => (p.getFileName.toString, p))
+      .sortBy(_._1)
+      .map { case (n, p) =>
+        s"$n:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}" }
     graft.Fs.md5Hex8(inventory.mkString("|"))
   }
 
@@ -91,18 +87,15 @@ object ArtifactStore {
     val prefix = name.substring(0, name.lastIndexOf('-') + 1)
     val parent = target.getParent
     if (Files.isDirectory(parent)) {
-      import scala.jdk.CollectionConverters._
-      val ls = Files.list(parent)
-      val stale =
-        try ls.iterator().asScala.toList.filter { p =>
-          val n = p.getFileName.toString
-          // only a sibling whose suffix IS a fingerprint: an artifact
-          // named "<name>-v2" must not match "<name>"'s prefix
-          n.startsWith(prefix) && n != name && {
-            val rest = n.substring(prefix.length)
-            rest == "nodata" || rest.matches("[0-9a-f]{8}")
-          }
-        } finally ls.close()
+      val stale = graft.Fs.list(parent).filter { p =>
+        val n = p.getFileName.toString
+        // only a sibling whose suffix IS a fingerprint: an artifact
+        // named "<name>-v2" must not match "<name>"'s prefix
+        n.startsWith(prefix) && n != name && {
+          val rest = n.substring(prefix.length)
+          rest == "nodata" || rest.matches("[0-9a-f]{8}")
+        }
+      }
       stale.sortBy(p => -Files.getLastModifiedTime(p).toMillis).drop(keep)
         .foreach(graft.Fs.deleteQuietly)
     }

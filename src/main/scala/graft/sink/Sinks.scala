@@ -1,7 +1,5 @@
 package graft.sink
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -332,18 +330,13 @@ object Sinks {
     * null-date partition (NULL `ts`) is skipped: the incremental refresh
     * publishes real days only. */
   private def committedDays(rawPath: String, batchKey: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     val part = batchPartition(batchKey)
-    val days = java.nio.file.Files.list(java.nio.file.Paths.get(rawPath))
-    try days.iterator().asScala
-      .filter { d =>
-        val n = d.getFileName.toString
-        n.startsWith("event_date=") &&
-          n != s"event_date=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}" &&
-          java.nio.file.Files.isDirectory(d.resolve(part))
-      }
-      .map(_.toString).toSeq.sorted
-    finally days.close()
+    graft.Fs.list(java.nio.file.Paths.get(rawPath)).filter { d =>
+      val n = d.getFileName.toString
+      n.startsWith("event_date=") &&
+        n != s"event_date=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}" &&
+        java.nio.file.Files.isDirectory(d.resolve(part))
+    }.map(_.toString).sorted
   }
 
   /** Directory name of a batch's `ingest_batch` partition, escaped the
@@ -460,24 +453,16 @@ object Sinks {
     * (an overwrite only replaces partitions it produces rows for). */
   private def dropBatchPartitions(root: String, batchKey: String): Unit = {
     val rootPath = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.isDirectory(rootPath)) {
-      val days = java.nio.file.Files.list(rootPath)
-      try {
-        val it = days.iterator()
-        while (it.hasNext) {
-          val day = it.next()
-          val part = day.resolve(batchPartition(batchKey))
-          if (java.nio.file.Files.isDirectory(part)) {
-            graft.Fs.deleteRecursively(part)
-            // prune a day dir this was the last batch of — an empty
-            // partition dir would poison later schema inference
-            val left = java.nio.file.Files.list(day)
-            val empty = try !left.iterator().hasNext finally left.close()
-            if (empty) java.nio.file.Files.delete(day)
-          }
+    if (java.nio.file.Files.isDirectory(rootPath))
+      graft.Fs.list(rootPath).foreach { day =>
+        val part = day.resolve(batchPartition(batchKey))
+        if (java.nio.file.Files.isDirectory(part)) {
+          graft.Fs.deleteRecursively(part)
+          // prune a day dir this was the last batch of — an empty
+          // partition dir would poison later schema inference
+          if (graft.Fs.list(day).isEmpty) java.nio.file.Files.delete(day)
         }
-      } finally days.close()
-    }
+      }
   }
 
   /** [[streamToWarehouse]] with the [[warehouseBatchChecked]] batch-level
@@ -702,64 +687,14 @@ object Sinks {
       }
     }
 
-  /** OBSERVED on-disk parquet row width of `path`: (bytes, rows) summed
-    * over up to `sampleFiles` part files (deterministic path order), rows
-    * from the parquet FOOTERS — driver-side metadata reads only, no job
-    * (the `ColumnBridge.parquetScanRowCount` discipline, but sampled so
-    * the probe stays bounded however many files the table accumulates).
-    * Each sampled footer's row count is remembered by (path, size, mtime,
-    * file key), so a table that grows by a batch re-reads only the footers
-    * that entered or changed in its sample; at most one sample's entries
-    * are kept per table path. None when the path has no non-empty parquet
-    * files yet, or on any footer-read failure (callers fall back to "no
-    * cap"). Feeds [[graft.Tuning.maxRecordsPerFile]] so output file sizing
-    * derives from METERED input bytes, not a local constant (r17 verdict
-    * #7). */
+  /** The RAW table's observed on-disk row width, (bytes, rows) over a
+    * bounded footer sample: [[graft.ingest.Sources.observedRowWidth]],
+    * which owns the driver's parquet footer memo. Feeds
+    * [[graft.Tuning.maxRecordsPerFile]] so output file sizing derives
+    * from METERED input bytes, not a local constant (r17 verdict #7). */
   def observedRowWidth(spark: org.apache.spark.sql.SparkSession,
-      path: String, sampleFiles: Int = 64): Option[(Long, Long)] = {
-    import java.nio.file.Files
-    import java.nio.file.attribute.BasicFileAttributes
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get(path)
-    if (!Files.isDirectory(dir)) return None
-    val files = {
-      val walk = Files.walk(dir)
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .map(p => p -> Files.readAttributes(p, classOf[BasicFileAttributes]))
-        .filter { case (_, a) => a.isRegularFile && a.size > 0 }
-        .toSeq.sortBy(_._1.toString).take(sampleFiles)
-      finally walk.close()
-    }
-    if (files.isEmpty) None
-    else try {
-      val table = dir.toAbsolutePath.normalize.toString
-      val known = footerRows.getOrDefault(table, Map.empty)
-      lazy val conf = spark.sessionState.newHadoopConf()
-      val sample = files.map { case (f, a) =>
-        val stamp = (a.size, a.lastModifiedTime, a.fileKey)
-        val rows = known.get(f.toString).collect {
-          case (s, n) if s == stamp => n
-        }.getOrElse {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally r.close()
-        }
-        f.toString -> (stamp, rows)
-      }
-      footerRows.put(table, sample.toMap)
-      val bytes = files.map(_._2.size).sum
-      val rows = sample.map(_._2._2).sum
-      if (rows <= 0) None else Some((bytes, rows))
-    } catch { case NonFatal(_) => None }
-  }
-
-  /** Footer row counts behind [[observedRowWidth]]: table path → sampled
-    * file path → ((size, mtime, file key), rows). */
-  private val footerRows = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, ((Long, java.nio.file.attribute.FileTime, AnyRef), Long)]]
+      path: String, sampleFiles: Int = 64): Option[(Long, Long)] =
+    graft.ingest.Sources.observedRowWidth(spark, path, sampleFiles)
 
   /** [[graft.Tuning.maxRecordsPerFile]] over [[observedRowWidth]] of an
     * existing parquet path: the per-write file-size cap the warehouse

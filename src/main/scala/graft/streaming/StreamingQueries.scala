@@ -186,11 +186,9 @@ object StreamingQueries {
             .withColumn("user_id", lit(-1L))
             .withColumn("event_type", lit("purchase")))
           .coalesce(1).write.mode("overwrite").parquet(s"$sentDir/out")
-        import scala.jdk.CollectionConverters._
-        val ls = Files.list(java.nio.file.Paths.get(s"$sentDir/out"))
-        try Files.readAllBytes(ls.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get)
-        finally ls.close()
+        val out = graft.Fs.list(java.nio.file.Paths.get(s"$sentDir/out"))
+        Files.readAllBytes(
+          out.find(_.getFileName.toString.endsWith(".parquet")).get)
       } finally graft.Fs.deleteQuietly(sentDir)
     })
     Files.write(srcDir.resolve("zz-sentinel.parquet"), bytes)

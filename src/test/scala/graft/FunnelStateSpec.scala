@@ -40,10 +40,10 @@ class FunnelStateSpec extends SparkSpec {
 
   test("batch transformWithState matches the fMGWS machine") {
     // batch TWS: TimeMode.None + the StateStoreCoordinator touch inside
-    // conversions(); RocksDB confs as in the checked query entry
-    Tuning.rocksDbStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val got = graft.streaming.FunnelStateTws.conversions(spark, rows.toDS())
-      .collect().sortBy(c => (c.user_id, c.purchaseAt.getTime)).toSeq
+    // conversions(); on RocksDB in its own session, as the query entry
+    val got = onRocksDb(s => graft.streaming.FunnelStateTws
+      .conversions(s, s.createDataset(rows))
+      .collect().sortBy(c => (c.user_id, c.purchaseAt.getTime)).toSeq)
     val want = FunnelState.conversions(spark, rows.toDS())
       .collect().sortBy(c => (c.user_id, c.purchaseAt.getTime)).toSeq
     assert(got == want && got.nonEmpty)

@@ -18,12 +18,14 @@ import graft.sink.{MaterializedView, Sinks}
 /** `Sources.parquet` is `spark.read.parquet` minus the schema-inference
   * job: the same schema (columns, order, types, partition columns) on
   * every layout the engine reads, under the caller's own conf, with no
-  * Spark job; and its footer memo never serves a stale schema. */
+  * Spark job; and its footer memo never serves a stale schema. The same
+  * memo serves `observedRowWidth` and `parquetScanRowCount`: exact
+  * answers, no footer read twice, no entry kept for a deleted root. */
 class ParquetReadSpec extends SparkSpec {
-  /** Jobs `read` launches while building its frame, and the frame. */
-  private def jobsOf(read: => DataFrame): (DataFrame, Long) = {
+  /** What `body` returns, and the jobs it launches. */
+  private def jobsOf[A](body: => A): (A, Long) = {
     val meter = Meter(spark)
-    try { val (df, u) = meter.run(read); (df, u.jobs) } finally meter.close()
+    try { val (a, u) = meter.run(body); (a, u.jobs) } finally meter.close()
   }
 
   /** Asserts parity with Spark's inferring read of `path` on `session`, and
@@ -147,5 +149,122 @@ class ParquetReadSpec extends SparkSpec {
       assert(got.getClass == want.getClass, s"$p: $got vs $want")
       assert(got.getMessage == want.getMessage)
     }
+  }
+
+  /** The parquet files under `dir`, in path order; none if it is missing. */
+  private def parquetFiles(dir: String): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Nil
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .toSeq.sortBy(_.toString)
+      finally walk.close()
+    }
+  }
+
+  test("parquetScanRowCount: count() of every sf0.001 table, zero jobs, " +
+    "and a second call reads no footer") {
+    val dir = java.nio.file.Paths.get(sf("sf0.001"))
+    val tables =
+      Fs.list(dir).map(_.toString).filter(_.endsWith(".parquet")).sorted
+    assert(tables.size == 10, tables.mkString(", "))
+    tables.foreach { t =>
+      val df = Sources.parquet(spark, t)
+      val (rows, jobs) = jobsOf(Sources.parquetScanRowCount(df))
+      assert(jobs == 0, s"$t: $jobs jobs")
+      assert(rows == Some(df.count()), t)
+      val reads = Sources.footerReads
+      assert(Sources.parquetScanRowCount(df) == rows, t)
+      assert(Sources.footerReads == reads, s"$t: the memoized call read footers")
+    }
+  }
+
+  test("parquetScanRowCount is None for two leaves, a non-parquet scan and " +
+    "more than maxFiles files") {
+    val dir = tempDir("graft-pq-rows")
+    val (t, json) = (dir.resolve("t").toString, dir.resolve("j").toString)
+    spark.range(10).repartition(2).write.parquet(t)
+    spark.range(3).write.json(json)
+    val df = Sources.parquet(spark, t)
+    assert(parquetFiles(t).size == 2)
+    assert(Sources.parquetScanRowCount(df) == Some(10L))
+    assert(Sources.parquetScanRowCount(df.filter(col("id") > 4)) == Some(10L))
+    assert(Sources.parquetScanRowCount(df, maxFiles = 1).isEmpty)
+    assert(Sources.parquetScanRowCount(df.union(df)).isEmpty)
+    assert(Sources.parquetScanRowCount(
+      spark.read.schema("id long").json(json)).isEmpty)
+  }
+
+  test("a deleted read path's, table's or relation root's memo entry goes " +
+    "at the next miss of any caller") {
+    val dir = tempDir("graft-pq-gone")
+    def write(name: String): String = {
+      val p = dir.resolve(name).toString
+      spark.range(4).coalesce(1).write.parquet(p)
+      p
+    }
+    val callers: Seq[String => Unit] = Seq(
+      p => Sources.parquet(spark, p),
+      p => assert(Sinks.observedRowWidth(spark, p).exists(_._2 == 4L)),
+      p => assert(Sources.parquetScanRowCount(
+        spark.read.schema("id long").parquet(p)).contains(4L)))
+    def memo = Sources.memoizedPaths.filter(_.startsWith(s"$dir/"))
+    val held = callers.indices.map { i =>
+      val p = write(s"root$i")
+      callers(i)(p)
+      p
+    }
+    assert(memo == held.toSet)
+    // caller i's root is deleted, then the next caller misses elsewhere
+    var live = held.toSet
+    callers.indices.foreach { i =>
+      Fs.deleteRecursively(held(i))
+      val next = write(s"next$i")
+      callers((i + 1) % callers.size)(next)
+      live = live - held(i) + next
+      assert(memo == live, s"after deleting ${held(i)}")
+    }
+  }
+
+  test("Sources.parquet and observedRowWidth alternating on one RAW dir: " +
+    "cold answers, and no unchanged footer is read again") {
+    import scala.jdk.CollectionConverters._
+    val root = tempDir("graft-pq-alt")
+    val (raw, rep) = (root.resolve("raw").toString, root.resolve("rep").toString)
+    val ev = Sources.events(spark, sf("sf0.001"))
+    val sampleFiles = 64
+    // the width sample, computed from scratch with its own footer reads
+    def sample() = parquetFiles(raw).filter(Files.size(_) > 0).take(sampleFiles)
+    def coldWidth(): Option[(Long, Long)] = {
+      val conf = spark.sessionState.newHadoopConf()
+      val rows = sample().map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally r.close()
+      }.sum
+      Some((sample().map(Files.size(_)).sum, rows))
+    }
+    (0L until 4L).foreach { id =>
+      val before = parquetFiles(raw).toSet
+      val reads = Sources.footerReads
+      // the batch's own file cap samples RAW before its write
+      Sinks.warehouseBatch(ev.filter(pmod(col("event_id"), lit(4)) === id),
+        id, raw, rep, EventQueries.dailyRevenue)
+      for (pass <- 1 to 2) {
+        assert(Sources.parquet(spark, raw).schema ==
+          spark.read.parquet(raw).schema, s"batch $id, pass $pass")
+        assert(Sinks.observedRowWidth(spark, raw) == coldWidth(),
+          s"batch $id, pass $pass")
+      }
+      // footers read: the new files the schema read or the sample uses
+      val used = (parquetFiles(raw).head +: sample()).toSet
+      val fresh = parquetFiles(raw).filterNot(before)
+      assert(Sources.footerReads - reads == fresh.count(used), s"batch $id")
+    }
+    assert(parquetFiles(raw).size > sampleFiles)
   }
 }

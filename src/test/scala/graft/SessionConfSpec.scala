@@ -144,6 +144,20 @@ class SessionConfSpec extends SparkSpec {
     assert(reads.map(_._2.size).sum >= 8, reads.filter(_._2.nonEmpty))
   }
 
+  test("parquet footers are read only in Sources.scala") {
+    val reader =
+      """\b(ParquetFileReader|ParquetFooterReader|HadoopInputFile)\b""".r
+    val (sources, others) =
+      mainSources().partition(_.endsWith("graft/ingest/Sources.scala"))
+    assert(sources.size == 1, "scan of src/main found no ingest/Sources.scala")
+    assert(sources.flatMap(hits(reader)).nonEmpty,
+      "Sources.scala reads no footer: the scan pattern is stale")
+    val offenders = others.flatMap(hits(reader))
+    assert(offenders.isEmpty,
+      "parquet footer readers outside Sources.scala:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("the rewrite's tmp/backup suffix pair is spelled only in Sinks.scala") {
     // a string literal naming a sibling dir suffix such as ".x-tmp"
     val suffix = """"\.[A-Za-z]+-(tmp|old)"""".r

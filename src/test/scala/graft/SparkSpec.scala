@@ -27,6 +27,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try super.afterAll()
     finally tempDirs.forEach(dir => Fs.deleteQuietly(dir))
 
+  /** Runs `body` on a per-query session carrying the RocksDB state store
+    * ([[Tuning.rocksDbStateStore]]), as the TWS query entry does, and
+    * asserts that the shared session still has none of its keys set. */
+  def onRocksDb[A](body: SparkSession => A): A = {
+    val result = body(GraftSession.derive(spark, Tuning.rocksDbStateStore))
+    val leaked = spark.conf.getAll.keySet.intersect(
+      Tuning.rocksDbStateStore.keySet)
+    assert(leaked.isEmpty, s"the shared session carries $leaked")
+    result
+  }
+
   /** Runs `body` with the artifact store rooted in a fresh temp dir,
     * deleted afterwards with everything stored under it. */
   def withArtifactRoot[A](body: => A): A = {

@@ -64,15 +64,13 @@ class StreamingSpec extends SparkSpec {
   test("stateful stream on the RocksDB state store matches batch results") {
     // Tuning.rocksDbStateStore is the 100 TB state configuration; prove the
     // provider actually loads and produces identical results on a stateful
-    // (dedup + agg) query — the conf is read at query start, so setting it
-    // on the shared session scoped to this test is enough: the harness's
-    // per-query session starts from the caller's CURRENT conf
-    Tuning.rocksDbStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    // (dedup + agg) query — the harness's per-query session starts from
+    // the caller's CURRENT conf, here a session carrying the store
+    onRocksDb { s =>
       val dir = sf("sf0.001")
       var stateMetrics = Set.empty[String]
       val streamed = StreamingQueries.countDailyActiveUsers(
-        StreamingQueries.runStream(spark, dir, "t_rocks", "append",
+        StreamingQueries.runStream(s, dir, "t_rocks", "append",
           onDrained = q => {
             import scala.jdk.CollectionConverters._
             stateMetrics = q.lastProgress.stateOperators
@@ -87,16 +85,15 @@ class StreamingSpec extends SparkSpec {
         ingest.Sources.events(spark, dir))
         .as[(java.sql.Date, String, Long)].collect().toSeq
       assert(streamed == batch)
-    } finally Tuning.rocksDbStateStore.keys.foreach(spark.conf.unset)
+    }
   }
 
   test("transformWithState funnel matches the flatMapGroupsWithState machine") {
     // TWS runs only on the RocksDB state store
-    Tuning.rocksDbStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      implicit val sqlCtx = spark.sqlContext
+    onRocksDb { s =>
+      implicit val sqlCtx = s.sqlContext
       val mem = MemoryStream[graft.streaming.FunnelState.In]
-      val q = graft.streaming.FunnelStateTws.conversions(spark,
+      val q = graft.streaming.FunnelStateTws.conversions(s,
           mem.toDS().withWatermark("ts", "0 seconds"))
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName("t_tws")
@@ -109,7 +106,7 @@ class StreamingSpec extends SparkSpec {
           .as[graft.streaming.FunnelState.In].collect()
         mem.addData(typed.toIndexedSeq)
         q.processAllAvailable()
-        val streamed = spark.table("t_tws")
+        val streamed = s.table("t_tws")
           .as[graft.streaming.FunnelState.Conversion].collect()
           .sortBy(c => (c.user_id, micros(c.purchaseAt), micros(c.viewAt)))
         val batch = graft.streaming.FunnelState.conversions(spark,
@@ -118,19 +115,18 @@ class StreamingSpec extends SparkSpec {
           .sortBy(c => (c.user_id, micros(c.purchaseAt), micros(c.viewAt)))
         assert(streamed.length == batch.length && streamed.sameElements(batch))
       } finally q.stop()
-    } finally Tuning.rocksDbStateStore.keys.foreach(spark.conf.unset)
+    }
   }
 
   private def micros(ts: Timestamp): Long =
     ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
 
   test("transformWithState evicts idle funnel state via event-time timers") {
-    Tuning.rocksDbStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      implicit val sqlCtx = spark.sqlContext
+    onRocksDb { s =>
+      implicit val sqlCtx = s.sqlContext
       import graft.streaming.FunnelState.In
       val mem = MemoryStream[In]
-      val q = graft.streaming.FunnelStateTws.conversions(spark,
+      val q = graft.streaming.FunnelStateTws.conversions(s,
           mem.toDS().withWatermark("ts", "2 hours"), idleTimeout = "1h")
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName("t_tws_evict")
@@ -150,10 +146,10 @@ class StreamingSpec extends SparkSpec {
         // b5: click+purchase would convert IF the old view survived
         batch(In(6, ts("2024-01-01 13:02:00"), 1, "click", 0.0),
           In(7, ts("2024-01-01 13:03:00"), 1, "purchase", 42.0))
-        assert(spark.table("t_tws_evict").count() == 0,
+        assert(s.table("t_tws_evict").count() == 0,
           "idle state must be evicted before the late click/purchase")
       } finally q.stop()
-    } finally Tuning.rocksDbStateStore.keys.foreach(spark.conf.unset)
+    }
   }
 
   test("the append-finalized harness leaves no sentinel build dir behind") {
