@@ -15,7 +15,7 @@ object Tuning {
   /** `spark.sql.files.maxRecordsPerFile` for a parquet write targeting
     * ~`targetFileBytes` per output file, derived from the OBSERVED
     * on-disk row width of already-landed data (metered bytes ÷ parquet
-    * footer row count — see `Sinks.observedRowWidth`), never from a
+    * footer row count — see `Sources.observedRowWidth`), never from a
     * local constant (r17 verdict #7): at 100 TB a task can hold many
     * times the target per partition value, and without the cap the
     * warehouse's `(event_date, ingest_batch)` files grow with batch

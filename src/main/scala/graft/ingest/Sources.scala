@@ -122,8 +122,22 @@ object Sources {
   private[graft] def memoizedPaths: Set[String] =
     holders.keySet.asScala.flatMap(_._2.map(_.toString)).toSet
 
+  /** The files whose footers the memo holds. */
+  private[graft] def memoizedFiles: Set[String] = footers.keySet.asScala.toSet
+
   /** Footers read from disk so far. */
   private[graft] def footerReads: Long = reads.get
+
+  /** `file`'s footer read from disk: its metadata without the row groups,
+    * and its row count. */
+  private def readFooter(file: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): (ParquetMetadata, Long) = {
+    reads.incrementAndGet()
+    val m = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, conf),
+      ParquetMetadataConverter.NO_FILTER)
+    (new ParquetMetadata(m.getFileMetaData, java.util.Collections.emptyList()),
+      m.getBlocks.asScala.map(_.getRowCount).sum)
+  }
 
   /** The footers of `files`, each read from disk at most once per file
     * identity, recorded as what `caller` reading `roots` holds now. After
@@ -139,13 +153,9 @@ object Sources {
       val stamp = (a.size, a.lastModifiedTime, a.fileKey)
       Option(footers.get(f.toString)).filter(_.stamp == stamp).getOrElse {
         missed = true
-        reads.incrementAndGet()
-        val m = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toUri), conf),
-          ParquetMetadataConverter.NO_FILTER)
-        val memo = Memo(stamp, new ParquetMetadata(m.getFileMetaData,
-          java.util.Collections.emptyList()),
-          m.getBlocks.asScala.map(_.getRowCount).sum)
+        val (meta, rows) =
+          readFooter(new org.apache.hadoop.fs.Path(f.toUri), conf)
+        val memo = Memo(stamp, meta, rows)
         footers.put(f.toString, memo)
         memo
       }
@@ -179,7 +189,7 @@ object Sources {
     * sample. None when the path has no non-empty parquet file yet, or on
     * any footer-read failure (callers fall back to "no cap"). */
   private[graft] def observedRowWidth(spark: SparkSession, path: String,
-      sampleFiles: Int): Option[(Long, Long)] =
+      sampleFiles: Int = 64): Option[(Long, Long)] =
     try {
       val root = Paths.get(path).toAbsolutePath.normalize
       val sample = listing(root).iterator.filter(f =>
@@ -201,8 +211,10 @@ object Sources {
     * errors skew large — the safe side), when the relation lists more than
     * `maxFiles` non-empty files (footer probing is driver-side IO; callers
     * only need the floor when the plan estimate is already under a
-    * broadcast cap, where file counts are small), or when a file is not on
-    * the local file system. Filters and projections above the scan only
+    * broadcast cap, where file counts are small). Footers of local files
+    * come from the memo; a relation with any file on another file system
+    * (hdfs, s3a, …) reads its footers unmemoized, as it has no local file
+    * identity to stamp. Filters and projections above the scan only
     * reduce rows, so the count stays an upper bound — floor-safe. */
   def parquetScanRowCount(df: DataFrame, maxFiles: Int = 4096): Option[Long] =
     df.queryExecution.optimizedPlan.collectLeaves() match {
@@ -212,12 +224,17 @@ object Sources {
           val files = rel.location.listFiles(Nil, Nil)
             .flatMap(_.files).filter(_.getLen > 0)
           if (files.isEmpty || files.size > maxFiles) None
-          else try {
-            def local(p: org.apache.hadoop.fs.Path) = Paths.get(p.toUri)
-            Some(footersOf(df.sparkSession, "rows",
-              rel.location.rootPaths.map(local),
-              files.map(f => local(f.getPath))).map(_.rows).sum)
-          } catch { case NonFatal(_) => None }
+          else try Some(
+            if (files.forall(_.getPath.toUri.getScheme == "file")) {
+              def local(p: org.apache.hadoop.fs.Path) = Paths.get(p.toUri)
+              footersOf(df.sparkSession, "rows",
+                rel.location.rootPaths.map(local),
+                files.map(f => local(f.getPath))).map(_.rows).sum
+            } else {
+              val conf = df.sparkSession.sessionState.newHadoopConf()
+              files.map(f => readFooter(f.getPath, conf)._2).sum
+            })
+          catch { case NonFatal(_) => None }
         case _ => None
       }
       case _ => None

@@ -197,6 +197,40 @@ class ParquetReadSpec extends SparkSpec {
       spark.read.schema("id long").json(json)).isEmpty)
   }
 
+  test("the memo holds only the footers its callers' latest calls use") {
+    val dir = tempDir("graft-pq-held")
+    val (file, table) =
+      (dir.resolve("t").toString, dir.resolve("table").toString)
+    spark.range(2).coalesce(1).write.parquet(file)
+    Sources.parquet(spark, file)
+    def files = Sources.memoizedFiles.filter(_.startsWith(s"$dir/"))
+    (1L to 4L).foreach { n =>
+      // every overwrite writes new part-file names
+      spark.range(3 * n).write.mode("overwrite").parquet(table)
+      Sources.parquet(spark, table)
+      assert(Sources.observedRowWidth(spark, table).exists(_._2 == 3 * n))
+      assert(Sources.parquetScanRowCount(Sources.parquet(spark, table))
+        .contains(3 * n))
+      assert(files == (parquetFiles(file) ++ parquetFiles(table))
+        .map(_.toString).toSet, s"overwrite $n")
+    }
+  }
+
+  test("parquetScanRowCount reads a relation off the local file system " +
+    "without the memo") {
+    val dir = tempDir("graft-pq-viewfs")
+    val t = dir.resolve("t").toString
+    spark.range(10).repartition(2).write.parquet(t)
+    val view = GraftSession.derive(spark,
+      Map("fs.viewfs.mounttable.graft.link./t" -> s"file://$t"))
+    val df = view.read.parquet("viewfs://graft/t")
+    assert(df.inputFiles.forall(_.startsWith("viewfs:")), df.inputFiles.toSeq)
+    val reads = Sources.footerReads
+    assert(Sources.parquetScanRowCount(df).contains(10L))
+    assert(Sources.footerReads - reads == parquetFiles(t).size)
+    assert(!Sources.memoizedFiles.exists(_.startsWith(s"$dir/")))
+  }
+
   test("a deleted read path's, table's or relation root's memo entry goes " +
     "at the next miss of any caller") {
     val dir = tempDir("graft-pq-gone")
@@ -207,16 +241,20 @@ class ParquetReadSpec extends SparkSpec {
     }
     val callers: Seq[String => Unit] = Seq(
       p => Sources.parquet(spark, p),
-      p => assert(Sinks.observedRowWidth(spark, p).exists(_._2 == 4L)),
+      p => assert(Sources.observedRowWidth(spark, p).exists(_._2 == 4L)),
       p => assert(Sources.parquetScanRowCount(
         spark.read.schema("id long").parquet(p)).contains(4L)))
     def memo = Sources.memoizedPaths.filter(_.startsWith(s"$dir/"))
+    def files = Sources.memoizedFiles.filter(_.startsWith(s"$dir/"))
+    def filesOf(roots: Set[String]) =
+      roots.flatMap(r => parquetFiles(r).map(_.toString))
     val held = callers.indices.map { i =>
       val p = write(s"root$i")
       callers(i)(p)
       p
     }
     assert(memo == held.toSet)
+    assert(files == filesOf(held.toSet))
     // caller i's root is deleted, then the next caller misses elsewhere
     var live = held.toSet
     callers.indices.foreach { i =>
@@ -225,6 +263,7 @@ class ParquetReadSpec extends SparkSpec {
       callers((i + 1) % callers.size)(next)
       live = live - held(i) + next
       assert(memo == live, s"after deleting ${held(i)}")
+      assert(files == filesOf(live), s"after deleting ${held(i)}")
     }
   }
 
@@ -257,13 +296,16 @@ class ParquetReadSpec extends SparkSpec {
       for (pass <- 1 to 2) {
         assert(Sources.parquet(spark, raw).schema ==
           spark.read.parquet(raw).schema, s"batch $id, pass $pass")
-        assert(Sinks.observedRowWidth(spark, raw) == coldWidth(),
+        assert(Sources.observedRowWidth(spark, raw) == coldWidth(),
           s"batch $id, pass $pass")
       }
       // footers read: the new files the schema read or the sample uses
       val used = (parquetFiles(raw).head +: sample()).toSet
       val fresh = parquetFiles(raw).filterNot(before)
       assert(Sources.footerReads - reads == fresh.count(used), s"batch $id")
+      // and the memo holds just those: the files RAW's holders use now
+      assert(Sources.memoizedFiles.filter(_.startsWith(s"$raw/")) ==
+        used.map(_.toString), s"batch $id")
     }
     assert(parquetFiles(raw).size > sampleFiles)
   }
